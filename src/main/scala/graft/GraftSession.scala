@@ -35,11 +35,8 @@ object GraftSession {
       .config("spark.graft.eagerAgg.enabled", "auto")
       .config("spark.ui.enabled", "false")
 
-  /** Build + finish engine registration (planner rules can't ride the
-    * extensions config — they're experimental-API registered). */
-  def create(threads: Int): SparkSession = {
-    val spark = builder(threads).getOrCreate()
-    plans.GraftPlanner.register(spark)
-    spark
-  }
+  /** Build the session; every engine rule, strategy and SQL function
+    * rides `spark.sql.extensions`, so sessions derived with
+    * `newSession()` carry them too. */
+  def create(threads: Int): SparkSession = builder(threads).getOrCreate()
 }

@@ -14,7 +14,6 @@ object ProfileMvStar {
     spark.sparkContext.setLogLevel("WARN")
     import graft.plans.{Mv, MvRewrite}
     import graft.sources.TxnTable
-    graft.plans.GraftPlanner.register(spark)
     @volatile var jobs = 0
     @volatile var trace = false
     val t00 = System.nanoTime()

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.TopKPerKeyNode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,12 +12,6 @@ object TopKBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = GraftSession.create(32)
     spark.sparkContext.setLogLevel("WARN")
-    // GraftSession pre-registers the planner — strip it so the "native"
-    // runs actually measure the WindowGroupLimit path
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RankLimitRewrite)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == graft.plans.TopKPerKeyStrategy)
 
     def q() = {
       val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), col("o_orderkey"))
@@ -29,16 +24,23 @@ object TopKBench {
       val t0 = System.nanoTime(); f
       println(f"[topk] $label%-10s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
     }
+    def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    // the "native" runs measure the window path: the rewrite's kill switch
+    // is on only while that query plans and runs
+    def native(): Unit = {
+      spark.conf.set("spark.graft.rankLimitRewrite.enabled", "false")
+      try {
+        val df = q()
+        require(!df.queryExecution.optimizedPlan.exists(_.isInstanceOf[TopKPerKeyNode]),
+          "native baseline planned TopKPerKey")
+        run(df)
+      } finally spark.conf.unset("spark.graft.rankLimitRewrite.enabled")
+    }
     // warm-up
-    q().write.format("noop").mode("overwrite").save()
+    native()
     (1 to 3).foreach { i =>
-      time(s"native-$i")(q().write.format("noop").mode("overwrite").save())
-      graft.plans.GraftPlanner.register(spark)
-      time(s"custom-$i")(q().write.format("noop").mode("overwrite").save())
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RankLimitRewrite)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ == graft.plans.TopKPerKeyStrategy)
+      time(s"native-$i")(native())
+      time(s"custom-$i")(run(q()))
     }
     spark.stop()
   }

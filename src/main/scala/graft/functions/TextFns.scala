@@ -75,11 +75,8 @@ object TextFns {
     * Dispatches to the native `WordShingles` expression (one fused
     * tokenize+window+dedup pass per row); [[shinglesHof]] is the
     * differential baseline. */
-  def shingles(c: Column, n: Int): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def shingles(c: Column, n: Int): Column =
     call_function("word_shingles", c, lit(n))
-  }
 
   /** HOF reference implementation of [[shingles]] — kept as the
     * differential-test baseline for the native expression. */
@@ -141,11 +138,8 @@ object TextFns {
     * of any exact text op (fingerprints, token counts, phrase search, PII
     * regexes): composed vs decomposed encodings of the same text otherwise
     * miss every exact match. */
-  def normalizeUnicode(c: Column, form: String = "NFC"): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def normalizeUnicode(c: Column, form: String = "NFC"): Column =
     call_function("normalize_unicode", c, lit(form))
-  }
 
   /** Subword token ids by greedy longest match against `vocab` (native
     * [[graft.plans.GreedyTokenize]] expression); -1 = unknown char.
@@ -153,8 +147,6 @@ object TextFns {
   def greedyTokenize(c: Column, vocab: Seq[String]): Column = {
     require(vocab.forall(!_.contains(",")),
       "vocab entries must not contain ',' — the function-registry transport joins on it")
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
     call_function("greedy_tokenize", c, lit(vocab.mkString(",")))
   }
 
@@ -212,11 +204,8 @@ object TextFns {
     * Dispatches to the native `RollingFpMin` expression (one reused
     * MessageDigest + raw-digest min per document; hex only the winner);
     * [[rollingFingerprintOfNormHof]] is the differential baseline. */
-  def rollingFingerprintOfNorm(norm: Column, k: Int = 16): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def rollingFingerprintOfNorm(norm: Column, k: Int = 16): Column =
     call_function("rolling_fp_min", norm, lit(k))
-  }
 
   /** HOF reference implementation of [[rollingFingerprintOfNorm]] — kept
     * as the differential-test baseline for the native expression. */

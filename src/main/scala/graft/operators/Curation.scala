@@ -75,7 +75,6 @@ object Curation {
       bloom.writeTo(bos)
       bos.toByteArray
     }
-    graft.plans.GraftExtensions.register(org.apache.spark.sql.SparkSession.active)
     val trainShingles = train
       .select(col(idCol), explode(TextFns.shingles(col(textCol), shingleSize)).as("sh"))
       .filter(call_function("graft_might_contain", lit(bloomBytes), xxhash64(col("sh"))))

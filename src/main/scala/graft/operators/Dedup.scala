@@ -110,13 +110,8 @@ object Dedup {
     * too short to shingle. Distinctness is taken on the 64-bit hashes; a
     * collision (birthday odds ~1e-7 at 10⁶ distinct shingles) only
     * perturbs candidate recall, never the exact verify. */
-  def shingleHashes(text: Column, n: Int): Column = {
-    graft.plans.GraftExtensions.register(org.apache.spark.sql.SparkSession.active)
+  def shingleHashes(text: Column, n: Int): Column =
     call_function("shingle_hashes", TextFns.tokens(text), lit(n))
-  }
-
-  private def registered(df: DataFrame): Unit =
-    graft.plans.GraftExtensions.register(df.sparkSession)
 
   /** MinHash signatures via the native [[graft.plans.MinHashSigs]]
     * expression: one pass over the row's shingle-hash array computes all
@@ -128,7 +123,6 @@ object Dedup {
     * unshingleable docs dropped. */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int, numHashes: Int): DataFrame = {
-    registered(df)
     // too-short docs are dropped by a cheap token-count predicate BEFORE
     // the projection: filtering on sig IS NOT NULL instead would be pushed
     // below the project by substitution and evaluate the signature twice
@@ -257,7 +251,6 @@ object Dedup {
     * matching the old aggregation form's semantics; values are identical
     * to it too (same xxhash64 token features, same majority-bit rule). */
   def simHash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    registered(df)
     df.filter(col(textCol).isNotNull) // null text has no features
       .select(col(idCol),
         call_function("simhash64",
@@ -291,7 +284,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 5, tau: Double = 0.5, bandBits: Int = 8,
       hammingMax: Int = 16): DataFrame = {
-    registered(df)
     // The simhash table feeds a self-join plus the Hamming prefilter —
     // persisted so the scan+sketch runs once per consumer. The cached
     // table is id + one long per doc — at 100 TB this is the (tiny)

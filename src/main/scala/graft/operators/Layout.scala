@@ -257,11 +257,8 @@ object Layout {
     * jumps diagonally at power-of-two boundaries), so a file's code
     * range covers a tighter box and per-dimension min/max prune more,
     * increasingly so past 2 dimensions. */
-  def hilbertCode(cols: Seq[Column], bits: Int = 16): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def hilbertCode(cols: Seq[Column], bits: Int = 16): Column =
     call_function("hilbert_code", lit(bits) +: cols: _*)
-  }
 
   /** [[zorderWriteN]] with the Hilbert curve as the clustering key. */
   def hilbertWriteN(df: DataFrame, cols: Seq[String], path: String,
@@ -287,7 +284,6 @@ object Layout {
   def buildBloomIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       column: String, expectedPerFile: Long = 1L << 20,
                       fpp: Double = 0.01): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     // numBits = -n·ln(p)/ln2² — the standard sizing formula
     val numBits = math.max(64L,
       (-expectedPerFile * math.log(fpp) / (math.log(2) * math.log(2))).toLong)

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * At 100 TB both are embarrassingly parallel: `bernoulli` is a pure
   * scan-side filter (no shuffle at all); `stratifiedCap` shuffles once on
   * the stratum key — and because it is the rank-limit window idiom, it
-  * rides Spark's WindowGroupLimit partial pruning (or this engine's
-  * TopKPerKeyExec when registered) instead of sorting whole strata.
+  * plans as this engine's TopKPerKeyExec (Spark's WindowGroupLimit with
+  * the rewrite off) instead of sorting whole strata.
   */
 object Sampling {
 

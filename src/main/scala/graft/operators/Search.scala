@@ -115,9 +115,9 @@ object Search {
     * Scale shape: explode to (doc, term) and count — map-side combine
     * absorbs the per-doc repetition before the one (doc, term) shuffle;
     * document frequencies reduce the same frame by term. The final
-    * per-doc top-k is the rank-limit window idiom, so it rides Spark's
-    * WindowGroupLimit partial pruning (or this engine's TopKPerKeyExec
-    * when registered) instead of sorting whole documents' vocabularies.
+    * per-doc top-k is the rank-limit window idiom, so it plans as this
+    * engine's TopKPerKeyExec (Spark's WindowGroupLimit with the rewrite
+    * off) instead of sorting whole documents' vocabularies.
     * Scoring is rational idf (N+1)/(df+1) times tf, quantized to a long —
     * division-only IEEE arithmetic, so the DuckDB oracle reproduces it
     * bit-exactly (same trade as [[bm25TopK]], documented there). */

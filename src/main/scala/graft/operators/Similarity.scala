@@ -31,11 +31,8 @@ object Similarity {
     * Dispatches to the native `QuantizedDot` expression (fused primitive
     * loop, whole-stage codegen) — the HOF form below allocates a zipped
     * intermediate array per pair. */
-  def quantizedDot(a: Column, b: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def quantizedDot(a: Column, b: Column): Column =
     call_function("quantized_dot", a, b)
-  }
 
   /** HOF reference implementation of `quantizedDot` — kept as the
     * differential-test baseline for the native expression. */
@@ -84,8 +81,6 @@ object Similarity {
     * everywhere). Null vectors (none in the corpus contract) drop out of
     * the explode rather than hashing to bucket 0. */
   def lshBuckets(df: DataFrame, planes: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
     val bits = planes.head.size
     val flat: Seq[Seq[Float]] = planes.flatten.map(_.map(_.toFloat))
     val buckets = call_function("lsh_bucket_array",

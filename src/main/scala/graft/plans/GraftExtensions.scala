@@ -1,19 +1,29 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Engine extension point (SparkSessionExtensions): registers the native
-  * expressions as SQL functions. Enable with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * imperatively via `GraftExtensions.register(spark)` on an existing
-  * session (used by the query layer so the driver's own sessions work).
-  */
+/** Engine extension point (SparkSessionExtensions), the engine's only
+  * registration path: the native expressions as SQL functions, the
+  * graft optimizer rules and the [[TopKPerKeyStrategy]] planner strategy.
+  * Enabled with `.config("spark.sql.extensions",
+  * "graft.plans.GraftExtensions")` (see [[graft.GraftSession.builder]]);
+  * sessions derived with `newSession()` share the extensions, so they
+  * plan with the same rules and guards as their parent.
+  *
+  * The rules go in the pre-CBO batch, which runs once, after Spark's
+  * operator-optimization batches, in the order listed: the rank-limit
+  * rewrite and the two plan-time guards first, then the MV, constraint,
+  * eager-aggregation and file-pruning rewrites. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
+    Seq(RankLimitRewrite, CrossJoinGuard, GlobalWindowGuard, MvRewrite,
+      ConstraintRules, EagerAggregation, AutoFilePrune)
+      .foreach(rule => ext.injectPreCBORule(_ => rule))
+    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -151,14 +161,4 @@ object GraftExtensions {
       (children: Seq[Expression]) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
           children(0), children(1), children(2)).toAggregateExpression()))
-
-  /** Idempotent imperative registration for sessions built without the
-    * extensions config. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
 }

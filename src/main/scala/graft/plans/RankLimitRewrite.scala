@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -72,45 +71,5 @@ object TopKPerKeyStrategy extends SparkStrategy {
         TopKPerKeyExec(keys, order, k, partial = true, maxKeys,
           planLater(child))) :: Nil
     case _ => Nil
-  }
-}
-
-/** Dynamic (per-session) registration — `spark.experimental` accepts rules
-  * and strategies after session construction, so driver-owned sessions
-  * work without the spark.sql.extensions config. */
-object GraftPlanner {
-  /** Registration is a read-modify-write on the session's
-    * extraOptimizations Seq; two threads registering concurrently (every
-    * MV/topk query calls this, and test suites run in parallel on one
-    * shared session) could interleave and DROP a rule the other just
-    * appended — a query planned in that window silently loses its
-    * rewrite. One global lock serializes writers; readers (the planner)
-    * always see a consistent immutable Seq. */
-  private val registerLock = new Object
-  def register(spark: SparkSession): Unit = registerLock.synchronized {
-    if (!spark.experimental.extraOptimizations.contains(RankLimitRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RankLimitRewrite
-    if (!spark.experimental.extraOptimizations.contains(CrossJoinGuard))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CrossJoinGuard
-    if (!spark.experimental.extraOptimizations.contains(GlobalWindowGuard))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GlobalWindowGuard
-    if (!spark.experimental.extraOptimizations.contains(MvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite
-    if (!spark.experimental.extraOptimizations.contains(ConstraintRules))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ConstraintRules
-    if (!spark.experimental.extraOptimizations.contains(EagerAggregation))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ EagerAggregation
-    if (!spark.experimental.extraOptimizations.contains(AutoFilePrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AutoFilePrune
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
   }
 }

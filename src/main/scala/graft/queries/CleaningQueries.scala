@@ -355,7 +355,6 @@ object CleaningQueries {
         |       event_type AS item
         |FROM s WHERE event_type <> 'signup'
         |ORDER BY user_id, group_id, pos""".stripMargin) { (s, d) =>
-      graft.plans.GraftExtensions.register(s)
       Tables.events(s, d)
         .groupBy("user_id")
         .agg(array_sort(collect_list(struct(col("event_id"), col("event_type"))))

@@ -4,7 +4,6 @@ import java.io.File
 
 import graft.{DerivedCache, QueryDef, Tables}
 import graft.QueryDef.sql
-import graft.plans.GraftPlanner
 import graft.sources.{TableConstraints, TxnTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -169,7 +168,6 @@ object OptimizerQueries {
         |       CAST(1 AS BIGINT) AS elim
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ord), col("l_orderkey") === col("o_orderkey"))
@@ -190,7 +188,6 @@ object OptimizerQueries {
         |  (SELECT * FROM orders WHERE o_orderkey % 2 = 0) d
         |  ON l_orderkey = o_orderkey
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ordPartial),
@@ -208,7 +205,6 @@ object OptimizerQueries {
       """SELECT DISTINCT o_orderkey, o_orderpriority,
         |       CAST(1 AS BIGINT) AS elim
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.ord)
         .dropDuplicates("o_orderkey")
@@ -227,7 +223,6 @@ object OptimizerQueries {
         |       MIN(o_orderpriority) AS mp,
         |       CAST(1 AS BIGINT) AS elim
         |FROM orders GROUP BY o_orderkey ORDER BY k""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.ord)
         .groupBy(col("o_orderkey").as("k"))
@@ -246,7 +241,6 @@ object OptimizerQueries {
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_orderkey = lineitem.l_orderkey)
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ord),
@@ -265,7 +259,6 @@ object OptimizerQueries {
         |FROM lineitem
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_orderkey = lineitem.l_orderkey)""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ord),
@@ -295,7 +288,6 @@ object OptimizerQueries {
         |JOIN part ON l_partkey = p_partkey
         |JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY 1, 2 ORDER BY rf, pri""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val wide = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ord), col("l_orderkey") === col("o_orderkey"))
@@ -327,7 +319,6 @@ object OptimizerQueries {
         |GROUP BY o_orderpriority ORDER BY pri""".stripMargin) { (s, d) =>
       val fx = fixture(s, d)
       val ss = s.newSession()
-      GraftPlanner.register(ss)
       ss.conf.set("spark.graft.eagerAgg.enabled", "true")
       val q = TxnTable.read(ss, fx.fact)
         .join(TxnTable.read(ss, fx.ord), col("l_orderkey") === col("o_orderkey"))
@@ -377,7 +368,6 @@ object OptimizerQueries {
         |           (SELECT COUNT(*) FROM lineitem), TRUE
         |) ORDER BY action, target""".stripMargin) { (s, d) =>
       import graft.plans.WorkloadAdvisor
-      GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val root = graft.Scratch.dir(s"/root/repo/target/tmp/cnsadv_$sfKey")
       val factNc = s"$root/cns_fact"
@@ -439,7 +429,6 @@ object OptimizerQueries {
         |         2 * (SELECT COUNT(*) FROM orders), TRUE
         |) ORDER BY target""".stripMargin) { (s, d) =>
       import graft.plans.WorkloadAdvisor
-      GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val root = graft.Scratch.dir(s"/root/repo/target/tmp/ckadv_$sfKey")
       val fact = s"$root/ckadv_fact"
@@ -480,7 +469,6 @@ object OptimizerQueries {
         |       (SELECT COUNT(DISTINCT l_orderkey) FROM lineitem) * 2
         |         <= (SELECT COUNT(*) FROM lineitem) AS recommend""".stripMargin) { (s, d) =>
       import graft.plans.WorkloadAdvisor
-      GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val root = graft.Scratch.dir(s"/root/repo/target/tmp/egadv_$sfKey")
       val fact = s"$root/egq_fact"
@@ -511,7 +499,6 @@ object OptimizerQueries {
         |FROM lineitem
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_orderkey = lineitem.l_orderkey)""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .join(TxnTable.read(s, fx.ord),
@@ -528,7 +515,6 @@ object OptimizerQueries {
       """SELECT l_returnflag AS rf, COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem WHERE l_orderkey IS NOT NULL
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val fx = fixture(s, d)
       val q = TxnTable.read(s, fx.fact)
         .filter(col("l_orderkey").isNotNull)
@@ -549,7 +535,6 @@ object OptimizerQueries {
       """SELECT l_returnflag AS rf, COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem WHERE l_quantity > 0
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       val q = TxnTable.read(s, ck)
         .filter(col("l_quantity") > 0)
@@ -567,7 +552,6 @@ object OptimizerQueries {
     sql("q_opt_check_empty",
       """SELECT COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem WHERE NOT (l_quantity > 0)""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       val q = TxnTable.read(s, ck)
         .filter(!(col("l_quantity") > 0))
@@ -587,7 +571,6 @@ object OptimizerQueries {
       """SELECT l_returnflag AS rf, COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem WHERE l_quantity > -5
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       val q = TxnTable.read(s, ck)
         .filter(col("l_quantity") > -5)
@@ -606,7 +589,6 @@ object OptimizerQueries {
     sql("q_opt_check_disjoint",
       """SELECT COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem WHERE l_quantity < -1""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       val q = TxnTable.read(s, ck)
         .filter(col("l_quantity") < -1)
@@ -625,7 +607,6 @@ object OptimizerQueries {
       """SELECT COUNT(*) AS n, CAST(1 AS BIGINT) AS elim
         |FROM lineitem
         |WHERE l_returnflag IN ('A', 'N', 'R', 'X')""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       val q = TxnTable.read(s, ck)
         .filter(col("l_returnflag").isin("A", "N", "R", "X"))
@@ -649,7 +630,6 @@ object OptimizerQueries {
         |  (SELECT COUNT(*) FROM lineitem WHERE l_quantity IN (-3, -7)),
         |  CAST(1 AS BIGINT)
         |ORDER BY stage""".stripMargin) { (s, d) =>
-      GraftPlanner.register(s)
       val ck = checkFixture(s, d)
       def st(stage: String, c: org.apache.spark.sql.Column) = stamped(
         TxnTable.read(s, ck).filter(c).agg(count(lit(1)).as("n"))
@@ -711,12 +691,10 @@ object OptimizerQueries {
           } else -1L))
       }
       val sa = s.newSession()
-      GraftPlanner.register(sa)
       sa.conf.set("spark.graft.eagerAgg.enabled", "auto")
       sa.conf.set("spark.graft.eagerAgg.minCompression", "2")
       val a = stage(sa, "a_auto_fired", fires = true)
       val sb = s.newSession()
-      GraftPlanner.register(sb)
       sb.conf.set("spark.graft.eagerAgg.enabled", "auto")
       sb.conf.set("spark.graft.eagerAgg.minCompression", "1000000")
       val b = stage(sb, "b_bar_uncleared", fires = false)

@@ -133,7 +133,6 @@ object ScaleQueries {
         |           FROM orders)
         |SELECT CAST(o_custkey AS BIGINT) AS o_custkey, CAST(o_orderkey AS BIGINT) AS o_orderkey, o_totalprice
         |FROM r WHERE rn <= 3 ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin) { (s, d) =>
-      graft.plans.GraftPlanner.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey").orderBy(desc("o_totalprice"), col("o_orderkey"))
       Tables.orders(s, d)
@@ -435,7 +434,6 @@ object ScaleQueries {
         |ORDER BY stage, l_returnflag""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
       import graft.sources.TxnTable
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val table = graft.Scratch.dir(s"/root/repo/target/tmp/mvlc_table_$sfKey")
       val mvDir = graft.Scratch.dir(s"/root/repo/target/tmp/mvlc_view_$sfKey")
@@ -486,7 +484,6 @@ object ScaleQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val mvDir = new java.io.File(s"/root/repo/target/mv/li_ord_star_$sfKey")
       graft.DerivedCache.ensure(mvDir,
@@ -529,7 +526,6 @@ object ScaleQueries {
         |GROUP BY ROLLUP(c_mktsegment, o_orderpriority)
         |ORDER BY g1, g2, c_mktsegment, o_orderpriority""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val mvDir = new java.io.File(s"/root/repo/target/mv/ord_cust_roll_$sfKey")
       graft.DerivedCache.ensure(mvDir,
@@ -578,7 +574,6 @@ object ScaleQueries {
         |JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val mvDir = new java.io.File(s"/root/repo/target/mv/li_snow_$sfKey")
       graft.DerivedCache.ensure(mvDir,
@@ -627,7 +622,6 @@ object ScaleQueries {
         |FROM lineitem LEFT JOIN ord2 ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val dimDir = new java.io.File(s"/root/repo/target/mv/orders_even_$sfKey")
       val mvDir = new java.io.File(s"/root/repo/target/mv/li_ord_left_$sfKey")
@@ -828,7 +822,6 @@ object ScaleQueries {
         |ORDER BY stage, o_orderpriority""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvAdvisor, MvRewrite}
       import graft.sources.TxnTable
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val table = graft.Scratch.dir(s"/root/repo/target/tmp/mvadv_table_$sfKey")
       val mvDir = graft.Scratch.dir(s"/root/repo/target/tmp/mvadv_view_$sfKey")
@@ -1404,7 +1397,6 @@ object ScaleQueries {
         |FROM x JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val mvDir = new java.io.File(s"/root/repo/target/mv/li_by_order_$sfKey")
       graft.DerivedCache.ensure(mvDir,
@@ -1453,7 +1445,6 @@ object ScaleQueries {
         |ORDER BY stage, g""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
       import graft.sources.TxnTable
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val table = graft.Scratch.dir(
         s"/root/repo/target/tmp/cdcmv_table_$sfKey")
@@ -1516,7 +1507,6 @@ object ScaleQueries {
         |ORDER BY stage, g""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
       import graft.sources.TxnTable
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val table = graft.Scratch.dir(
         s"/root/repo/target/tmp/cdcmvr_table_$sfKey")
@@ -1587,7 +1577,6 @@ object ScaleQueries {
         |ORDER BY stage, c_mktsegment""".stripMargin) { (s, d) =>
       import graft.plans.{Mv, MvRewrite}
       import graft.sources.TxnTable
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val table = graft.Scratch.dir(
         s"/root/repo/target/tmp/starmv_fact_$sfKey")
@@ -1660,7 +1649,6 @@ object ScaleQueries {
       import graft.plans.{Mv, MvRewrite}
       import graft.sources.TxnCatalog
       import graft.sources.TxnCatalog.Write
-      graft.plans.GraftPlanner.register(s)
       val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
       val cat = graft.Scratch.dir(s"/root/repo/target/tmp/catmv_cat_$sfKey")
       val mvDir = graft.Scratch.dir(s"/root/repo/target/tmp/catmv_view_$sfKey")
@@ -2150,7 +2138,6 @@ object ScaleQueries {
       body: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import graft.plans.{Mv, MvRewrite}
-    graft.plans.GraftPlanner.register(s)
     val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
     val supDir = new java.io.File(s"/root/repo/target/mv/sup_odd_$sfKey")
     val ordDir = new java.io.File(s"/root/repo/target/mv/ord_even_$sfKey")
@@ -2206,7 +2193,6 @@ object ScaleQueries {
   private def withLineitemMv(s: org.apache.spark.sql.SparkSession, d: String)(
       q: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.plans.{Mv, MvRewrite}
-    graft.plans.GraftPlanner.register(s)
     val sfKey = d.replaceAll("[^A-Za-z0-9]", "_")
     // _v2 layout: the r9 summary added cnt_/min_/max_ measure columns
     val mvDir = new java.io.File(s"/root/repo/target/mv/lineitem_rf_ls_v2_$sfKey")

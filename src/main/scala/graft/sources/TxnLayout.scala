@@ -150,8 +150,6 @@ object TxnLayout {
                domain: Map[String, (Long, Long)] = Map.empty): Column = {
     val q = quant.map { case (c, mn, mx) => c -> ((mn, mx)) }.toMap
     val qb = qbounds.toMap
-    if (qb.nonEmpty)
-      graft.plans.GraftExtensions.register(SparkSession.active)
     def ordinal(c: String): Column = types.get(c) match {
       case Some(dt) => graft.operators.Layout.ordinalExpr(col(c), dt)
       case None => col(c).cast("long")

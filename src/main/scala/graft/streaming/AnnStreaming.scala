@@ -25,20 +25,13 @@ import graft.operators.Similarity
   */
 object AnnStreaming {
 
-  private def streamSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    s
-  }
-
   /** Enrich the `vec_id < 10` query slice of `sfDir`'s embeddings with
     * their top-5 neighbours from the full-corpus IVFPQ index, as a
     * 2-micro-batch stream (maxFilesPerTrigger=1 over two staged files).
     * Output contract == `Similarity.ivfPqTopKIndexed` == `ivfPqTopK`:
     * (q_id, rank, n_id, sim). */
   def enrichTopK(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    val ss = streamSession(spark)
+    val ss = EventsStreaming.streamSession(spark)
     val sfKey = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val idxDir = s"${sys.props("user.dir")}/target/ann_index_${sfKey}_c16i2m8k16"
     graft.DerivedCache.ensure(new java.io.File(idxDir),
@@ -96,7 +89,7 @@ object AnnStreaming {
     * fixture batches after the two slices. */
   def enrichTopKFresh(spark: SparkSession, sfDir: String, k: Int = 5,
                       extraBatches: Seq[DataFrame] = Nil): DataFrame = {
-    val ss = streamSession(spark)
+    val ss = EventsStreaming.streamSession(spark)
     val sfKey = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"${sys.props("user.dir")}/target/tmp/stream/annfresh_$sfKey"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))

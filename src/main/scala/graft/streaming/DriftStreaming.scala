@@ -21,18 +21,11 @@ import graft.operators.Profiling
   * property the DuckDB oracle needs. */
 object DriftStreaming {
 
-  private def streamSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    s
-  }
-
   /** Drift of each of two parity-staged document micro-batches against
     * the full corpus (lang × n_chars, 64 reference bins). Output:
     * (batch_key, lang, n_ref, n_cur, tv_q, top_bucket, top_delta_q). */
   def batchDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = streamSession(spark)
+    val ss = EventsStreaming.streamSession(spark)
     val sfKey = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val base = s"${sys.props("user.dir")}/target/tmp/stream/drift_$sfKey"
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")

@@ -1,12 +1,11 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** ScalaCheck-driven invariants (raw scalacheck — the scalatest bridge
   * artifact isn't in the offline cache, so Prop/Test are driven directly
   * with a fixed seed; failures print the shrunk counterexample). */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSpec {
 
   private val params = SCTest.Parameters.default
     .withMinSuccessfulTests(100)
@@ -60,13 +59,6 @@ class PropertySpec extends AnyFunSuite {
   // ── AsOfJoin vs an in-memory reference implementation ──────────────────
 
   test("property: AsOfJoin matches the per-row reference, ties included") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     // few keys + few timestamps → collisions (same-key same-ts right rows)
@@ -107,11 +99,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: MMR selection matches an independent greedy reference, ties included") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     // tiny component alphabet → frequent exact dot-product ties,
@@ -165,11 +152,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: BPE encode matches a pure replace-chain reference; counts are consistent") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     val SEP = "\u001f"
@@ -211,12 +193,6 @@ class PropertySpec extends AnyFunSuite {
   // ── sessionize vs an in-memory fold ───────────────────────────────────
 
   test("property: sessionize matches a per-key sequential fold, gap boundary exact") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     // coarse second grid + gap near the grid step → boundary hits are common
@@ -261,12 +237,6 @@ class PropertySpec extends AnyFunSuite {
   // ── SCD2 apply invariants under random change batches ─────────────────
 
   test("property: scd2Apply keeps exactly one open version per key and loses no history") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     import org.apache.spark.sql.functions._
 
@@ -317,12 +287,6 @@ class PropertySpec extends AnyFunSuite {
   // ── min-max scaling bounds ────────────────────────────────────────────
 
   test("property: minMaxScale lands in [0,100] with the extremes exact") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
 
     val gen = Gen.nonEmptyListOf(for {

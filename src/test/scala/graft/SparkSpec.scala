@@ -17,6 +17,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // INT64 micros, matching GraftSession: INT96 carries no footer
     // statistics, which would leave timestamp columns unindexable
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // the engine's rules, strategy and SQL functions, as GraftSession sets
+    // them: every suite plans with them whichever one builds the session
+    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -189,7 +189,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("rank_bucket SQL surface: integral arrays widen, bad arrays refuse cleanly") {
-    graft.plans.GraftExtensions.register(spark)
     // SQL's bare array(1,2,3) folds to array<int> — must widen, not CCE
     assert(spark.sql("SELECT rank_bucket(5, array(1, 2, 3))")
       .head().getLong(0) == 3L)
@@ -221,7 +220,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("rank_bucket refinement: composed code is exact, monotone, edge-clamping") {
-    graft.plans.GraftExtensions.register(spark)
     // boundaries (100, 200), subBits=4, domain [0, 300]:
     // code = (rank << 4) | floor((v - lo)/(hi - lo) · 16) clamped
     val expect = Seq(

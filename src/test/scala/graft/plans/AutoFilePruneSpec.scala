@@ -26,7 +26,6 @@ class AutoFilePruneSpec extends SparkSpec {
   // (nothing in [100, 200) — the exact-key gap prune under test)
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     val fact = spark.range(0, 400).select(col("id").as("k"),
       (col("id") * 7L).as("v"))

@@ -29,7 +29,6 @@ class ConstraintRulesSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     new File(root).mkdirs()
 

@@ -15,7 +15,6 @@ class CrossJoinGuardSpec extends SparkSpec {
     lit("x" * 64).as("pad"))
 
   private def withGuard[A](maxBytes: Long = 1024)(f: => A): A = {
-    GraftPlanner.register(spark)
     spark.conf.set("spark.graft.crossJoinGuard.enabled", "true")
     spark.conf.set("spark.graft.crossJoinGuard.maxBytes", maxBytes.toString)
     try f finally {
@@ -48,7 +47,6 @@ class CrossJoinGuardSpec extends SparkSpec {
   }
 
   test("the guard is off by default") {
-    GraftPlanner.register(spark)
     assert(spark.range(2000).toDF().crossJoin(spark.range(2000).toDF()).count()
       == 4000000L)
   }

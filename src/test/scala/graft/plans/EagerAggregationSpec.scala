@@ -24,7 +24,6 @@ class EagerAggregationSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     // fk ∈ 1..8 (7,8 unmatched in dimT); m NULL every 5th row
     val fact = (1L to 120L).map { i =>

@@ -14,7 +14,6 @@ class GlobalWindowGuardSpec extends SparkSpec {
     (col("id") % 10).as("k"), lit("x" * 64).as("pad"))
 
   private def withGuard[A](maxBytes: Long = 1024)(f: => A): A = {
-    GraftPlanner.register(spark)
     spark.conf.set("spark.graft.globalWindowGuard.enabled", "true")
     spark.conf.set("spark.graft.globalWindowGuard.maxBytes", maxBytes.toString)
     try f finally {
@@ -50,7 +49,6 @@ class GlobalWindowGuardSpec extends SparkSpec {
   }
 
   test("the guard is off by default") {
-    GraftPlanner.register(spark)
     assert(spark.range(100000).toDF()
       .withColumn("rn", row_number().over(Window.orderBy("id")))
       .count() == 100000L)

@@ -43,7 +43,6 @@ class GreedyTokenizeSpec extends SparkSpec {
   }
 
   test("eval equals codegen on real documents; nulls pass through") {
-    GraftExtensions.register(spark)
     val v = Seq("the", "er", "in", "a", "e", " ")
     val docs = graft.Tables.documents(spark, sfDir).limit(50)
     val viaExpr = call_function("greedy_tokenize", col("text"), lit(v.mkString(",")))
@@ -65,7 +64,6 @@ class GreedyTokenizeSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      GraftExtensions.register(spark)
       val out = Seq("singing", "xyz").toDF("t")
         .select(call_function("greedy_tokenize", col("t"),
           lit(vocab.mkString(","))).as("ids"))

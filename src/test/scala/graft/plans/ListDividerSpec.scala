@@ -7,7 +7,6 @@ class ListDividerSpec extends SparkSpec {
   import spark.implicits._
 
   private def divide(items: Seq[String], sentinel: String = "SEP"): Seq[(Int, Int, String)] = {
-    GraftExtensions.register(spark)
     Seq(Tuple1(items)).toDF("xs")
       .select(expr(s"list_divider(xs, '$sentinel')"))
       .collect()
@@ -41,7 +40,6 @@ class ListDividerSpec extends SparkSpec {
   }
 
   test("null array yields no rows; plan is a Generate node") {
-    GraftExtensions.register(spark)
     val df = Seq((1, Seq("a")), (2, null)).toDF("id", "xs")
       .select($"id", expr("list_divider(xs, 'SEP')"))
     assert(df.collect().map(_.getInt(0)).toSeq === Seq(1))

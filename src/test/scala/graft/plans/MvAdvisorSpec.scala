@@ -19,7 +19,6 @@ class MvAdvisorSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     (1L to 500L).map(i => (s"k${i % 5}", s"s${i % 3}", i % 11, i % 7))
       .toDF("ka", "kb", "m1", "m2")

@@ -23,7 +23,6 @@ class MvRewriteModelSpec extends SparkSpec {
   private val root = "/root/repo/target/tmp/spec_mv_model"
 
   test("random aggregate queries are invariant to the rewrite rule") {
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     val basePath = s"$root/mfacts_base.parquet"
     // keys ka(4) × kb(3), measures m (with nulls) and w; 500 rows

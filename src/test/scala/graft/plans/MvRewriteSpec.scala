@@ -24,7 +24,6 @@ class MvRewriteSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftPlanner.register(spark)
     FileUtils.deleteQuietly(new File(root))
     // 3 keys × values, integral measures; written as the "fact table"
     val base = (1L to 400L).map(i =>

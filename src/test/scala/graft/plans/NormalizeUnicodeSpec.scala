@@ -17,7 +17,6 @@ class NormalizeUnicodeSpec extends SparkSpec {
   private val composed = "café naïve dejà vu"
 
   private def viaDf(s: String, form: String = "NFC"): String = {
-    GraftExtensions.register(spark)
     Seq(s).toDF("t")
       .select(call_function("normalize_unicode", col("t"), lit(form)))
       .head().getString(0)
@@ -35,7 +34,6 @@ class NormalizeUnicodeSpec extends SparkSpec {
       Literal(UTF8String.fromString(decomposed)), "NFC")
       .eval().asInstanceOf[UTF8String].toString
     assert(viaEval == viaDf(decomposed))
-    GraftExtensions.register(spark)
     val nullOut = Seq(Option.empty[String]).toDF("t")
       .select(call_function("normalize_unicode", col("t"), lit("NFC")))
       .head()
@@ -59,7 +57,6 @@ class NormalizeUnicodeSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      GraftExtensions.register(spark)
       val out = Seq(decomposed, composed, "ascii").toDF("t")
         .select(call_function("normalize_unicode", col("t"), lit("NFC")).as("n"))
         .collect().map(_.getString(0))

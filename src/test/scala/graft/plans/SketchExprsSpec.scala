@@ -10,7 +10,6 @@ class SketchExprsSpec extends SparkSpec {
   import spark.implicits._
 
   private def sigsViaDf(xs: Seq[java.lang.Long], k: Int): Option[Seq[Long]] = {
-    GraftExtensions.register(spark)
     val row = Seq(Tuple1(xs)).toDF("h")
       .select(call_function("minhash_sigs", col("h"), lit(k)).as("sig"))
       .head()
@@ -18,7 +17,6 @@ class SketchExprsSpec extends SparkSpec {
   }
 
   private def simViaDf(xs: Seq[java.lang.Long]): Option[Long] = {
-    GraftExtensions.register(spark)
     val row = Seq(Tuple1(xs)).toDF("h")
       .select(call_function("simhash64", col("h")).as("s"))
       .head()
@@ -40,7 +38,6 @@ class SketchExprsSpec extends SparkSpec {
   }
 
   test("shingle_hashes matches the xxhash64-over-slice HOF formulation") {
-    GraftExtensions.register(spark)
     import graft.{Tables => T}
     val docs = T.documents(spark, sfDir).limit(50)
     val ws = split(trim(col("text")), "\\s+")
@@ -58,7 +55,6 @@ class SketchExprsSpec extends SparkSpec {
   }
 
   test("shingle_hashes: eval equals codegen and short docs yield NULL") {
-    GraftExtensions.register(spark)
     import org.apache.spark.unsafe.types.UTF8String
     val toks = Array("the", "quick", "brown", "fox", "jumps", "over").map(UTF8String.fromString)
     val viaEval = ShingleHashes(
@@ -80,7 +76,6 @@ class SketchExprsSpec extends SparkSpec {
     // accepted the generated code (a compile failure falls back to the
     // interpreted path silently). Force codegen-only + no fallback so a
     // Janino rejection fails this test instead.
-    GraftExtensions.register(spark)
     val prevFallback = spark.conf.get("spark.sql.codegen.fallback")
     val prevFactory = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     spark.conf.set("spark.sql.codegen.fallback", "false")

@@ -176,7 +176,6 @@ class WorkloadAdvisorSpec extends SparkSpec {
   }
 
   test("constraint advice closes its loop: declare the recommendation, the join dies") {
-    GraftPlanner.register(spark)
     val fact = s"$root/cns_fact"
     val dim = s"$root/cns_dim"
     TxnTable.commit(spark,
@@ -213,7 +212,6 @@ class WorkloadAdvisorSpec extends SparkSpec {
   }
 
   test("sampled probes still refuse a false candidate; screened truths recommend") {
-    GraftPlanner.register(spark)
     val fact = s"$root/smp_fact"
     val dimDup = s"$root/smp_dimdup"   // every row the SAME key
     val dimOk = s"$root/smp_dimok"
@@ -247,7 +245,6 @@ class WorkloadAdvisorSpec extends SparkSpec {
   }
 
   test("a fresh NDV sketch refutes a duplicate dim key from metadata") {
-    GraftPlanner.register(spark)
     val fact = s"$root/ndvref_fact"
     val dim = s"$root/ndvref_dim"
     TxnTable.commit(spark,
@@ -285,7 +282,6 @@ class WorkloadAdvisorSpec extends SparkSpec {
   }
 
   test("eager-agg advice prices the reorder and names the missing declaration") {
-    GraftPlanner.register(spark)
     val fact = s"$root/eg_fact"
     val dim = s"$root/eg_dim"         // declared unique
     val dimU = s"$root/eg_dimu"       // unique in data, undeclared

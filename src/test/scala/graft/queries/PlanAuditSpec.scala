@@ -13,6 +13,15 @@ class PlanAuditSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** The rank-limit idiom plans as the engine's TopKPerKey pair: a
+    * partial bounded heap below the exchange and a final one above it,
+    * with no native WindowGroupLimit left underneath. */
+  private def assertTopKPair(plan: String): Unit = {
+    assert("TopKPerKey .*, true, ".r.findFirstIn(plan).isDefined, plan.take(3000))
+    assert("TopKPerKey .*, false, ".r.findFirstIn(plan).isDefined, plan.take(3000))
+    assert(!plan.contains("WindowGroupLimit"), plan.take(3000))
+  }
+
   test("q01_flagship: quantity filter is pushed to the scan, dims broadcast") {
     val plan = planOf("q01_flagship")
     assert(plan.contains("PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity"),
@@ -148,11 +157,9 @@ class PlanAuditSpec extends SparkSpec {
     val rec = planOf("q_sql_recursive_cte")
     assert(rec.contains("UnionLoop"), rec.take(2000))
     val lat = planOf("q_sql_lateral_topk")
-    // the correlated LIMIT becomes a per-key rank prune (window group
-    // limit / rank filter after a join — or the engine's TopKPerKey when
-    // GraftPlanner is registered), never a per-outer-row subquery
-    assert(lat.contains("WindowGroupLimit") || lat.contains("Window") ||
-      lat.contains("TopKPerKey"), lat.take(3000))
+    // the correlated LIMIT becomes a per-key top-k after a join, never
+    // a per-outer-row subquery
+    assertTopKPair(lat)
     assert(!lat.contains("BroadcastNestedLoopJoin"), lat.take(3000))
   }
 
@@ -326,12 +333,9 @@ class PlanAuditSpec extends SparkSpec {
     val plan = planOf("q_search_mmr")
     // candidate generation broadcasts the 8 anchors over the corpus scan
     assert(plan.contains("BroadcastNestedLoopJoin BuildRight"), plan.take(3000))
-    // top-16 prunes map-side before the shuffle — Spark's native
-    // WindowGroupLimit Partial, or (when another suite registered
-    // GraftPlanner on the shared session) the engine's own partial
-    // TopKPerKey bounded heap; both are the audited property
-    assert("WindowGroupLimit .*Partial".r.findFirstIn(plan).isDefined ||
-      "TopKPerKey .*, true, ".r.findFirstIn(plan).isDefined, plan.take(3000))
+    // top-16 prunes map-side before the shuffle: the partial TopKPerKey
+    // bounded heap
+    assertTopKPair(plan)
     // the eq-vector join BUILDS the |Q|·kCand candidate list, not the
     // corpus projection — building corpus-side is the 100 TB OOM
     assert("BroadcastHashJoin \\[n_id".r.findFirstIn(plan).isDefined, plan.take(3000))
@@ -354,15 +358,12 @@ class PlanAuditSpec extends SparkSpec {
   test("q_embed_triplets: both picks from ONE window; anchors broadcast") {
     val plan = planOf("q_embed_triplets")
     assert(plan.contains("BroadcastNestedLoopJoin BuildRight"), plan.take(3000))
-    // a naive two-branch mine would window (or re-scan) twice; under a
-    // registered GraftPlanner the rank window plans as the engine's own
-    // TopKPerKey pair (partial+final) instead — either way exactly one
+    // a naive two-branch mine would window (or re-scan) twice; the rank
+    // window plans as one TopKPerKey pair (partial+final) — exactly one
     // ranked pass over the candidates
-    val windows = "Window \\[row_number".r.findAllIn(plan).size
-    val heapsFinal = "TopKPerKey .*, false, ".r.findAllIn(plan).size
-    assert(windows + heapsFinal === 1, plan.take(3000))
-    assert("WindowGroupLimit .*Partial".r.findFirstIn(plan).isDefined ||
-      "TopKPerKey .*, true, ".r.findFirstIn(plan).isDefined, plan.take(3000))
+    assert(!plan.contains("Window [row_number"), plan.take(3000))
+    assert("TopKPerKey .*, false, ".r.findAllIn(plan).size === 1, plan.take(3000))
+    assertTopKPair(plan)
   }
 
   test("q_profile_drift: reference stats broadcast; both sides pre-aggregate map-side") {
@@ -456,11 +457,11 @@ class PlanAuditSpec extends SparkSpec {
     // funnel the whole vocabulary of (node,label) pairs through one task
     val wavePlan = Graph.lpaWave(labels, sym)
       .queryExecution.executedPlan.toString
-    // under a registered GraftPlanner the rank-1 filter plans as the
-    // engine's TopKPerKey keyed by node — the same per-key property
+    // the rank-1 filter plans as the engine's TopKPerKey pair keyed by
+    // node
+    assertTopKPair(wavePlan)
     val perKeyLine = wavePlan.linesIterator
-      .find(l => l.contains("Window") || l.contains("TopKPerKey"))
-      .getOrElse("")
+      .find(_.contains("TopKPerKey")).getOrElse("")
     assert(perKeyLine.contains("node"), s"wave not per-node: $perKeyLine")
     // survivors prune edges through two LeftSemi joins — an inner join
     // against the degree table would duplicate edges
