@@ -1,11 +1,6 @@
 package graft.jobs
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
-
-import graft.GraftSession
+import graft.{GraftSession, Overlap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's primary entry point re-expressed on Spark (SURVEY
@@ -64,8 +59,9 @@ object PipelineMain {
     * `retries=1`; `retryDelayMs` stands in for its 5-minute
     * `retry_delay` (0 here — an embedded runner re-attempts immediately;
     * the knob exists because the delay is deployment policy, not
-    * semantics). */
-  /** Data-quality GATES sit between the staging barrier and the fan-in —
+    * semantics).
+    *
+    * Data-quality GATES sit between the staging barrier and the fan-in —
     * the Airflow sensor/check-task slot. A gate returns None to pass or
     * Some(reason) to trip; a TRIPPED gate does not throw, it reports,
     * and every mart is SKIPPED (attempts = 0, error names the gate) —
@@ -110,20 +106,15 @@ object PipelineMain {
     }
 
     // one thread per branch: setJobGroup is THREAD-local, so each branch's
-    // Spark jobs carry its own group id concurrently
-    val pool = Executors.newFixedThreadPool(math.max(branches.size, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val staged =
-      try Await.result(Future.sequence(branches.map { case (name, mk) =>
-        Future {
-          sc.setJobGroup(name, s"branch $name: scrape -> clean -> stage",
-            interruptOnCancel = true)
-          // the Future itself never fails — failure is DATA in the report
-          try name -> attemptStage(name, mk)
-          finally sc.clearJobGroup()
-        }
-      }), 30.minutes)
-      finally pool.shutdown()
+    // Spark jobs carry its own group id concurrently. The barrier joins
+    // every branch; a branch never throws — failure is DATA in the report
+    val staged = Overlap.map(Some(spark), branches, branches.size,
+        "pipeline branch") { case (name, mk) =>
+      sc.setJobGroup(name, s"branch $name: scrape -> clean -> stage",
+        interruptOnCancel = true)
+      try name -> attemptStage(name, mk)
+      finally sc.clearJobGroup()
+    }
     // quality gates: run between the barrier and the fan-in; a gate
     // check that itself crashes counts as tripped (fail-closed)
     sc.setJobGroup("quality_gates", "data-quality gates on staged tables",

@@ -2,8 +2,9 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
+import java.util.concurrent.ConcurrentHashMap
 
+import graft.Overlap
 import org.apache.spark.SparkException
 import org.apache.spark.sql.SparkSession
 
@@ -25,24 +26,30 @@ import org.apache.spark.sql.SparkSession
   * THREE rungs, dispatched by batch size:
   *  - ≤1 file: inline on the caller thread (the steady-state O(Δ) sync
   *    that ships one file never spins anything up);
-  *  - small batch: a bounded DRIVER THREAD POOL — parallel latency
-  *    hiding with zero job-scheduling overhead;
+  *  - small batch: driver threads through [[graft.Overlap]], the
+  *    engine's one bounded pool — parallel latency hiding with zero
+  *    job-scheduling overhead;
   *  - ≥ `spark.graft.replicate.distributedThreshold` files (default
   *    256) with an active session: a SPARK JOB over the copy manifest
   *    ([[copyDistributed]]) — every byte flows through an EXECUTOR's
-  *    NIC, not the driver's. At 100 TB the driver pool caps sync
+  *    NIC, not the driver's. At 100 TB the driver threads cap sync
   *    throughput at one machine's IO; the manifest job scales it with
   *    the cluster. Tasks are idempotent (skip-if-present, private
   *    UUID-tmp), so Spark's task retries and speculation are safe.
   *
   * Failure contract (all rungs): the first task failure propagates its
   * ORIGINAL exception (not the ExecutionException / SparkException
-  * wrapper), remaining work is cancelled/failed, and any in-flight copy
-  * leaves at most its private tmp file — an ordinary vacuum orphan the
-  * resume path never mistakes for a finished copy (the atomic move is
-  * what publishes a target). This is exactly the crash window the
-  * serial path already had, so the resume semantics are unchanged:
-  * re-running the sync skips completed targets and re-copies the rest.
+  * wrapper) and remaining work is cancelled/failed. On the driver rung
+  * that is [[graft.Overlap]]'s contract: copies not yet started are
+  * dropped, and the batch JOINS its in-flight copies before it
+  * rethrows, so nothing of the failed batch is still writing when the
+  * caller sees the fault. A copy cut short (a crash, or a distributed
+  * task killed mid-copy) leaves at most its private tmp file — an
+  * ordinary vacuum orphan the resume path never mistakes for a finished
+  * copy (the atomic move is what publishes a target). This is exactly
+  * the crash window the serial path already had, so the resume
+  * semantics are unchanged: re-running the sync skips completed targets
+  * and re-copies the rest.
   */
 private[graft] object ParallelCopy {
 
@@ -79,13 +86,11 @@ private[graft] object ParallelCopy {
   /** IO-bound fan-out width: capped well below the shuffle-partition
     * scale (copies contend on disk/network, not CPU) and by the batch
     * size itself. `spark.graft.replicate.parallelism` overrides per
-    * deployment (driver pool AND vacuum deletes); 0/absent keeps the
-    * cores-derived default. */
-  private def defaultParallelism: Int = {
-    val conf = confInt("spark.graft.replicate.parallelism", 0)
-    if (conf >= 1) conf
-    else math.min(16, math.max(2, Runtime.getRuntime.availableProcessors / 2))
-  }
+    * deployment (driver threads AND vacuum deletes); an absent,
+    * unparsable or < 1 value keeps the cores-derived default. */
+  private def defaultParallelism: Int = confInt(
+    "spark.graft.replicate.parallelism",
+    math.min(16, math.max(2, Runtime.getRuntime.availableProcessors / 2)))
 
   /** Batch size at which a copy manifest becomes a Spark job. Small
     * enough that a real bulk seed distributes, large enough that the
@@ -94,8 +99,7 @@ private[graft] object ParallelCopy {
     confInt("spark.graft.replicate.distributedThreshold", 256)
 
   private def confInt(key: String, dflt: Int): Int =
-    SparkSession.getActiveSession
-      .flatMap(s => s.conf.getOption(key)).map(_.toInt).getOrElse(dflt)
+    SparkSession.getActiveSession.fold(dflt)(Overlap.confInt(_, key, dflt))
 
   /** The session a distributed batch would run on, iff this batch is
     * big enough and a session exists. Callers dispatch on this so the
@@ -163,42 +167,20 @@ private[graft] object ParallelCopy {
     case other => other
   }
 
-  /** Run `f` over `items` on a bounded driver pool, joining every task
-    * before returning — the caller's next step (a log publish) must
+  /** Run `f` over `items` on bounded driver threads, joining every
+    * task before returning — the caller's next step (a log publish) must
     * only ever see a fully-landed batch. Single-item and empty batches
     * run inline (no pool spin-up for the steady-state O(Δ) sync that
     * ships one file). */
   def foreachPar[A](items: Seq[A], parallelism: Int = 0)(f: A => Unit): Unit = {
-    val n = math.min(items.size,
-      if (parallelism >= 1) parallelism else defaultParallelism)
-    if (items.size <= 1 || n <= 1) {
-      items.foreach(f)
-      lastThreads = math.min(items.size, 1)
-      lastMode = "inline"
-      return
-    }
-    val pool = Executors.newFixedThreadPool(n)
+    val width = if (parallelism >= 1) parallelism else defaultParallelism
     val threads = ConcurrentHashMap.newKeySet[String]()
-    try {
-      val futures = items.map { a =>
-        pool.submit(new Callable[Unit] {
-          override def call(): Unit = {
-            threads.add(Thread.currentThread().getName)
-            f(a)
-          }
-        })
-      }
-      futures.foreach { fu =>
-        try fu.get()
-        catch {
-          case e: ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
+    try Overlap.map(SparkSession.getActiveSession, items, width, "replicate copy") { a =>
+      threads.add(Thread.currentThread().getName)
+      f(a)
     } finally {
-      pool.shutdownNow()
-      lastThreads = math.max(1, threads.size)
-      lastMode = "pool"
+      lastThreads = threads.size
+      lastMode = if (math.min(items.size, width) <= 1) "inline" else "pool"
     }
   }
 }

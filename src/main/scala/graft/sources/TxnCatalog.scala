@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import graft.Overlap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-table ATOMIC commit over a set of [[TxnTable]]s — the missing
@@ -251,48 +252,16 @@ object TxnCatalog {
     // The per-table staged commits are INDEPENDENT — each lands in its
     // own table dir and stays catalog-invisible until the entry below
     // publishes — and each is a small scheduling-latency-bound write
-    // job, so a bounded pool overlaps them (an 8-table index build paid
-    // 8 job latencies end to end). The (name -> version) map is
-    // order-independent; versions come from each table's own log. A
-    // failed write cancels the other in-flight jobs (per-call job
-    // group) and propagates its ORIGINAL exception; completed siblings
-    // stay catalog-invisible orphans for vacuum, exactly as a
-    // sequential mid-transaction failure leaves its predecessors.
-    val commitWidth = math.max(1, math.min(writes.size,
-      scala.util.Try(spark.conf
-        .get("spark.graft.catalog.commitParallelism", "4").trim.toInt)
-        .getOrElse(4)))
-    val created: Map[String, Int] =
-      if (commitWidth == 1 || writes.size == 1) writes.map(stage).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(commitWidth)
-        val group = "graft-catalog-commit-" +
-          java.util.UUID.randomUUID.toString.take(8)
-        try {
-          val futs = writes.map { w =>
-            pool.submit(new java.util.concurrent.Callable[(String, Int)] {
-              override def call(): (String, Int) = {
-                spark.sparkContext.setJobGroup(group,
-                  s"catalog commit ${w.name}", interruptOnCancel = true)
-                try stage(w)
-                finally spark.sparkContext.clearJobGroup()
-              }
-            })
-          }
-          try futs.map { f =>
-            try f.get()
-            catch { // surface the write's own failure, not the wrapper
-              case e: java.util.concurrent.ExecutionException =>
-                throw Option(e.getCause).getOrElse(e)
-            }
-          }.toMap
-          catch { case e: Throwable =>
-            try spark.sparkContext.cancelJobGroup(group)
-            catch { case scala.util.control.NonFatal(_) => () }
-            throw e
-          }
-        } finally pool.shutdownNow()
-      }
+    // job, so they overlap (an 8-table index build paid 8 job latencies
+    // end to end). The (name -> version) map is order-independent;
+    // versions come from each table's own log. A failed write cancels
+    // the others' in-flight jobs and propagates its ORIGINAL exception;
+    // completed siblings stay catalog-invisible orphans for vacuum,
+    // exactly as a sequential mid-transaction failure leaves its
+    // predecessors.
+    val created: Map[String, Int] = Overlap.map(Some(spark), writes,
+      Overlap.confInt(spark, "spark.graft.catalog.commitParallelism", 4),
+      "catalog commit")(stage).toMap
     val baseLists = versionLists(catalog, Some(txn - 1))
     val byName = writes.map(w => w.name -> w.overwrite).toMap
     val lists = baseLists ++ created.map { case (name, v) =>
@@ -310,8 +279,8 @@ object TxnCatalog {
     // move applied automatically at commit time): O(|live files|)
     // driver work, zero data rewritten, time travel unaffected (older
     // entries keep replaying their own lineages).
-    val maxLineage = math.max(1, spark.conf
-      .get("spark.graft.catalog.maxLineage", "64").toInt)
+    val maxLineage =
+      Overlap.confInt(spark, "spark.graft.catalog.maxLineage", 64)
     var tables = base ++ created
     val capped = lists.map { case (name, lin) =>
       if (lin.length <= maxLineage) name -> lin

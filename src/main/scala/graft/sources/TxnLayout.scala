@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 
+import graft.Overlap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -656,57 +657,18 @@ object TxnLayout {
         // the one-write-job-per-segment contract stands (a single
         // unioned write merges output partitions across segments), but
         // the segment jobs are INDEPENDENT — each reads the persisted
-        // tagged frame and writes its own staging dir — so they run
-        // CONCURRENTLY from a bounded pool (a couple of jobs in flight
-        // back-fills the cores a segment's straggler tail leaves idle;
-        // N segments previously paid N full job latencies end to end).
-        // Content is submission-order-independent and `added` keeps
-        // segment order, so the commit is byte-identical to the
-        // sequential form; a failed segment propagates its ORIGINAL
-        // exception and the staged dirs stay ordinary vacuum orphans.
-        // conf parsed defensively: a typo'd setting must not fail the
-        // recluster AFTER the rewrite set is persisted
-        val width = math.max(1, math.min(segs.size,
-          scala.util.Try(spark.conf
-            .get("spark.graft.recluster.writeParallelism", "4").trim.toInt)
-            .getOrElse(4)))
+        // tagged frame and writes its own staging dir — so they overlap
+        // (a couple of jobs in flight back-fills the cores a segment's
+        // straggler tail leaves idle; N segments previously paid N full
+        // job latencies end to end). Content is submission-order-
+        // independent and `added` keeps segment order, so the commit is
+        // byte-identical to the sequential form; a failed segment
+        // cancels the others and propagates its ORIGINAL exception, and
+        // the staged dirs stay ordinary vacuum orphans.
         val added = pt("ri.write")(
-          if (segs.isEmpty) // stale files held no rows: remove-only rewrite
-            Seq.empty[String]
-          else if (width == 1)
-            segs.zipWithIndex.flatMap { case (sg, i) => segJob(sg, i) }
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
-            // per-call job group so a failed segment CANCELS the other
-            // segments' in-flight Spark jobs (shutdownNow only
-            // interrupts waiting pool threads; already-submitted jobs
-            // would keep writing staged dirs after the method threw)
-            val group = "graft-recluster-" +
-              java.util.UUID.randomUUID.toString.take(8)
-            try {
-              val futs = segs.zipWithIndex.map { case (sg, i) =>
-                pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-                  override def call(): Seq[String] = {
-                    spark.sparkContext.setJobGroup(group,
-                      s"recluster segment $i", interruptOnCancel = true)
-                    try segJob(sg, i)
-                    finally spark.sparkContext.clearJobGroup()
-                  }
-                })
-              }
-              try futs.flatMap { f =>
-                try f.get()
-                catch { // surface the segment's own failure, not the wrapper
-                  case e: java.util.concurrent.ExecutionException =>
-                    throw Option(e.getCause).getOrElse(e)
-                }
-              } catch { case e: Throwable =>
-                try spark.sparkContext.cancelJobGroup(group)
-                catch { case scala.util.control.NonFatal(_) => () }
-                throw e
-              }
-            } finally pool.shutdownNow()
-          })
+          Overlap.map(Some(spark), segs.zipWithIndex,
+            Overlap.confInt(spark, "spark.graft.recluster.writeParallelism", 4),
+            "recluster segment") { case (sg, i) => segJob(sg, i) }.flatten)
         pt("ri.publish")(
           TxnTable.publishRewrite(table, added, rewriteSet, Some(version)))
       } finally tagged.unpersist() // incl. a failed segment write

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import graft.Overlap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -314,20 +315,11 @@ object TxnStats {
     }
   }
 
-  /** Per-file (min, max, rows) for a supported column straight from the
-    * parquet FOOTER's row-group statistics — metadata IO only, no data
-    * pages, the same read class as [[TxnTable.footerRowCount]]. None
-    * when any row group lacks usable stats for the column (then the
-    * file stays unindexed, which the pruner treats as always-read), or
-    * when the footer's physical representation is not the one `dt`
-    * expects (INT96 timestamps, scale drift). A file whose every value
-    * is NULL yields (None, None, rows) — stored as a null bound the
-    * range pruner SKIPS. */
   /** Bring several columns' footer stats up to head CONCURRENTLY: each
     * column's refresh is independent (its own sidecar dir and
     * watermark), and with the footer cache absorbing the shared parses
     * the per-column cost is one scheduling-latency-bound sidecar write
-    * job — a bounded pool overlaps them. Per-column NonFatal failures
+    * job — they overlap, four at a time. Per-column NonFatal failures
     * skip that column (the pruner always reads unindexed files, so a
     * skipped refresh costs IO, never rows) — the same contract the
     * per-column call sites already applied. */
@@ -336,16 +328,7 @@ object TxnStats {
     def one(c: String): Unit =
       try { refreshFromFooters(spark, table, c); () }
       catch { case scala.util.control.NonFatal(_) => () }
-    val cols = columns.distinct
-    if (cols.size <= 1) cols.foreach(one)
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, cols.size))
-      try cols.map(c => pool.submit(new Runnable {
-        override def run(): Unit = one(c)
-      })).foreach(_.get())
-      finally pool.shutdownNow()
-    }
+    Overlap.map(Some(spark), columns.distinct, 4, "sidecar refresh")(one)
   }
 
   /** Parsed parquet FOOTERS, memoized per absolute path: a clustered
@@ -376,6 +359,15 @@ object TxnStats {
     }
   }
 
+  /** Per-file (min, max, rows) for a supported column straight from the
+    * parquet FOOTER's row-group statistics — metadata IO only, no data
+    * pages, the same read class as [[TxnTable.footerRowCount]]. None
+    * when any row group lacks usable stats for the column (then the
+    * file stays unindexed, which the pruner treats as always-read), or
+    * when the footer's physical representation is not the one `dt`
+    * expects (INT96 timestamps, scale drift). A file whose every value
+    * is NULL yields (None, None, rows) — stored as a null bound the
+    * range pruner SKIPS. */
   private def footerMinMax(f: File, dt: DataType, column: String)
       : Option[(Option[Any], Option[Any], Long)] = {
     {

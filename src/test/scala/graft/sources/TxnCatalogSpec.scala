@@ -4,6 +4,8 @@ import java.io.File
 
 import graft.SparkSpec
 import org.apache.commons.io.FileUtils
+import org.apache.spark.graftshim.TaskTimeListener
+import org.apache.spark.sql.functions.{col, udf}
 
 /** Behavior specs for the multi-table catalog transaction: all-or-none
   * visibility across tables, orphan invisibility (crash and lost-race
@@ -373,5 +375,56 @@ class TxnCatalogSpec extends SparkSpec {
     // bytes, every committed snapshot stays intact
     TxnCatalog.vacuum(c)
     assert(ids(c, "t") == (0L to 6L).toSet)
+  }
+
+  test("a failed write cancels its slow sibling: commitAll throws it at once, publishes nothing") {
+    val c = freshCatalog("first_failure")
+    TxnCatalog.commitAll(spark, c, Seq(
+      Write("slow", Seq(1L).toDF("id")), Write("bad", Seq(1L).toDF("id"))))
+    val before = TxnCatalog.tableVersions(c)
+    // sleeps in 100 ms steps for ~30 s and stops when interrupted
+    val sleepy = udf { (x: Long) => (1 to 300).foreach(_ => Thread.sleep(100)); x }
+      .asNondeterministic()
+    val poison = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("bad write"); x
+    }.asNondeterministic()
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      TxnCatalog.commitAll(spark, c, Seq(
+        Write("slow", spark.range(1).select(sleepy(col("id")).as("id"))),
+        Write("bad", spark.range(1).select(poison(col("id")).as("id")))))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    // the bad write's own failure, not the pool's wrapper nor the slow
+    // write's cancellation
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalStateException] &&
+        t.getMessage == "bad write"), e)
+    assert(secs < 10, s"the first failure must not wait for the 30 s write: $secs s")
+    assert(TxnCatalog.tableVersions(c) == before)
+    TaskTimeListener.flush(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  test("non-numeric maxLineage and replicate widths fall back to their defaults") {
+    val keys = Seq("spark.graft.catalog.maxLineage",
+      "spark.graft.replicate.parallelism",
+      "spark.graft.replicate.distributedThreshold")
+    keys.foreach(spark.conf.set(_, "lots"))
+    try {
+      val c = freshCatalog("conf_typo")
+      assert(TxnCatalog.commitAll(spark, c, Seq(
+        Write("a", Seq(1L).toDF("id")), Write("b", Seq(2L).toDF("id")))) == 1)
+      assert(ids(c, "a") == Set(1L) && ids(c, "b") == Set(2L))
+      val src = freshCatalog("conf_typo_src")
+      val dst = freshCatalog("conf_typo_dst")
+      TxnTable.commit(spark, spark.range(0, 200).repartition(8).toDF("id"),
+        src, overwrite = false)
+      assert(TxnTable.replicate(src, dst) == (1, 8))
+      // the default width fans out on driver threads; the default
+      // threshold (256 files) keeps 8 files off the distributed rung
+      assert(ParallelCopy.lastMode == "pool" && ParallelCopy.lastThreads > 1)
+    } finally keys.foreach(spark.conf.unset)
   }
 }
