@@ -31,8 +31,8 @@ object Bench {
     // doesn't absorb ~4s of session start
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).limit(1).collect()
-    // …and the three other fixed per-JVM bootstraps ProfileWatch
-    // attributed (r12/r13): the streaming machinery + HDFS state store,
+    // …and the three other fixed per-JVM bootstraps measured in
+    // r12/r13: the streaming machinery + HDFS state store,
     // the RocksDB state-store provider (native lib load + column-family
     // setup — ~6 s measured on the first transformWithState stream),
     // and the embedded Derby JDBC engine. Without this, those one-time

@@ -33,7 +33,7 @@ object DerivedCache {
   def ensure(dir: File, srcs: Seq[File], marker: String)(build: => Unit): Unit =
     if (!fresh(dir, srcs, marker)) {
       if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      build
+      Trace.span("derived.build")(build)
       Files.write(new File(dir, "_SRC_STAMP").toPath,
         stampOf(srcs).getBytes(UTF_8))
     }

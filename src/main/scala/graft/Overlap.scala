@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    shared executor would run jobs under whichever caller first
   *    started its threads;
   *  - every call runs its tasks under its own job group
-  *    (`interruptOnCancel = true`, cleared when the task ends);
+  *    (`interruptOnCancel = true`, cleared when the task ends), and
+  *    each task inside a [[Trace.span]] named by the call's label;
   *  - the first failure in COMPLETION order cancels the group (the
   *    siblings' running Spark jobs fail at once) and drops the tasks not
   *    yet started; the call then joins the tasks still in flight (they
@@ -61,7 +62,7 @@ private[graft] object Overlap {
         done.submit { () =>
           spark.foreach(_.sparkContext.setJobGroup(group,
             s"$label ${i + 1}/${items.size}", interruptOnCancel = true))
-          try f(a)
+          try Trace.span(label)(f(a))
           finally spark.foreach(_.sparkContext.clearJobGroup())
         }
       }

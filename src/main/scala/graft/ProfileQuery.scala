@@ -1,87 +1,62 @@
 package graft
 
-/** Generic per-query job-level profiler (guide §1): runs named registered
-  * queries exactly as Bench does (noop sink, clearCache between runs) for
-  * `reps` repetitions, printing per-rep wall/jobs/task-time; the LAST rep
-  * traces every Spark job with its duration, task time and first stage's
-  * call site so driver gaps vs stage chains are visible instead of guessed.
-  * `runMain graft.ProfileQuery <q1,q2,...> [sfDir] [reps]`. */
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The engine's profiler: runs named registered queries as Bench does
+  * (noop sink, `clearCache` between reps) under [[Trace.record]], prints
+  * one line per rep, then the last rep's span tree — which engine phase
+  * ran which jobs, for how long, at what task time.
+  * `runMain graft.ProfileQuery <q1,q2,...> [sfDir] [reps]`; the local
+  * thread count is `SPARK_GRAFT_CPUS`, or the host's cores when unset. */
 object ProfileQuery {
+
+  /** One repetition: its GC time, its trace, and the frame it wrote. */
+  final case class Rep(gcS: Double, report: Trace.Report, frame: DataFrame)
+
+  private def gcMs: Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+
+  /** Run registered query `name` at `sfDir` `reps` times, each under its
+    * own [[Trace.record]]. */
+  def profile(spark: SparkSession, name: String, sfDir: String,
+              reps: Int): Seq[Rep] = {
+    val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
+    (1 to reps).map { _ =>
+      val g0 = gcMs
+      val (frame, report) = Trace.record(spark) {
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
+      val rep = Rep((gcMs - g0) / 1e3, report, frame)
+      spark.catalog.clearCache()
+      rep
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQuery <q1,q2,...> [sfDir] [reps]")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = GraftSession.create(32)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).limit(1).collect()
-
-    @volatile var jobs = 0
-    @volatile var trace = false
-    val t00 = System.nanoTime()
-    val meta = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]
-    val taskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs += 1
-          if (trace) {
-            val site = j.stageInfos.sortBy(_.stageId).map(_.name)
-              .mkString(" | ").take(120)
-            val desc = Option(j.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            meta.put(j.jobId, (System.nanoTime(),
-              (if (desc.nonEmpty) s"[$desc] " else "") + site))
-            j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
-            taskMs.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
-          }
-        }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (trace && t.taskMetrics != null)
-            Option(stageJob.get(t.stageId)).flatMap(j => Option(taskMs.get(j)))
-              .foreach(_.addAndGet(t.taskMetrics.executorRunTime))
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (trace) Option(meta.get(j.jobId)).foreach { case (t0, n) =>
-            val tk = Option(taskMs.get(j.jobId)).map(_.get()).getOrElse(0L)
-            println(f"[pq]   job ${j.jobId}%4d +${(t0 - t00) / 1e9}%7.2f " +
-              f"${(System.nanoTime() - t0) / 1e9}%6.3f s task ${tk / 1e3}%7.3f  $n")
-          }
-      })
-
-    val taskTimer = org.apache.spark.graftshim.TaskTimeListener
-      .install(spark.sparkContext)
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    val byName = SparkEntry.queries
     names.foreach { name =>
-      val fn = byName.getOrElse(name, sys.error(s"unknown query: $name"))
-      for (rep <- 1 to reps) {
-        trace = rep == reps && names.size == 1
-        val j0 = jobs
-        val g0 = gcMs
-        val m0 = taskTimer.runTimeMs.get()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        org.apache.spark.graftshim.TaskTimeListener.flush(spark.sparkContext)
-        trace = false
-        val rdds = spark.sparkContext.getPersistentRDDs
-        val cachedMb = spark.sparkContext.getRDDStorageInfo
-          .map(_.memSize).sum / (1024 * 1024)
-        println(f"[pq] $name%-30s rep$rep wall $wall%6.2f s  " +
-          f"jobs ${jobs - j0}%3d  task ${(taskTimer.runTimeMs.get() - m0) / 1e3}%7.2f s  " +
-          f"gc ${(gcMs - g0) / 1e3}%5.2f s  rdds ${rdds.size}%4d cached ${cachedMb}%5d MB")
+      val runs = profile(spark, name, sfDir, reps)
+      runs.zipWithIndex.foreach { case (r, i) =>
+        println(f"[pq] $name%-30s rep${i + 1} wall ${r.report.wallMs / 1e3}%6.2f s  " +
+          f"jobs ${r.report.jobs}%3d  task ${r.report.taskMs / 1e3}%7.2f s  " +
+          f"gc ${r.gcS}%5.2f s")
       }
+      println(s"[pq] $name rep$reps span tree ($cpus threads):")
+      println(runs.last.report.tree)
     }
     Scratch.sweep()
     spark.stop()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Trace
 import graft.sources.TxnTable
 
 /** Keyed MERGE (upsert) into a [[graft.sources.TxnTable]] — the Delta
@@ -42,7 +43,7 @@ object Merge {
   def upsert(spark: SparkSession, table: String, source: DataFrame,
              keys: Seq[String],
              expectedVersion: Option[Int] = None,
-             evolveSchema: Boolean = false): MergeResult = {
+             evolveSchema: Boolean = false): MergeResult = Trace.span("sources.merge") {
     require(keys.nonEmpty, "merge needs at least one key column")
     val src = source.cache()
     // ONE driver-side key pass for everything that needs the keys: the

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types._
 
+import graft.Trace
 import graft.sources.{TxnStats, TxnTable}
 
 /** AUTO-INJECTED dynamic file pruning — the optimizer-rule form of
@@ -110,17 +111,6 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
             e: java.util.Map.Entry[SkipKey, Option[Set[String]]]): Boolean =
           size() > 32
       })
-
-  /** Skip-cache traffic, exposed for ProfileWatch and the cache specs:
-    * (hits, misses). A miss is any live dim evaluation — including the
-    * uncacheable-dim and over-cap cases that deliberately never
-    * populate the cache. */
-  private val skipHits = new java.util.concurrent.atomic.AtomicLong
-  private val skipMisses = new java.util.concurrent.atomic.AtomicLong
-  def skipCacheCounters: (Long, Long) = (skipHits.get, skipMisses.get)
-  private[graft] def resetSkipCacheCounters(): Unit = {
-    skipHits.set(0); skipMisses.set(0)
-  }
 
   /** Canonicalized-plan equality implies identical ROWS only when every
     * leaf is provably immutable: a LocalRelation pins its data, a
@@ -294,8 +284,10 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
       dimPlan.canonicalized)
     val cacheable = cacheableDim(other)
     val cached = if (cacheable) skipCache.get(key) else null
-    if (cached != null) skipHits.incrementAndGet()
-    else skipMisses.incrementAndGet()
+    // skip-cache traffic: a miss is any live dim evaluation, including
+    // the uncacheable-dim and over-cap cases that never populate it
+    Trace.count(
+      if (cached != null) "dfp.skipCache.hit" else "dfp.skipCache.miss")
     val skipOpt =
       if (cached != null) cached
       else {
@@ -303,7 +295,8 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
         try {
           val keys = org.apache.spark.sql.graftshim.PlanDataFrame.ofRows(
             spark, dimPlan)
-          val s = TxnStats.dfpSkipSet(spark, root, column, keys, maxExactKeys)
+          val s = Trace.span("plans.dfp")(
+            TxnStats.dfpSkipSet(spark, root, column, keys, maxExactKeys))
           // failures are never cached; neither are mutable-leaf dims
           // (cacheableDim) or sets past the driver-heap cap
           if (cacheable && s.forall(_.size <= maxCachedSkipFiles))

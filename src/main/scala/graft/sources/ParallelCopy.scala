@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
 import graft.Overlap
 import org.apache.spark.SparkException
@@ -74,15 +73,6 @@ private[graft] object ParallelCopy {
                             onMissing: OnMissing = FailMissing)
       extends Serializable
 
-  /** Distinct worker threads used by the LAST batch — spec
-    * observability only (pins that a many-file batch actually fanned
-    * out instead of degrading to the driver thread). */
-  @volatile private[graft] var lastThreads: Int = 0
-
-  /** Which rung the LAST batch ran on: "inline", "pool" or
-    * "distributed" — spec observability only. */
-  @volatile private[graft] var lastMode: String = "inline"
-
   /** IO-bound fan-out width: capped well below the shuffle-partition
     * scale (copies contend on disk/network, not CPU) and by the batch
     * size itself. `spark.graft.replicate.parallelism` overrides per
@@ -143,20 +133,11 @@ private[graft] object ParallelCopy {
                                      tasks: Seq[CopyTask]): Long = {
     val slices = math.min(tasks.size,
       math.max(defaultParallelism, spark.sparkContext.defaultParallelism))
-    val threadAcc = spark.sparkContext.collectionAccumulator[String]("copyThreads")
-    val copied =
-      try
-        spark.sparkContext.parallelize(tasks, slices)
-          .mapPartitions { it =>
-            threadAcc.add(Thread.currentThread().getName)
-            Iterator.single(it.map(copyOne).sum)
-          }
-          .collect().sum
-      catch { case e: SparkException => throw originalOf(e) }
-    lastThreads = math.max(1,
-      new java.util.HashSet(threadAcc.value).size)
-    lastMode = "distributed"
-    copied
+    try
+      spark.sparkContext.parallelize(tasks, slices)
+        .mapPartitions(it => Iterator.single(it.map(copyOne).sum))
+        .collect().sum
+    catch { case e: SparkException => throw originalOf(e) }
   }
 
   /** Walk Spark's wrapper chain to the task's original exception. A
@@ -172,15 +153,7 @@ private[graft] object ParallelCopy {
     * only ever see a fully-landed batch. Single-item and empty batches
     * run inline (no pool spin-up for the steady-state O(Δ) sync that
     * ships one file). */
-  def foreachPar[A](items: Seq[A], parallelism: Int = 0)(f: A => Unit): Unit = {
-    val width = if (parallelism >= 1) parallelism else defaultParallelism
-    val threads = ConcurrentHashMap.newKeySet[String]()
-    try Overlap.map(SparkSession.getActiveSession, items, width, "replicate copy") { a =>
-      threads.add(Thread.currentThread().getName)
-      f(a)
-    } finally {
-      lastThreads = threads.size
-      lastMode = if (math.min(items.size, width) <= 1) "inline" else "pool"
-    }
-  }
+  def foreachPar[A](items: Seq[A])(f: A => Unit): Unit =
+    Overlap.map(SparkSession.getActiveSession, items, defaultParallelism,
+      "replicate copy")(f)
 }

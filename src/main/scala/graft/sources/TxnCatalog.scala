@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import graft.Overlap
+import graft.{Overlap, Trace}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-table ATOMIC commit over a set of [[TxnTable]]s — the missing
@@ -212,7 +212,7 @@ object TxnCatalog {
     * per-table vacuum), the standard re-read-and-retry loop applies. */
   def commitAll(spark: SparkSession, catalog: String, writes: Seq[Write],
                 expectedTxn: Option[Int] = None,
-                tag: Option[String] = None): Int = {
+                tag: Option[String] = None): Int = Trace.span("sources.commit") {
     require(writes.nonEmpty, "a transaction needs at least one write")
     require(writes.map(_.name).distinct.size == writes.size,
       s"one version per table per txn: duplicate names in ${writes.map(_.name)}")
@@ -772,7 +772,7 @@ object TxnCatalog {
   def deleteWhereMor(spark: SparkSession, catalog: String, name: String,
                      predicate: org.apache.spark.sql.Column,
                      expectedTxn: Option[Int] = None,
-                     tag: Option[String] = None): (Int, Long) = {
+                     tag: Option[String] = None): (Int, Long) = Trace.span("sources.delete") {
     checkName(name)
     val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
     require(txn >= 2, s"no committed transaction in $catalog to delete from")
@@ -905,7 +905,7 @@ object TxnCatalog {
     * full-fidelity (catalog restore, time travel, and per-table as-of
     * reads all work at the replica). Constraints files travel per sync.
     * Returns (replica head txn, files copied). */
-  def replicate(src: String, dst: String): (Int, Int) = {
+  def replicate(src: String, dst: String): (Int, Int) = Trace.span("sources.replicate") {
     val head = currentTxn(src)
     require(head >= 1, s"nothing to replicate: $src has no txns")
     val srcAbs = new File(src).getAbsolutePath
@@ -1216,7 +1216,7 @@ object TxnCatalog {
     * in any entry's lineage keeps all the files its log entry added
     * (even files a later overwrite removed — an older entry still
     * replays them). Returns the deleted file count. */
-  def vacuum(catalog: String): Int = {
+  def vacuum(catalog: String): Int = Trace.span("sources.vacuum") {
     val entries = txnFiles(catalog)
     val keepByTable = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.Set[Int]]
@@ -1295,7 +1295,7 @@ object TxnCatalog {
     * Replay here walks EXACTLY the entry's own version lineage, in
     * order: the entry IS the snapshot. */
   def read(spark: SparkSession, catalog: String, name: String,
-           asOf: Option[Int] = None): DataFrame = {
+           asOf: Option[Int] = None): DataFrame = Trace.span("sources.open") {
     checkName(name)
     require(entryAt(catalog, asOf).nonEmpty,
       s"no committed transaction in $catalog${asOf.fold("")(t => s" as of t$t")}")

@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 
-import graft.Overlap
+import graft.{Overlap, Trace}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -120,15 +120,6 @@ object TxnLayout {
 
   private def sidecarFile(table: String) =
     new File(table, "_graft_stats/cluster.json")
-
-  /** Phase timer for the layout profilers — prints only under
-    * GRAFT_PROFILE_LAYOUT, zero-cost otherwise. */
-  private def pt[A](l: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val r = f
-    if (sys.env.contains("GRAFT_PROFILE_LAYOUT"))
-      println(f"[optc] $l%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    r
-  }
 
   /** The clustering key expression for a (cols, curve, bits, quant)
     * choice — morton ([[graft.operators.Layout.mortonCodeN]]) or
@@ -398,7 +389,7 @@ object TxnLayout {
                         quantize: Boolean = true,
                         clipQuantile: Double = 0.0,
                         quantMode: String = "range",
-                        tieSalt: Boolean = false): Int = {
+                        tieSalt: Boolean = false): Int = Trace.span("sources.optimize") {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     require(quantMode == "range" || quantMode == "equidepth",
       s"unknown quantMode '$quantMode' (range|equidepth)")
@@ -423,8 +414,8 @@ object TxnLayout {
     val equidepth = quantize && quantMode == "equidepth"
     val measured =
       if (quantize)
-        pt("measure")(measureForOptimize(TxnTable.read(spark, table), cols, bits,
-          equidepth, clipQuantile))
+        measureForOptimize(TxnTable.read(spark, table), cols, bits,
+          equidepth, clipQuantile)
       else (Nil, Nil, Nil)
     val qbounds = measured._1
     val quant = measured._2
@@ -466,19 +457,19 @@ object TxnLayout {
         src0.repartitionByRange(numFiles, col("__z"))
           .sortWithinPartitions("__z"))
       .drop("__z")
-    val v = pt("commitRewrite")(TxnTable.commitRewrite(spark, rewritten, table, live))
+    val v = TxnTable.commitRewrite(spark, rewritten, table, live)
     val now = TxnTable.liveSplit(table)._1
-    val rng = pt("rangesOf")(rangesOf(spark, table, now, code))
-    pt("writeSpec")(writeSpec(table, ClusterSpec(cols, curve, bits, v,
+    val rng = rangesOf(spark, table, now, code)
+    writeSpec(table, ClusterSpec(cols, curve, bits, v,
       rng, quant, clipQuantile, qbounds, raw,
-      subBits, tieSalt)))
+      subBits, tieSalt))
     // index the clustering columns' min-max stats: they are exactly the
     // box-filter columns the layout serves (the whole point of the
     // rewrite is that their per-file intervals now prune), and the
     // metadata [[boundsStaleness]] reads. Unsupported column types
     // (float/double stats are refused) simply skip.
-    pt("refreshFooters")(TxnStats.refreshFromFootersMulti(spark, table, cols))
-    pt("refreshStats")(refreshStats(spark, table))
+    TxnStats.refreshFromFootersMulti(spark, table, cols)
+    refreshStats(spark, table)
     v
   }
 
@@ -504,7 +495,7 @@ object TxnLayout {
     * Returns (version, filesRewritten, filesKept) — version is the
     * current head when nothing needed doing. */
   def reclusterIncremental(spark: SparkSession, table: String,
-                           numFiles: Int = 0): (Int, Int, Int) = {
+                           numFiles: Int = 0): (Int, Int, Int) = Trace.span("sources.recluster") {
     val spec = readSpec(table).getOrElse(throw new IllegalStateException(
       s"$table has no cluster sidecar — run optimizeClustered first"))
     if (legacyOrdinalMismatch(spark, table, spec))
@@ -526,7 +517,7 @@ object TxnLayout {
       .filter(f => spec.ranges(f) == ((Long.MinValue, Long.MinValue))).toSet
     val hit: Set[String] = nullFiles ++ (
       if (clustered.isEmpty) Set.empty[String]
-      else pt("ri.hit") {
+      else {
         val ranges = spark.createDataFrame(
           clustered.map(f => (f, spec.ranges(f)._1, spec.ranges(f)._2)))
           .toDF("file", "lo", "hi")
@@ -606,8 +597,8 @@ object TxnLayout {
     }
     var tagged = taggedRows(rewriteSet, hitSet)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var segs = pt("ri.segs")(tagged.select("__seg").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq)
+    var segs = tagged.select("__seg").distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
     if (segs.size > maxSegments) {
       // hull fallback: pull every survivor inside [min, max] of the
       // stale codes — afterwards all rewrite codes share one gap
@@ -665,12 +656,10 @@ object TxnLayout {
         // byte-identical to the sequential form; a failed segment
         // cancels the others and propagates its ORIGINAL exception, and
         // the staged dirs stay ordinary vacuum orphans.
-        val added = pt("ri.write")(
-          Overlap.map(Some(spark), segs.zipWithIndex,
-            Overlap.confInt(spark, "spark.graft.recluster.writeParallelism", 4),
-            "recluster segment") { case (sg, i) => segJob(sg, i) }.flatten)
-        pt("ri.publish")(
-          TxnTable.publishRewrite(table, added, rewriteSet, Some(version)))
+        val added = Overlap.map(Some(spark), segs.zipWithIndex,
+          Overlap.confInt(spark, "spark.graft.recluster.writeParallelism", 4),
+          "recluster segment") { case (sg, i) => segJob(sg, i) }.flatten
+        TxnTable.publishRewrite(table, added, rewriteSet, Some(version))
       } finally tagged.unpersist() // incl. a failed segment write
     // sidecar: surviving entries stay as recorded; only the rewrite's
     // own new files are scanned for their ranges — O(rewritten)
@@ -678,12 +667,12 @@ object TxnLayout {
       clustered.contains(f) && !hitSet.contains(f) }
     val fresh = TxnTable.liveSplit(table)._1
       .filterNot(f => survivors.contains(f))
-    pt("ri.rangesOf+spec")(writeSpec(table, spec.copy(version = v,
-      ranges = survivors ++ rangesOf(spark, table, fresh, code))))
+    writeSpec(table, spec.copy(version = v,
+      ranges = survivors ++ rangesOf(spark, table, fresh, code)))
     // the rewrite's new files would otherwise sit unindexed (read by
     // every pruned scan) until someone remembers to refresh — each
     // refresh is O(new files) under the stats' own watermark
-    pt("ri.refreshStats")(refreshStats(spark, table))
+    refreshStats(spark, table)
     (v, rewriteSet.size, survivors.size)
   }
 
@@ -870,7 +859,7 @@ object TxnLayout {
                         numFiles: Int = 0,
                         maxClampedFraction: Double = 0.5,
                         maxFileSkew: Double = 8.0,
-                        minFilesForSkew: Int = 4): Option[(Int, Int, Int)] = {
+                        minFilesForSkew: Int = 4): Option[(Int, Int, Int)] = Trace.span("sources.maintain") {
     require(maxStaleFraction > 0.0, "maxStaleFraction must be positive")
     require(maxClampedFraction > 0.0, "maxClampedFraction must be positive")
     require(maxFileSkew > 1.0, "maxFileSkew must exceed 1")

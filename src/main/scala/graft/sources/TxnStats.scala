@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import graft.Overlap
+import graft.{Overlap, Trace}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -234,7 +234,8 @@ object TxnStats {
   /** Bring the stats for `column` up to the table's current version by
     * scanning ONLY the newly added files. Returns the number of files
     * indexed (0 when already fresh). Idempotent per version. */
-  def refresh(spark: SparkSession, table: String, column: String): Int = {
+  def refresh(spark: SparkSession, table: String,
+              column: String): Int = Trace.span("sources.stats") {
     val current = TxnTable.currentVersion(table)
     val wm = indexedVersion(table, column)
     if (wm >= current) return 0
@@ -324,7 +325,7 @@ object TxnStats {
     * skipped refresh costs IO, never rows) — the same contract the
     * per-column call sites already applied. */
   def refreshFromFootersMulti(spark: SparkSession, table: String,
-                              columns: Seq[String]): Unit = {
+                              columns: Seq[String]): Unit = Trace.span("sources.stats") {
     def one(c: String): Unit =
       try { refreshFromFooters(spark, table, c); () }
       catch { case scala.util.control.NonFatal(_) => () }
@@ -453,7 +454,7 @@ object TxnStats {
     * is resolved from the table schema; the footer's physical type must
     * agree or the file stays unindexed. */
   def refreshFromFooters(spark: SparkSession, table: String,
-                         column: String): Int = {
+                         column: String): Int = Trace.span("sources.stats") {
     val current = TxnTable.currentVersion(table)
     val wm = indexedVersion(table, column)
     if (wm >= current) return 0
@@ -550,7 +551,7 @@ object TxnStats {
     * mode) can decline rather than mis-price. Returns the merged
     * estimate. */
   def refreshNdv(spark: SparkSession, table: String,
-                 cols: Seq[String]): Long = {
+                 cols: Seq[String]): Long = Trace.span("sources.stats") {
     require(cols.nonEmpty, "ndv needs at least one column")
     val cur = TxnTable.currentVersion(table)
     val dir = ndvDir(table, cols)

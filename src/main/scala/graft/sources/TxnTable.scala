@@ -6,6 +6,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.Trace
+
 /** Versioned parquet table behind a transaction log — the Delta/Iceberg
   * pattern in its minimal honest form (engine-added, builder brief). The
   * reference overwrites its warehouse tables in place (pipeline.py's
@@ -474,7 +476,7 @@ object TxnTable {
     * (⇒ data loss if silently swallowed). */
   def commit(spark: SparkSession, df: DataFrame, table: String,
              overwrite: Boolean, expectedVersion: Option[Int] = None,
-             tag: Option[String] = None): Int = {
+             tag: Option[String] = None): Int = Trace.span("sources.commit") {
     val version = expectedVersion.getOrElse(currentVersion(table) + 1)
     require(version >= 1, s"expectedVersion must be >= 1, got $version")
     val removed = if (overwrite) liveFiles(table, Some(version - 1)) else Seq.empty
@@ -514,7 +516,7 @@ object TxnTable {
   def commitRewrite(spark: SparkSession, df: DataFrame, table: String,
                     removedFiles: Seq[String],
                     expectedVersion: Option[Int] = None,
-                    tag: Option[String] = None): Int = {
+                    tag: Option[String] = None): Int = Trace.span("sources.commit") {
     val version = expectedVersion.getOrElse(currentVersion(table) + 1)
     require(version >= 1, s"expectedVersion must be >= 1, got $version")
     val live = liveFiles(table, Some(version - 1)).toSet
@@ -637,7 +639,7 @@ object TxnTable {
     * version cancels to EMPTY — the payload-hash survivor suppression
     * proving the rewrite moved layout, not data. */
   def optimize(spark: SparkSession, table: String, numFiles: Int,
-               expectedVersion: Option[Int] = None): Int = {
+               expectedVersion: Option[Int] = None): Int = Trace.span("sources.optimize") {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val live = liveFiles(table, None)
     require(live.nonEmpty, s"nothing to optimize in $table")
@@ -655,7 +657,7 @@ object TxnTable {
     * version, commits nothing) when fewer than two small files exist. */
   def compactSmall(spark: SparkSession, table: String, smallBytes: Long,
                    numFiles: Int = 1,
-                   expectedVersion: Option[Int] = None): Int = {
+                   expectedVersion: Option[Int] = None): Int = Trace.span("sources.optimize") {
     require(numFiles >= 1 && smallBytes > 0, "bad compaction parameters")
     requireNoDv(table, "small-file compaction")
     val small = liveFiles(table, None)
@@ -805,7 +807,7 @@ object TxnTable {
     * publish, copies skip files already present, and a re-landed
     * publish is accepted iff its content lists match. Returns
     * (dst head version, files copied). */
-  def replicate(src: String, dst: String): (Int, Int) = {
+  def replicate(src: String, dst: String): (Int, Int) = Trace.span("sources.replicate") {
     val srcHead = currentVersion(src)
     require(srcHead >= 1, s"nothing to replicate: $src is empty")
     val srcAbs = new File(src).getAbsolutePath
@@ -1089,7 +1091,7 @@ object TxnTable {
     * spread's contract, as in Layout.zorderWrite). */
   def optimizeZorder(spark: SparkSession, table: String, xCol: String,
                      yCol: String, numFiles: Int,
-                     expectedVersion: Option[Int] = None): Int = {
+                     expectedVersion: Option[Int] = None): Int = Trace.span("sources.optimize") {
     import org.apache.spark.sql.functions.col
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val live = liveFiles(table, None)
@@ -1113,7 +1115,7 @@ object TxnTable {
     * rewritten). */
   def deleteWhere(spark: SparkSession, table: String,
                   predicate: org.apache.spark.sql.Column,
-                  expectedVersion: Option[Int] = None): (Int, Int) = {
+                  expectedVersion: Option[Int] = None): (Int, Int) = Trace.span("sources.delete") {
     import org.apache.spark.sql.functions.{coalesce => cls, input_file_name, lit, not}
     requireNoDv(table, "copy-on-write DELETE")
     val affectedAbs = read(spark, table)
@@ -1155,7 +1157,7 @@ object TxnTable {
     * first. Returns (version — current on a no-op — and rows marked). */
   def deleteWhereMor(spark: SparkSession, table: String,
                      predicate: org.apache.spark.sql.Column,
-                     expectedVersion: Option[Int] = None): (Int, Long) = {
+                     expectedVersion: Option[Int] = None): (Int, Long) = Trace.span("sources.delete") {
     import org.apache.spark.sql.functions.col
     val version = expectedVersion.getOrElse(currentVersion(table) + 1)
     require(version >= 1, s"expectedVersion must be >= 1, got $version")
@@ -1343,7 +1345,7 @@ object TxnTable {
     * ([[graft.operators.Incremental.applyCdc]]). */
   def changeFeed(spark: SparkSession, table: String, fromExclusive: Int,
                  toInclusive: Int, keys: Seq[String],
-                 updateImages: Boolean = false): DataFrame = {
+                 updateImages: Boolean = false): DataFrame = Trace.span("sources.open") {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "changeFeed needs key columns")
     require(fromExclusive >= 0 && fromExclusive < toInclusive &&
@@ -1456,7 +1458,7 @@ object TxnTable {
     * a later commit may ADD columns and earlier snapshots' rows
     * null-extend (schema evolution without rewriting history). */
   def read(spark: SparkSession, table: String, asOf: Option[Int] = None,
-           mergeSchema: Boolean = false): DataFrame = {
+           mergeSchema: Boolean = false): DataFrame = Trace.span("sources.open") {
     val (_, dvFiles) = liveSplit(table, asOf)
     if (dvFiles.isEmpty) {
       val (files, _) = liveSplit(table, asOf)
@@ -1595,7 +1597,7 @@ object TxnTable {
     (keep, doomed)
   }
 
-  def vacuum(table: String, retainFrom: Int): Int = {
+  def vacuum(table: String, retainFrom: Int): Int = Trace.span("sources.vacuum") {
     val (_, doomed) = reclaimable(table, retainFrom)
     // deletes are order-free and idempotent (a missing file deletes to
     // false, never throws) — fan them out like the replication copies:

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.File
 
-import graft.SparkSpec
+import graft.{SparkSpec, Trace}
 import graft.sources.{TxnStats, TxnTable}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
@@ -287,16 +287,17 @@ class AutoFilePruneSpec extends SparkSpec {
       .toDF("dk", "tag").coalesce(1), dimT, overwrite = false)
     val q = TxnTable.read(spark, factT).join(TxnTable.read(spark, dimT),
       col("k") === col("dk"))
-    AutoFilePrune.resetSkipCacheCounters()
-    assert(q.collect().length == 3)
-    val (h1, m1) = AutoFilePrune.skipCacheCounters
-    assert(m1 >= 1, "first action must evaluate the dim live")
+    val (hit, miss) = ("dfp.skipCache.hit", "dfp.skipCache.miss")
+    val (rows1, r1) = Trace.record(spark)(q.collect().length)
+    assert(rows1 == 3)
+    assert(r1.count(miss) >= 1, "first action must evaluate the dim live")
     // SECOND action on the SAME DataFrame: same analyzed tree, same
     // canonicalized dim → every re-optimize hits
-    assert(q.count() == 3)
-    val (h2, m2) = AutoFilePrune.skipCacheCounters
-    assert(h2 > h1, s"second action must hit the skip cache ($h1→$h2)")
-    assert(m2 == m1, s"second action must not re-evaluate the dim ($m1→$m2)")
+    val (rows2, r2) = Trace.record(spark)(q.count())
+    assert(rows2 == 3)
+    assert(r2.count(hit) > 0, "second action must hit the skip cache")
+    assert(r2.count(miss) == 0,
+      s"second action must not re-evaluate the dim (${r2.count(miss)} misses)")
     // dim snapshot CHANGES (new key 150 lands in the previously skipped
     // [100,200) file): a fresh read pins a new file index → cache MISS
     // → the prune sees the new key and keeps its file
@@ -304,9 +305,9 @@ class AutoFilePruneSpec extends SparkSpec {
       dimT, overwrite = false)
     val q2 = TxnTable.read(spark, factT).join(TxnTable.read(spark, dimT),
       col("k") === col("dk"))
-    assert(factFiles(q2) == 4, "the new dim key must defeat the old skip set")
-    val (_, m3) = AutoFilePrune.skipCacheCounters
-    assert(m3 > m2, "a changed dim snapshot must MISS, never reuse stale keys")
+    val (files2, r3) = Trace.record(spark)(factFiles(q2))
+    assert(files2 == 4, "the new dim key must defeat the old skip set")
+    assert(r3.count(miss) > 0, "a changed dim snapshot must MISS, never reuse stale keys")
     assert(q2.collect().length == 4)
   }
 

@@ -17,6 +17,7 @@ class CatalogReplicateSpec extends SparkSpec {
 
   import spark.implicits._
   import graft.sources.TxnCatalog.Write
+  import ReplicateSpec.copyRung
 
   private def fresh(name: String): String = {
     val p = s"/root/repo/target/tmp/spec_catrepl_$name"
@@ -235,11 +236,10 @@ class CatalogReplicateSpec extends SparkSpec {
       Write("fact", spark.range(0, 2000)
         .select(col("id").as("k"), (col("id") * 2).as("v")).repartition(24)),
       Write("dim", df(0, 60).repartition(6))))
-    val (t, copied) = TxnCatalog.replicate(src, dst)
+    val ((t, copied), _, width) = copyRung(spark)(TxnCatalog.replicate(src, dst))
     assert(t == 1)
     assert(copied >= 32, s"30 data files + 2 log entries, got $copied")
-    assert(ParallelCopy.lastThreads > 1,
-      s"a 30-file txn must fan out, used ${ParallelCopy.lastThreads} thread(s)")
+    assert(width > 1, s"a 30-file txn must fan out, used $width thread(s)")
     Seq("fact", "dim").foreach(n => assert(contentOf(dst, n) == contentOf(src, n)))
     // resume semantics unchanged: a re-sync copies nothing
     assert(TxnCatalog.replicate(src, dst) == ((1, 0)))
@@ -253,12 +253,11 @@ class CatalogReplicateSpec extends SparkSpec {
       Write("dim", df(0, 60).repartition(6))))
     spark.conf.set("spark.graft.replicate.distributedThreshold", "2")
     try {
-      val (t, copied) = TxnCatalog.replicate(src, dst)
+      val ((t, copied), rung, _) = copyRung(spark)(TxnCatalog.replicate(src, dst))
       assert(t == 1)
       assert(copied >= 32, s"30 data files + 2 log entries, got $copied")
-      assert(ParallelCopy.lastMode == "distributed",
-        s"a 30-file txn over the threshold must run as a Spark job, " +
-          s"ran ${ParallelCopy.lastMode}")
+      assert(rung == "distributed",
+        s"a 30-file txn over the threshold must run as a Spark job, ran $rung")
       // resume: a re-sync copies nothing, distributed or not
       assert(TxnCatalog.replicate(src, dst) == ((1, 0)))
     } finally

@@ -4,8 +4,9 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, Trace}
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** O(Δ) cross-site replication on the txn log: seed snapshot, suffix
@@ -15,6 +16,7 @@ import org.apache.spark.sql.functions._
 class ReplicateSpec extends SparkSpec {
 
   import spark.implicits._
+  import ReplicateSpec.copyRung
 
   private def fresh(name: String): String = {
     val p = s"/root/repo/target/tmp/spec_replica_$name"
@@ -343,11 +345,10 @@ class ReplicateSpec extends SparkSpec {
 
     // resume: the 17 finished copies skip, the 23 missing ones (the
     // tmp-only straggler included) copy fresh, v1 publishes once
-    val (v, copied) = TxnTable.replicate(src, dst)
+    val ((v, copied), _, width) = copyRung(spark)(TxnTable.replicate(src, dst))
     assert(v == 1)
     assert(copied == 23, s"resume must copy exactly the missing files, got $copied")
-    assert(ParallelCopy.lastThreads > 1,
-      s"a 23-file batch must fan out, used ${ParallelCopy.lastThreads} thread(s)")
+    assert(width > 1, s"a 23-file batch must fan out, used $width thread(s)")
     assert(contentOf(dst) == contentOf(src))
     assert(tmp.isFile,
       "the dead tmp is an inert orphan — never promoted, never mistaken for the target")
@@ -357,9 +358,9 @@ class ReplicateSpec extends SparkSpec {
       spark.range(4000, 5000).select(col("id").as("k"), (col("id") % 7).as("p"))
         .repartition(20),
       src, overwrite = false)
-    val (v2, copied2) = TxnTable.replicate(src, dst)
+    val ((v2, copied2), _, width2) = copyRung(spark)(TxnTable.replicate(src, dst))
     assert(v2 == 2 && copied2 == 20)
-    assert(ParallelCopy.lastThreads > 1)
+    assert(width2 > 1)
     assert(contentOf(dst) == contentOf(src))
   }
 
@@ -376,12 +377,11 @@ class ReplicateSpec extends SparkSpec {
         .repartition(40),
       src, overwrite = false)
     distributed {
-      val (v, copied) = TxnTable.replicate(src, dst)
+      val ((v, copied), rung, width) = copyRung(spark)(TxnTable.replicate(src, dst))
       assert(v == 1 && copied == 40)
-      assert(ParallelCopy.lastMode == "distributed",
-        s"a 40-file seed over the threshold must run as a Spark job, " +
-          s"ran ${ParallelCopy.lastMode}")
-      assert(ParallelCopy.lastThreads > 1)
+      assert(rung == "distributed",
+        s"a 40-file seed over the threshold must run as a Spark job, ran $rung")
+      assert(width > 1)
     }
     assert(contentOf(dst) == contentOf(src))
     // Δ sync over the threshold distributes too; resume re-sync is a no-op
@@ -390,8 +390,8 @@ class ReplicateSpec extends SparkSpec {
         .repartition(20),
       src, overwrite = false)
     distributed {
-      assert(TxnTable.replicate(src, dst) == ((2, 20)))
-      assert(ParallelCopy.lastMode == "distributed")
+      val (synced, rung, _) = copyRung(spark)(TxnTable.replicate(src, dst))
+      assert(synced == ((2, 20)) && rung == "distributed")
       assert(TxnTable.replicate(src, dst) == ((2, 0)))
     }
     assert(contentOf(dst) == contentOf(src))
@@ -399,8 +399,8 @@ class ReplicateSpec extends SparkSpec {
     // threshold: the inline rung still catches the steady state
     commitRange(src, 5000, 5010)
     distributed {
-      assert(TxnTable.replicate(src, dst) == ((3, 1)))
-      assert(ParallelCopy.lastMode == "inline")
+      assert(copyRung(spark)(TxnTable.replicate(src, dst)) ==
+        (((3, 1), "inline", 1)))
     }
   }
 
@@ -427,11 +427,11 @@ class ReplicateSpec extends SparkSpec {
       s".${new File(live(17)).getName}-deadbeef.tmp")
     Files.write(tmp.toPath, Array[Byte](1, 2, 3))
     distributed {
-      val (v, copied) = TxnTable.replicate(src, dst)
+      val ((v, copied), rung, _) = copyRung(spark)(TxnTable.replicate(src, dst))
       assert(v == 1)
       assert(copied == 23,
         s"distributed resume must copy exactly the missing files, got $copied")
-      assert(ParallelCopy.lastMode == "distributed")
+      assert(rung == "distributed")
     }
     assert(contentOf(dst) == contentOf(src))
     assert(tmp.isFile, "the dead tmp stays an inert orphan under the job path")
@@ -482,12 +482,28 @@ class ReplicateSpec extends SparkSpec {
       src, overwrite = false)
     spark.conf.set("spark.graft.replicate.parallelism", "2")
     try {
-      val (v, copied) = TxnTable.replicate(src, dst)
+      val ((v, copied), rung, width) = copyRung(spark)(TxnTable.replicate(src, dst))
       assert(v == 1 && copied == 20)
-      assert(ParallelCopy.lastMode == "pool")
-      assert(ParallelCopy.lastThreads <= 2,
-        s"a width-2 conf must bound the pool, used ${ParallelCopy.lastThreads}")
+      assert(rung == "pool")
+      assert(width <= 2, s"a width-2 conf must bound the pool, used $width")
     } finally spark.conf.unset("spark.graft.replicate.parallelism")
     assert(contentOf(dst) == contentOf(src))
+  }
+}
+
+object ReplicateSpec {
+
+  /** Run `body` under [[Trace.record]] and tell which rung its
+    * replication copies ran on, with their width: "distributed" is a
+    * copy job under `sources.replicate` (width = its tasks), "pool" is
+    * Overlap task spans under it (width = their distinct threads), and
+    * "inline" is neither (width 1). */
+  def copyRung[A](spark: SparkSession)(body: => A): (A, String, Int) = {
+    val (out, report) = Trace.record(spark)(body)
+    val job = report("sources.replicate")
+    val pool = report("sources.replicate/replicate copy")
+    if (job.jobs > 0) (out, "distributed", job.tasks)
+    else if (pool.spans > 0) (out, "pool", pool.threads)
+    else (out, "inline", 1)
   }
 }

@@ -16,6 +16,7 @@ class TxnCatalogSpec extends SparkSpec {
 
   import spark.implicits._
   import TxnCatalog.Write
+  import ReplicateSpec.copyRung
 
   private def freshCatalog(name: String): String = {
     val p = s"/root/repo/target/tmp/spec_cat_$name"
@@ -421,10 +422,11 @@ class TxnCatalogSpec extends SparkSpec {
       val dst = freshCatalog("conf_typo_dst")
       TxnTable.commit(spark, spark.range(0, 200).repartition(8).toDF("id"),
         src, overwrite = false)
-      assert(TxnTable.replicate(src, dst) == (1, 8))
       // the default width fans out on driver threads; the default
       // threshold (256 files) keeps 8 files off the distributed rung
-      assert(ParallelCopy.lastMode == "pool" && ParallelCopy.lastThreads > 1)
+      val ((v, copied), rung, width) = copyRung(spark)(TxnTable.replicate(src, dst))
+      assert((v, copied) == ((1, 8)))
+      assert(rung == "pool" && width > 1)
     } finally keys.foreach(spark.conf.unset)
   }
 }
