@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import org.apache.spark.sql.types._
 
 import graft.Trace
-import graft.sources.{TxnStats, TxnTable}
+import graft.sources.{MetaStore, TxnStats, TxnTable}
 
 /** AUTO-INJECTED dynamic file pruning — the optimizer-rule form of
   * [[graft.sources.TxnStats.dfpRead]]: a user writing the PLAIN star
@@ -84,33 +84,28 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
-  /** MEMOIZED skip sets. The same logical join is re-optimized several
-    * times per query — every action wraps the shared analyzed tree in a
-    * fresh QueryExecution (a pruned scan lives only in the rewritten
-    * output tree, so the tag that stops re-evaluation can't ride
-    * along), and a lifecycle query replans its star after every
-    * commit — and each re-run re-paid the plan-time dim evaluation
-    * (2 small Spark jobs + a sidecar read). The key pins everything the
-    * answer depends on: the table root and column, the stats
-    * WATERMARK VERSION (a refresh bumps it → miss), the exact-key cap,
-    * and the CANONICALIZED dim subplan — canonical equality is
-    * semantic equality (same rows ⇒ same keys ⇒ same skip set), and a
-    * dim whose underlying relation instance changed (new files, new
-    * LocalRelation data) never compares equal. Per-file sidecar bounds
-    * are immutable facts about immutable files, so a hit can never be
-    * unsound — at worst a vacuumed file stays in the set, where
-    * subtracting it from the scan's pinned list is a no-op. LRU-bounded;
-    * values are file-name sets, metadata-sized. */
+  /** MEMOIZED skip sets, in [[MetaStore]] under `dfp.skipCache`. The
+    * same logical join is re-optimized several times per query — every
+    * action wraps the shared analyzed tree in a fresh QueryExecution (a
+    * pruned scan lives only in the rewritten output tree, so the tag
+    * that stops re-evaluation can't ride along), and a lifecycle query
+    * replans its star after every commit — and each re-run re-paid the
+    * plan-time dim evaluation (2 small Spark jobs + a sidecar read). The
+    * key pins everything the answer depends on: the table root and
+    * column, the stats WATERMARK VERSION read live from the sidecar (a
+    * refresh by any process bumps it → miss), the exact-key cap, and the
+    * CANONICALIZED dim subplan — canonical equality is semantic equality
+    * (same rows ⇒ same keys ⇒ same skip set), and a dim whose underlying
+    * relation instance changed (new files, new LocalRelation data) never
+    * compares equal. Per-file sidecar bounds are immutable facts about
+    * immutable files, so a hit can never be unsound — at worst a
+    * vacuumed file stays in the set, where subtracting it from the
+    * scan's pinned list is a no-op. Values are file-name sets weighed by
+    * their size; a set past the store's per-entry bound still prunes,
+    * it just re-evaluates live. */
   private final case class SkipKey(root: String, column: String,
                                    watermark: Int, maxKeys: Long,
                                    dim: LogicalPlan)
-  private val skipCache: java.util.Map[SkipKey, Option[Set[String]]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SkipKey, Option[Set[String]]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[SkipKey, Option[Set[String]]]): Boolean =
-          size() > 32
-      })
 
   /** Canonicalized-plan equality implies identical ROWS only when every
     * leaf is provably immutable: a LocalRelation pins its data, a
@@ -139,12 +134,6 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
       (64L * 1024 * 1024).toString).toLong
   private def maxExactKeys: Long =
     conf.getConfString("spark.graft.autoDfp.maxExactKeys", "1000000").toLong
-  /** Driver-heap bound on one CACHED skip set: in the exact-key regime
-    * a skip set can name nearly every file of a very large table, and
-    * 32 LRU slots of full file-name sets is not "metadata-sized" any
-    * more. Oversized sets still prune — they just re-evaluate live. */
-  private def maxCachedSkipFiles: Int =
-    conf.getConfString("spark.graft.autoDfp.maxCachedSkipFiles", "8192").toInt
 
   /** Micro-batch work replans EVERY batch: a foreachBatch maintenance
     * join (the streaming-sink lifecycle) would re-pay the plan-time
@@ -257,7 +246,7 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     val column = sAttr.name
     if (already.contains(column)) return side
     val root = txnRootOf(fsRel).getOrElse(return side)
-    if (!TxnStats.indexedColumnsCached(root).contains(column)) return side
+    if (!TxnStats.indexedColumns(root).contains(column)) return side
     if (!typesOk(sAttr.dataType, oAttr.dataType)) return side
     // non-determinism anywhere under O: plan-time keys could disagree
     // with O's runtime rows. Sample carries its non-determinism in the
@@ -279,38 +268,32 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     if (scanFiles.size < 2) return side
 
     val dimPlan = Project(Seq(oAttr), other)
-    val key = SkipKey(rootAbs, column,
-      TxnStats.indexedVersionCached(root, column), maxExactKeys,
-      dimPlan.canonicalized)
-    val cacheable = cacheableDim(other)
-    val cached = if (cacheable) skipCache.get(key) else null
-    // skip-cache traffic: a miss is any live dim evaluation, including
-    // the uncacheable-dim and over-cap cases that never populate it
-    Trace.count(
-      if (cached != null) "dfp.skipCache.hit" else "dfp.skipCache.miss")
+    def evaluate(): Option[Set[String]] = {
+      inFlight.set(true)
+      try {
+        val keys = org.apache.spark.sql.graftshim.PlanDataFrame.ofRows(
+          spark, dimPlan)
+        Trace.span("plans.dfp")(
+          TxnStats.dfpSkipSet(spark, root, column, keys, maxExactKeys))
+      } finally inFlight.set(false)
+    }
     val skipOpt =
-      if (cached != null) cached
-      else {
-        inFlight.set(true)
-        try {
-          val keys = org.apache.spark.sql.graftshim.PlanDataFrame.ofRows(
-            spark, dimPlan)
-          val s = Trace.span("plans.dfp")(
-            TxnStats.dfpSkipSet(spark, root, column, keys, maxExactKeys))
-          // failures are never cached; neither are mutable-leaf dims
-          // (cacheableDim) or sets past the driver-heap cap
-          if (cacheable && s.forall(_.size <= maxCachedSkipFiles))
-            skipCache.put(key, s)
-          s
-        } catch {
-          // the prune is an optimization: any surprise (concurrent
-          // vacuum of the sidecar, type drift) declines, never fails
-          // the query
-          case scala.util.control.NonFatal(_) =>
-            inFlight.set(false)
-            markMeasured(scan, already + column)
-            return side
-        } finally inFlight.set(false)
+      try {
+        // failures are never cached, nor are mutable-leaf dims
+        // (cacheableDim); an uncacheable dim counts as a miss
+        if (cacheableDim(other))
+          MetaStore.memo[Option[Set[String]]]("dfp.skipCache",
+            SkipKey(rootAbs, column, TxnStats.indexedVersion(root, column),
+              maxExactKeys, dimPlan.canonicalized))(
+            _.fold(0L)(_.size.toLong))(evaluate())
+        else { Trace.count("dfp.skipCache.miss"); evaluate() }
+      } catch {
+        // the prune is an optimization: any surprise (concurrent
+        // vacuum of the sidecar, type drift) declines, never fails
+        // the query
+        case scala.util.control.NonFatal(_) =>
+          markMeasured(scan, already + column)
+          return side
       }
 
     val keep = skipOpt match {
@@ -362,12 +345,9 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   /** The txn-table root owning EVERY file of the scan (the dir with a
-    * `_graft_log`), if one exists — MEMOIZED file-system ancestry
-    * ([[TxnTable.tableRootOfCached]]): the decline path runs per join
-    * side per optimizer pass per action, and re-paying an ancestry
-    * walk of stat() calls each time is per-plan object-store metadata
-    * IO at 100 TB (r16 measured it as +0.1–0.6 s on every small
-    * join-bearing query). */
+    * `_graft_log`), if one exists. Resolved live on every call, one
+    * ancestry walk per distinct parent dir, so a table another process
+    * creates under a previously plain dir prunes on its next plan. */
   private[plans] def txnRootOf(fs: HadoopFsRelation): Option[String] = {
     val files = fs.location.inputFiles
     if (files.isEmpty) return None
@@ -378,7 +358,7 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
         new File(new java.net.URI(f)).getAbsolutePath else f
       new File(p).getParentFile
     }.distinct
-    val roots = parents.map(TxnTable.tableRootOfCached(_).map(_.getAbsolutePath))
+    val roots = parents.map(TxnTable.tableRootOf(_).map(_.getAbsolutePath))
     if (roots.forall(_.isDefined) && roots.flatten.distinct.size == 1)
       roots.head
     else None

@@ -1472,16 +1472,17 @@ object SourceQueries {
     //    pruning a strict file subset — impossible under the old
     //    bounds. Content equality proves only layout moved.
     sql("q_layout_regrow",
-      """WITH grown AS (
+      """WITH shift AS (SELECT MAX(o_orderkey) + 1 AS k FROM orders),
+        |grown AS (
         |  SELECT o_orderkey * 1000003 AS x, o_orderkey AS v FROM orders
         |  UNION ALL
-        |  SELECT (o_orderkey + 100000) * 1000003, o_orderkey + 100000
-        |  FROM orders)
+        |  SELECT (o_orderkey + k) * 1000003, o_orderkey + k
+        |  FROM orders, shift)
         |SELECT COUNT(*) AS cnt, CAST(SUM(v) AS BIGINT) AS v_sum,
         |       (SELECT COUNT(*) FROM orders) AS b_clamped,
         |       CAST(0 AS BIGINT) AS d_clamped,
         |       CAST(0 AS BIGINT) AS kept,
-        |       (SELECT (MAX(o_orderkey) + 100000) * 1000003 FROM orders)
+        |       (SELECT (2 * MAX(o_orderkey) + 1) * 1000003 FROM orders)
         |         AS new_qhi,
         |       TRUE AS prune_strict
         |FROM grown""".stripMargin) { (s, d) =>
@@ -1494,11 +1495,15 @@ object SourceQueries {
       TxnTable.commit(s, o.withColumn("y", col("v") * 999983L)
         .select("x", "y", "v"), table, overwrite = false)
       TxnLayout.optimizeClustered(s, table, Seq("x", "y"), numFiles = 4)
-      // the domain grows: a same-sized batch entirely beyond the bounds
+      val maxOk = Tables.orders(s, d)
+        .agg(max(col("o_orderkey").cast("long"))).head().getLong(0)
+      // the domain grows: a same-sized batch entirely beyond the bounds,
+      // shifted past the largest key at every scale factor
+      val shift = maxOk + 1
       TxnTable.commit(s, Tables.orders(s, d).select(
-          ((col("o_orderkey") + 100000L) * 1000003L).as("x"),
-          ((col("o_orderkey") + 100000L) * 999983L).as("y"),
-          (col("o_orderkey") + 100000L).as("v")),
+          ((col("o_orderkey") + shift) * 1000003L).as("x"),
+          ((col("o_orderkey") + shift) * 999983L).as("y"),
+          (col("o_orderkey") + shift).as("v")),
         table, overwrite = false)
       val (bClamped, _) = TxnLayout.boundsStaleness(s, table)
       val r = TxnLayout.maintainClustered(s, table,
@@ -1506,11 +1511,9 @@ object SourceQueries {
       val (dClamped, _) = TxnLayout.boundsStaleness(s, table)
       val qhi = TxnLayout.readSpec(table).get
         .quant.find(_._1 == "x").get._3
-      val maxOk = Tables.orders(s, d)
-        .agg(max(col("o_orderkey").cast("long"))).head().getLong(0)
       // a box in the GROWN region prunes only after the re-measure
       val (toRead, nLive) = TxnStats.pruneFiles(s, table, "x",
-        (100000L + maxOk / 2) * 1000003L, (100000L + maxOk) * 1000003L)
+        (shift + maxOk / 2) * 1000003L, (shift + maxOk) * 1000003L)
       TxnTable.read(s, table)
         .agg(count(lit(1)).as("cnt"), sum("v").as("v_sum"))
         .withColumn("b_clamped", lit(bClamped))

@@ -18,22 +18,14 @@ import org.apache.spark.sql.types.StructType
   * The key is the EXACT file list (order-insensitive) plus the
   * mergeSchema flag and the one conf that changes parquet type mapping
   * (`nanosAsLong`): parquet files are immutable and a txn snapshot pins
-  * its list, so the same key can never map to a different schema —
-  * correctness needs no invalidation, only an LRU bound. A changed
-  * snapshot (new/removed files) is a different key and re-infers.
-  * Inference itself still runs exactly once per distinct file set, via
-  * the ordinary reader, so the cached value is byte-identical to what
-  * every subsequent read would have inferred. */
+  * its list, so the same key can never map to a different schema, and
+  * a changed snapshot (new or removed files, whichever process wrote
+  * them) is a different key and re-infers. Entries live in
+  * [[MetaStore]], weighed by their path count. Inference itself still
+  * runs exactly once per distinct file set, via the ordinary reader, so
+  * the cached value is byte-identical to what every subsequent read
+  * would have inferred. */
 object SchemaCache {
-
-  private val cache: java.util.Map[(Vector[String], Boolean, String), StructType] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(Vector[String], Boolean, String), StructType](
-        64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(Vector[String], Boolean, String), StructType])
-            : Boolean = size() > 256
-      })
 
   private def nanosConf(spark: SparkSession): String =
     try spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
@@ -42,15 +34,11 @@ object SchemaCache {
   def schemaOf(spark: SparkSession, paths: Seq[String],
                mergeSchema: Boolean = false): StructType = {
     val key = (paths.sorted.toVector, mergeSchema, nanosConf(spark))
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
+    MetaStore.memo[StructType]("meta.schema", key)(_ => paths.size.toLong) {
       val reader =
         if (mergeSchema) spark.read.option("mergeSchema", "true")
         else spark.read
-      val s = reader.parquet(paths: _*).schema
-      cache.put(key, s)
-      s
+      reader.parquet(paths: _*).schema
     }
   }
 

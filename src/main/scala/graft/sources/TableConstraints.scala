@@ -420,22 +420,6 @@ object TableConstraints {
   val BroadcastMaxRowsKey = "spark.graft.enforce.broadcastMaxRows"
   private val BroadcastMaxRowsDefault = "1000000"
 
-  /** Cached [[metadataRowCountUncached]]: the gate runs once per
-    * micro-batch per FK, and re-walking a 10k-file static parent's
-    * footers per 5-second trigger is ~170M footer reads a day for a
-    * value that almost never changes. Txn tables key on
-    * currentVersion; plain dirs key on a walk digest (names + lengths
-    * + mtimes — the listing without the footer reads). LRU-capped like
-    * [[TxnTable.resolveVersion]]'s index; an eviction costs one fresh
-    * sweep, never a wrong answer. */
-  private val rowCountCache: java.util.Map[String, (String, Long)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (String, Long)](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (String, Long)]): Boolean =
-          size() > 64
-      })
-
   private def walkParquet(d: File): Seq[File] =
     Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq.flatMap { f =>
       if (f.isFile && f.getName.endsWith(".parquet")) Seq(f)
@@ -444,30 +428,23 @@ object TableConstraints {
       else Nil
     }
 
-  /** Row count of a table from METADATA alone — log + stats sidecars +
-    * footers for a txn table, a footer sweep for a plain parquet dir;
-    * never a data scan (this gates a per-micro-batch probe). Anything
-    * unreadable counts as LARGE: the semi-prune fallback is always
-    * correct, a failed broadcast is an OOM. */
+  /** Row count of a table from METADATA alone — the memoized snapshot
+    * for a txn table, a footer sweep for a plain parquet dir; never a
+    * data scan (this gates a per-micro-batch probe). A plain dir's sum
+    * is memoized in [[MetaStore]] on its walk stamp (path, length and
+    * mtime of every file — the listing without the footer reads), so a
+    * 10k-file static parent is not re-swept per 5-second trigger.
+    * Anything unreadable counts as LARGE: the semi-prune fallback is
+    * always correct, a failed broadcast is an OOM. */
   private def metadataRowCount(table: String): Long =
     try {
-      val key = canon(table)
-      val (stamp, count) =
-        if (TxnTable.logDir(table).isDirectory) {
-          val v = TxnTable.currentVersion(table)
-          (s"txn:$v", () => TxnTable.snapshotRowCount(table))
-        } else {
-          val files = walkParquet(new File(table))
-          (files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-            .sorted.mkString("|"),
-            () => files.map(TxnTable.footerRowCount).sum)
-        }
-      val cached = rowCountCache.get(key)
-      if (cached != null && cached._1 == stamp) cached._2
+      if (TxnTable.logDir(table).isDirectory) TxnTable.snapshotRowCount(table)
       else {
-        val n = count()
-        rowCountCache.put(key, (stamp, n))
-        n
+        val files = walkParquet(new File(table))
+        val stamp = files.map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
+          .sorted
+        MetaStore.memo[Long]("meta.rowCount", stamp)(_ => files.size.toLong)(
+          files.map(TxnTable.footerRowCount).sum)
       }
     } catch { case _: Exception => Long.MaxValue }
 

@@ -1060,10 +1060,6 @@ object TxnCatalog {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    // the sync copies `_graft_log` entries directly (no publish), so
-    // tables can be BORN at dst here — stale negative root resolutions
-    // would hide them from the auto-DFP rule
-    TxnTable.invalidateRootCache()
     (currentTxn(dst), copied.get)
   }
 
@@ -1321,10 +1317,10 @@ object TxnCatalog {
       }
   }
 
-  /** Snapshot row count of a catalog table, METADATA-ONLY: commit-time
-    * recorded counts with cached-footer fallback — never a Spark job.
-    * Deletion-vector rows subtract, mirroring
-    * [[TxnTable.snapshotRowCount]]. The emptiness probe a search
+  /** Snapshot row count of a catalog table, METADATA-ONLY: the same
+    * per-file counts and deletion-vector subtraction as
+    * [[TxnTable.snapshotRowCount]], over the lineage-pinned live set —
+    * never a Spark job. The emptiness probe a search
     * overlay consults before planning anti-joins/unions over a table
     * that is provably empty. Throws IllegalArgumentException when the
     * table does not exist in the snapshot (same contract as [[read]]). */
@@ -1336,12 +1332,7 @@ object TxnCatalog {
         s"table '$name' does not exist in $catalog" +
           asOf.fold("")(t => s" as of t$t")))
     val table = tablePath(catalog, name)
-    val live = liveForLineage(table, lineage)
-    val (dv, data) = live.partition(_.startsWith("dv/"))
-    val recorded = TxnTable.recordedRowCounts(table)
-    def rows(rel: Seq[String]): Long =
-      rel.map(f => recorded.getOrElse(f,
-        TxnTable.footerRowCount(new File(table, f)))).sum
-    rows(data) - rows(dv)
+    TxnTable.netRows(TxnTable.fileRowCounts(table,
+      liveForLineage(table, lineage)))
   }
 }

@@ -48,13 +48,15 @@ object TxnStats {
   private def wmFile(table: String, column: String) =
     new File(statsDir(table, column), "_watermark.json")
 
-  /** True when the column's stats dir holds actual index rows — a dir
-    * carrying only its watermark (every file so far DECLINED footer
-    * indexing, e.g. an INT96-timestamp table) must read as "nothing
-    * indexed", not crash `spark.read.parquet` on a parquet-less dir. */
-  private def hasStatsRows(sd: File): Boolean =
-    sd.isDirectory && Option(sd.listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isFile && f.getName.endsWith(".parquet"))
+  /** The parquet parts of a column's stats dir, sorted. Empty for a
+    * dir carrying only its watermark (every file so far DECLINED footer
+    * indexing, e.g. an INT96-timestamp table): that reads as "nothing
+    * indexed", not a crash of `spark.read.parquet` on a parquet-less
+    * dir. */
+  private def statsParts(sd: File): Seq[String] =
+    Option(sd.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getName).sorted.toSeq
 
   /** The stats-storable types. Bounds under every one of these are
     * exact total orders; floats are excluded (NaN), binary/complex are
@@ -108,116 +110,41 @@ object TxnStats {
       StructField("file", StringType, nullable = false),
       StructField("min", dt), StructField("max", dt),
       StructField("n_rows", LongType, nullable = false))), rows)
-    invalidateMeta(table)
   }
 
-  /** MEMOIZED sidecar metadata for planning-time callers. The auto-DFP
-    * decline path re-lists the stats dir ([[indexedColumns]]) and
-    * re-reads the watermark file ([[indexedVersion]]) per join side,
-    * per equi-conjunct, per optimizer fixed-point pass, on EVERY
-    * action — local stat() noise, but per-plan object-store metadata
-    * IO at 100 TB. The only in-JVM writers (the refreshers, via
-    * writeStatsRows/writeWatermark) invalidate the table's entries, so
-    * in-JVM reads are exact. A cross-JVM writer is invisible until
-    * eviction: the stale read then at worst MISSES a prune or keys the
-    * skip cache on an older watermark — both sound, because per-file
-    * sidecar bounds are immutable facts about immutable files. */
-  private def lru[K, V](cap: Int): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          size() > cap
-      })
-  private val colsCache: java.util.Map[String, Seq[String]] = lru(256)
-  private val wmCache: java.util.Map[(String, String), Integer] = lru(1024)
-  private val statsRowsCache
-      : java.util.Map[(String, String, Int), Option[(StructType, Seq[Row])]] =
-    lru(64)
-  /** Above this, a sidecar's rows are read live instead of cached —
-    * the LRU must stay metadata-sized on the driver heap. */
-  private val statsMaxCachedRows = 16384
-
-  private def invalidateMeta(table: String): Unit = {
-    val abs = new File(table).getAbsolutePath
-    colsCache.remove(abs)
-    wmCache.synchronized {
-      val it = wmCache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1 == abs) it.remove()
-    }
-    statsRowsCache.synchronized {
-      val it = statsRowsCache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1 == abs) it.remove()
-    }
-  }
-
-  /** The column's stats sidecar as a DRIVER-LOCAL frame, memoized on
-    * (table, column, watermark). Two costs disappear versus
-    * `spark.read.parquet(sidecarDir)`: the footer/schema-inference JOB
-    * and the collect JOB — a LocalRelation's select/filter/collect run
-    * entirely on the driver (ConvertToLocalRelation), zero scheduling.
-    * The sidecar holds |files| rows of driver metadata, read by every
-    * pruned scan, every staleness probe, and every DFP evaluation —
-    * at sf0.1 those jobs dominate the layout-lifecycle queries, at
-    * 100 TB they are repeated object-store reads of the same immutable
-    * rows. Invalidation mirrors the other meta caches (the in-JVM
-    * writers clear the table's entries); the watermark key makes a
-    * refresh a MISS even without eviction. A stale read under a
-    * cross-JVM writer only HIDES new files from the stats — an
-    * unindexed live file is always READ, never skipped, so staleness
-    * costs IO, never rows (the sidecar's own freshness contract).
-    * None = the column has no stats rows. */
+  /** The column's stats sidecar as a DRIVER-LOCAL frame, memoized in
+    * [[MetaStore]] on (table, column, the sidecar's part-file names).
+    * Two costs disappear versus `spark.read.parquet(sidecarDir)`: the
+    * footer/schema-inference JOB and the collect JOB — a
+    * LocalRelation's select/filter/collect run entirely on the driver
+    * (ConvertToLocalRelation), zero scheduling. The sidecar holds
+    * |files| rows of driver metadata, read by every pruned scan, every
+    * staleness probe, and every DFP evaluation — at sf0.1 those jobs
+    * dominate the layout-lifecycle queries, at 100 TB they are repeated
+    * object-store reads of the same immutable rows. Each refresh
+    * appends a new UUID-named part, so the one listing that builds the
+    * key sees a refresh by any process, and a table recreated at the
+    * same path has other parts. None = the column has no stats rows. */
   private def statsFrame(spark: SparkSession, table: String,
                          column: String): Option[DataFrame] = {
-    val abs = new File(table).getAbsolutePath
-    val key = (abs, column, indexedVersionCached(table, column))
-    val hit = statsRowsCache.get(key)
-    val v =
-      if (hit != null) hit
-      else {
-        val sd = statsDir(table, column)
-        val computed =
-          if (!hasStatsRows(sd)) None
-          else {
-            val df = spark.read.parquet(sd.getPath)
-            Some((df.schema, df.collect().toSeq))
-          }
-        if (computed.forall(_._2.size <= statsMaxCachedRows))
-          statsRowsCache.put(key, computed)
-        computed
-      }
-    v.map { case (schema, rows) =>
-      spark.createDataFrame(new java.util.ArrayList[Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+    val sd = statsDir(table, column)
+    val parts = statsParts(sd)
+    if (parts.isEmpty) return None
+    val (schema, rows) = MetaStore.memo[(StructType, Seq[Row])]("meta.stats",
+        (sd.getAbsolutePath, parts))(_._2.size.toLong) {
+      val df = spark.read.parquet(parts.map(new File(sd, _).getPath): _*)
+      (df.schema, df.collect().toSeq)
     }
-  }
-
-  def indexedColumnsCached(table: String): Seq[String] = {
-    val abs = new File(table).getAbsolutePath
-    val hit = colsCache.get(abs)
-    if (hit != null) hit
-    else { val v = indexedColumns(table); colsCache.put(abs, v); v }
-  }
-
-  def indexedVersionCached(table: String, column: String): Int = {
-    val abs = new File(table).getAbsolutePath
-    val hit = wmCache.get((abs, column))
-    if (hit != null) hit.intValue()
-    else {
-      val v = indexedVersion(table, column)
-      wmCache.put((abs, column), Integer.valueOf(v)); v
-    }
-  }
-
-  private def writeWatermarkAt(dir: File, version: Int): Unit = {
-    dir.mkdirs()
-    Files.write(new File(dir, "_watermark.json").toPath,
-      s"""{"version":$version}""".getBytes(StandardCharsets.UTF_8))
+    Some(spark.createDataFrame(new java.util.ArrayList[Row](
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema))
   }
 
   private def writeWatermark(table: String, column: String,
                              version: Int): Unit = {
-    writeWatermarkAt(statsDir(table, column), version)
-    invalidateMeta(table)
+    val dir = statsDir(table, column)
+    dir.mkdirs()
+    Files.write(new File(dir, "_watermark.json").toPath,
+      s"""{"version":$version}""".getBytes(StandardCharsets.UTF_8))
   }
 
   /** `input_file_name()` → the table-relative path, refusing files
@@ -332,33 +259,25 @@ object TxnStats {
     Overlap.map(Some(spark), columns.distinct, 4, "sidecar refresh")(one)
   }
 
-  /** Parsed parquet FOOTERS, memoized per absolute path: a clustered
-    * optimize refreshes one sidecar per clustering column, and each
-    * single-column refresh re-opened and re-parsed the SAME new files'
-    * footers. Every parquet file this engine reads is immutable under
-    * its path (Spark part files and the engine's staging dirs embed a
-    * job/txn UUID; testdata is read-only), so the cache needs no
-    * invalidation — only the LRU bound. Metadata-sized: a footer is a
-    * few KB. */
-  private val footerCache
-      : java.util.Map[String, org.apache.parquet.hadoop.metadata.ParquetMetadata] =
-    lru(512)
-
+  /** Parsed parquet FOOTERS, memoized in [[MetaStore]] per absolute
+    * path: a clustered optimize refreshes one sidecar per clustering
+    * column, and each single-column refresh re-opened and re-parsed the
+    * SAME new files' footers. Every parquet file this engine reads is
+    * immutable under its path (Spark part files and the engine's
+    * staging dirs embed a job/txn UUID; testdata is read-only), so the
+    * path is the footer's identity. Weighed by column chunks, the bulk
+    * of a footer's heap. */
   private[sources] def footerOf(f: File)
-      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    val key = f.getAbsolutePath
-    val hit = footerCache.get(key)
-    if (hit != null) hit
-    else {
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    MetaStore.memo[org.apache.parquet.hadoop.metadata.ParquetMetadata](
+        "meta.footer", f.getAbsolutePath)(md =>
+      md.getBlocks.stream.mapToLong(_.getColumns.size.toLong).sum) {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f.toURI),
         new org.apache.hadoop.conf.Configuration())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val md = try r.getFooter finally r.close()
-      footerCache.put(key, md)
-      md
+      try r.getFooter finally r.close()
     }
-  }
 
   /** Per-file (min, max, rows) for a supported column straight from the
     * parquet FOOTER's row-group statistics — metadata IO only, no data

@@ -57,55 +57,22 @@ object TxnTable {
     * Classification is STRUCTURAL — the `dv/` path prefix — so it
     * survives restore, checkpointing, and any other zero-copy
     * re-listing of existing files. */
-  def liveSplit(table: String, asOf: Option[Int] = None): (Seq[String], Seq[String]) =
-    liveFiles(table, asOf).partition(!_.startsWith("dv/"))
+  def liveSplit(table: String, asOf: Option[Int] = None): (Seq[String], Seq[String]) = {
+    val s = snapshot(table, asOf)
+    (s.data, s.dv)
+  }
 
   /** Ascend from a directory to the nearest enclosing txn-table root
     * (the dir owning a `_graft_log`), if any — the ONE definition of
     * "this path reads txn-table files", shared by the result cache's
-    * snapshot resolution and the advisors' base classification. */
+    * snapshot resolution, the advisors' base classification and the
+    * auto-DFP rule. Never memoized: a table born under a plain dir, by
+    * this process or another, resolves on the next call. */
   def tableRootOf(f: File): Option[File] =
     Option(f).flatMap { dir =>
       if (new File(dir, "_graft_log").isDirectory) Some(dir)
       else tableRootOf(dir.getParentFile)
     }
-
-  /** MEMOIZED [[tableRootOf]] for planning-time callers. The auto-DFP
-    * rule resolves ancestry per distinct parent dir, per join side, per
-    * equi-conjunct, on every optimizer fixed-point pass of every action
-    * — on local disk that walk is stat() noise, against an object store
-    * at 100 TB it is a LIST/HEAD tax on every join plan. Entries map an
-    * absolute dir to its resolved root (None = provably under no txn
-    * table at resolution time). A stale NEGATIVE entry can only MISS an
-    * optimization (the unpruned plan is always correct); a stale
-    * POSITIVE entry funnels into sidecar reads whose per-file bounds
-    * are immutable facts about immutable (UUID-named) files, so the
-    * worst case is again a missed or no-op prune. Exact in-JVM
-    * invalidation anyway: every path that can CREATE a `_graft_log`
-    * (publish of a fresh table, replication, catalog restore) clears
-    * the cache. */
-  private val rootCache: java.util.Map[String, Option[String]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Option[String]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Option[String]]): Boolean =
-          size() > 1024
-      })
-
-  def tableRootOfCached(dir: File): Option[File] = {
-    val key = dir.getAbsolutePath
-    val hit = rootCache.get(key)
-    if (hit != null) hit.map(new File(_))
-    else {
-      val r = tableRootOf(dir)
-      rootCache.put(key, r.map(_.getAbsolutePath))
-      r
-    }
-  }
-
-  /** Drop every memoized root resolution — called by the log-dir
-    * creators so a table born after a negative lookup is seen. */
-  private[graft] def invalidateRootCache(): Unit = rootCache.clear()
 
   /** Parquet footer row count — metadata IO only (footer bytes), no
     * row-group reads; served from the shared immutable-footer cache. */
@@ -153,7 +120,7 @@ object TxnTable {
     * Files are immutable, so re-listings (lineage compaction, restore)
     * can only repeat identical values; later entries never change
     * earlier files. Pure log-dir IO — O(versions) small JSON reads. */
-  private[sources] def recordedRowCounts(table: String): Map[String, Long] = {
+  private def recordedRowCounts(table: String): Map[String, Long] = {
     val re = """"((?:[^"\\]|\\.)*)"\s*:\s*(\d+)""".r
     logFiles(table).flatMap { f =>
       val sf = statsFile(table, versionOf(f))
@@ -164,32 +131,37 @@ object TxnTable {
     }.toMap
   }
 
-  /** A snapshot's live DATA files with their row counts — commit-time
-    * sidecar stats where recorded, parquet footers for the rest. The
-    * per-file health input a compaction advisor reads WITHOUT scanning
+  /** Each file's row count: the commit-time sidecar's where recorded,
+    * the parquet footer's for the rest — driver-side metadata IO
+    * either way, never a data scan. */
+  private[sources] def fileRowCounts(table: String,
+                                     files: Seq[String]): Map[String, Long] = {
+    val recorded = recordedRowCounts(table)
+    files.map(f => f -> recorded.getOrElse(f, footerRowCount(new File(table, f))))
+      .toMap
+  }
+
+  /** Rows of a live set, minus deletion-vector rows (one DV row per
+    * deleted address; stacked vectors are built against the DV-applied
+    * snapshot, so they never overlap). */
+  private[sources] def netRows(counts: Map[String, Long]): Long =
+    counts.iterator.map { case (f, n) => if (f.startsWith("dv/")) -n else n }.sum
+
+  /** A snapshot's live DATA files with their row counts. The per-file
+    * health input a compaction advisor reads WITHOUT scanning
     * ([[graft.plans.LayoutAdvisor.compactionAdviceTxn]]). */
   def liveFileRowCounts(table: String,
                         asOf: Option[Int] = None): Seq[(String, Long)] = {
-    val recorded = recordedRowCounts(table)
-    liveSplit(table, asOf)._1.map(f =>
-      f -> recorded.getOrElse(f, footerRowCount(new File(table, f))))
+    val s = snapshot(table, asOf)
+    s.data.map(f => f -> s.rowCounts(f))
   }
 
-  /** Total rows of a snapshot, minus deletion-vector rows (one DV row
-    * per deleted address; stacked vectors are built against the
-    * DV-applied snapshot, so they never overlap). Commit-time sidecar
-    * stats where recorded, parquet FOOTER metadata for the rest —
-    * driver-side metadata IO either way, never a data scan: the row
-    * count a 100 TB advisor prices with. A real catalog would hold
-    * these as table statistics; here the log + immutable files ARE the
+  /** Total rows of a snapshot, deletion vectors applied: the row count
+    * a 100 TB advisor prices with. A real catalog would hold these as
+    * table statistics; here the log + immutable files ARE the
     * statistics store. */
-  def snapshotRowCount(table: String, asOf: Option[Int] = None): Long = {
-    val recorded = recordedRowCounts(table)
-    val (data, dv) = liveSplit(table, asOf)
-    def rows(rel: Seq[String]): Long =
-      rel.map(f => recorded.getOrElse(f, footerRowCount(new File(table, f)))).sum
-    rows(data) - rows(dv)
-  }
+  def snapshotRowCount(table: String, asOf: Option[Int] = None): Long =
+    snapshot(table, asOf).rows
 
   private def jsonArr(paths: Seq[String]): String =
     paths.map(p => "\"" + p + "\"").mkString("[", ",", "]")
@@ -246,23 +218,15 @@ object TxnTable {
     * worst-case tag sizes); beyond it, older tags resolve by log scan. */
   private val MaxTagWindow = 100000
 
-  /** LRU-bounded like [[setIndexes]] — an evicted table pays one fresh
-    * log sweep on its next lookup, never a wrong answer. */
-  private val tagIndexes: java.util.Map[String, TagIndex] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, TagIndex](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, TagIndex]): Boolean =
-          size() > MaxIndexedTables
-      })
-
   /** Has any committed version of `table` published `tag`? The replay-
     * adjudication read for enforce-at-ingest: the common case is a
     * FRESH tag (every new micro-batch), which a plain reverse scan
     * proves absent only after reading EVERY log entry — O(versions²)
     * driver IO over a long-lived stream's lifetime. This index scans
     * each log entry once per JVM (O(new versions) per head bump,
-    * O(1) per lookup). A digest mismatch on the last-scanned entry
+    * O(1) per lookup), kept in [[MetaStore]] per canonical root and
+    * replaced as it is extended — an evicted table pays one fresh log
+    * sweep on its next lookup. A digest mismatch on the last-scanned entry
     * (table recreated at the same path) rebuilds from scratch, so a
     * stale index can never claim a tag the current log doesn't hold —
     * the failure mode that would silently drop a batch. */
@@ -270,12 +234,13 @@ object TxnTable {
     val cur = currentVersion(table)
     if (cur == 0) return false
     val key = new File(table).getCanonicalPath
-    val idx = tagIndexes.compute(key, (_, prev) => {
-      def digestOk(c: TagIndex) = c.scanned == 0 || {
-        val f = new File(logDir(table), f"v${c.scanned}%05d.json")
-        f.isFile && entryDigest(f) == c.scannedDigest
-      }
-      val base = Option(prev).filter(c => c.scanned <= cur && digestOk(c))
+    def digestOk(c: TagIndex) = c.scanned == 0 || {
+      val f = new File(logDir(table), f"v${c.scanned}%05d.json")
+      f.isFile && entryDigest(f) == c.scannedDigest
+    }
+    val base = MetaStore.get[TagIndex]("meta.tagIndex", key)
+      .filter(c => c.scanned <= cur && digestOk(c))
+    val idx =
       if (base.exists(c => cur - c.floor > MaxTagWindow)) {
         // window overflow: rebuild from only the newest MaxTagWindow
         // versions — amortized O(1) per head bump, bounded memory
@@ -291,7 +256,7 @@ object TxnTable {
         TagIndex(cur, floor,
           entryDigest(new File(logDir(table), f"v$cur%05d.json")), tags)
       }
-    })
+    MetaStore.put("meta.tagIndex", key, idx, idx.tags.size.toLong)
     idx.tags.contains(tag) ||
       // below-window history: the rare path (a replayed tag is almost
       // always recent); proves absence exactly, never from the index
@@ -332,20 +297,50 @@ object TxnTable {
     v
   }
 
-  /** Replay the log through `asOf` (inclusive; latest when None) and
-    * return the live file list — the snapshot. Driver-side, starting
-    * from the newest checkpoint ≤ `asOf` (the full set at that version)
-    * and replaying only the commits after it — O(commits since
+  /** The live file list of the snapshot as of `asOf` (inclusive; latest
+    * when None), in log order. */
+  def liveFiles(table: String, asOf: Option[Int] = None): Seq[String] =
+    snapshot(table, asOf).files
+
+  /** One committed version's resolved metadata: its live files in log
+    * order, split into data and deletion-vector files, and, computed on
+    * first use, each live file's row count. */
+  private[sources] final class Snapshot(table: String, val files: Seq[String]) {
+    lazy val (data, dv) = files.partition(!_.startsWith("dv/"))
+    lazy val rowCounts: Map[String, Long] = fileRowCounts(table, files)
+    lazy val rows: Long = netRows(rowCounts)
+  }
+
+  /** The snapshot of `table` as of `asOf` (latest when None), memoized
+    * in [[MetaStore]] on (canonical root, version, digest of that
+    * version's log entry) — the identity [[resolveVersion]] already
+    * trusts. A commit by any process lists as a new version, and a
+    * table recreated at the same path publishes entries naming fresh
+    * UUID-stamped files, so its digest differs. A lookup costs one
+    * listing of the log dir and one read of one entry; a miss replays
+    * the log once. */
+  private[sources] def snapshot(table: String,
+                                asOf: Option[Int] = None): Snapshot =
+    logFiles(table).takeWhile(f => asOf.forall(versionOf(f) <= _))
+      .lastOption.fold(new Snapshot(table, Seq.empty)) { f =>
+        val v = versionOf(f)
+        MetaStore.memo[Snapshot]("meta.snapshot",
+            (new File(table).getCanonicalPath, v, entryDigest(f)))(
+          _.files.size.toLong)(new Snapshot(table, replay(table, v)))
+      }
+
+  /** Replay the log through `version` (inclusive), starting from the
+    * newest checkpoint ≤ `version` (the full set at that version) and
+    * replaying only the commits after it — O(commits since
     * checkpoint), never data. */
-  def liveFiles(table: String, asOf: Option[Int] = None): Seq[String] = {
+  private def replay(table: String, version: Int): Seq[String] = {
     val base = checkpointFiles(table)
-      .filter(f => asOf.forall(checkpointVersion(f) <= _))
-      .lastOption
+      .filter(checkpointVersion(_) <= version).lastOption
     val baseVersion = base.map(checkpointVersion).getOrElse(0)
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     base.foreach(f => live ++= parseEntry(f)._1)
     logFiles(table)
-      .filter(f => versionOf(f) > baseVersion && asOf.forall(versionOf(f) <= _))
+      .filter(f => versionOf(f) > baseVersion && versionOf(f) <= version)
       .foreach { f =>
         val (added, removed) = parseEntry(f)
         live --= removed
@@ -366,19 +361,6 @@ object TxnTable {
   private final case class SetIndex(head: Int, headDigest: String,
                                     live: Set[String], xl: Long, xh: Long,
                                     byKey: Map[(Long, Long, Int), Int])
-
-  /** LRU-bounded: a long-lived driver resolving pins across MANY tables
-    * (the result-cache deployment) must not retain every table's full
-    * live-file set forever — an evicted table merely pays one fresh log
-    * replay on its next lookup, never a wrong answer. */
-  private val MaxIndexedTables = 64
-  private val setIndexes: java.util.Map[String, SetIndex] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, SetIndex](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, SetIndex]): Boolean =
-          size() > MaxIndexedTables
-      })
 
   /** First 128 bits of MD5 — per-path mixing for the XOR set-hash.
     * XOR makes the set hash incrementally maintainable: add/remove a
@@ -438,20 +420,25 @@ object TxnTable {
     * files, a DV-bearing snapshot's marker view, a mid-race head). */
   def resolveVersion(table: String, files: Set[String]): Option[Int] = {
     if (currentVersion(table) == 0) return None
+    // kept in MetaStore per canonical root and replaced as it extends:
+    // a long-lived driver resolving pins across MANY tables (the
+    // result-cache deployment) must not retain every table's full
+    // live-file set forever — an evicted table merely pays one fresh log
+    // replay on its next lookup, never a wrong answer
     val key = new File(table).getCanonicalPath
-    val idx = setIndexes.compute(key, (_, cur) => {
-      val head = currentVersion(table)
-      def digestOk(c: SetIndex) = {
-        val f = new File(logDir(table), f"v${c.head}%05d.json")
-        f.isFile && entryDigest(f) == c.headDigest
-      }
-      cur match {
-        case c: SetIndex if c.head == head && digestOk(c) => c
-        case c: SetIndex if c.head < head && digestOk(c) =>
-          extendIndex(table, Some(c), head)
-        case _ => extendIndex(table, None, head) // cold or recreated table
-      }
-    })
+    val head = currentVersion(table)
+    def digestOk(c: SetIndex) = {
+      val f = new File(logDir(table), f"v${c.head}%05d.json")
+      f.isFile && entryDigest(f) == c.headDigest
+    }
+    val idx = MetaStore.get[SetIndex]("meta.setIndex", key) match {
+      case Some(c) if c.head == head && digestOk(c) => c
+      case Some(c) if c.head < head && digestOk(c) =>
+        extendIndex(table, Some(c), head)
+      case _ => extendIndex(table, None, head) // cold or recreated table
+    }
+    MetaStore.put("meta.setIndex", key, idx,
+      (idx.live.size + idx.byKey.size).toLong)
     var xl = 0L; var xh = 0L
     files.foreach { p => val (a, b) = pathHash128(p); xl ^= a; xh ^= b }
     idx.byKey.get((xl, xh, files.size))
@@ -577,9 +564,7 @@ object TxnTable {
       s"tag must be [A-Za-z0-9._-]+ (the log parser is quote-scan exact): '$t'"))
     val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
     val entry = s"""{"version":$version,"added":${jsonArr(added)},"removed":${jsonArr(removed)}$tagField}"""
-    // mkdirs() is true iff the log dir was CREATED here — a table is
-    // being born, so negative root-resolution entries may now be stale
-    if (logDir(table).mkdirs()) invalidateRootCache()
+    logDir(table).mkdirs()
     // tmp is unique per ATTEMPT, like the data dir: a shared tmp name
     // lets a racer overwrite the winner's bytes between write and link
     // (publishing a log entry that points at the LOSER's data), or delete
@@ -1161,7 +1146,7 @@ object TxnTable {
     import org.apache.spark.sql.functions.col
     val version = expectedVersion.getOrElse(currentVersion(table) + 1)
     require(version >= 1, s"expectedVersion must be >= 1, got $version")
-    val doomed = readWithAddress(spark, table, Some(version - 1))
+    val doomed = readWithAddress(spark, table, snapshot(table, Some(version - 1)))
       .filter(predicate)
       .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
     commitDv(spark, table, doomed, version, tag = None)
@@ -1459,18 +1444,16 @@ object TxnTable {
     * null-extend (schema evolution without rewriting history). */
   def read(spark: SparkSession, table: String, asOf: Option[Int] = None,
            mergeSchema: Boolean = false): DataFrame = Trace.span("sources.open") {
-    val (_, dvFiles) = liveSplit(table, asOf)
-    if (dvFiles.isEmpty) {
-      val (files, _) = liveSplit(table, asOf)
-      require(files.nonEmpty,
-        s"no live files in $table${asOf.fold("")(v => s" as of v$v")}")
+    val snap = snapshot(table, asOf)
+    require(snap.data.nonEmpty,
+      s"no live files in $table${asOf.fold("")(v => s" as of v$v")}")
+    if (snap.dv.isEmpty)
       // SchemaCache: the snapshot pins its file list, so the inferred
       // schema is memoizable — drops the per-read footer-inference JOB
       // the lifecycle queries paid on every re-open of the same table
-      SchemaCache.read(spark, files.map(f => new File(table, f).getPath),
+      SchemaCache.read(spark, snap.data.map(f => new File(table, f).getPath),
         mergeSchema)
-    } else
-      readWithAddress(spark, table, asOf, mergeSchema).drop("__fp", "__ri")
+    else readWithAddress(spark, table, snap, mergeSchema).drop("__fp", "__ri")
   }
 
   /** The DV-applied snapshot with each row's STABLE address retained as
@@ -1479,24 +1462,22 @@ object TxnTable {
     * scan itself, so the address columns must be captured before the
     * vector anti-join. */
   private def readWithAddress(spark: SparkSession, table: String,
-                              asOf: Option[Int],
+                              snap: Snapshot,
                               mergeSchema: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    val (files, dvFiles) = liveSplit(table, asOf)
-    require(files.nonEmpty,
-      s"no live files in $table${asOf.fold("")(v => s" as of v$v")}")
+    require(snap.data.nonEmpty, s"no live files in $table")
     val prefixLen = fileUriPrefix(table).length
     val base = SchemaCache
-      .read(spark, files.map(f => new File(table, f).getPath), mergeSchema)
+      .read(spark, snap.data.map(f => new File(table, f).getPath), mergeSchema)
       .select(col("*"),
         expr(s"substring(_metadata.file_path, ${prefixLen + 1})").as("__fp"),
         col("_metadata.row_index").as("__ri"))
-    if (dvFiles.isEmpty) base
+    if (snap.dv.isEmpty) base
     else {
       // deletion vectors: anti-join on the stable row address — data
       // files were never rewritten, so recorded addresses still hold
       val dv = SchemaCache
-        .read(spark, dvFiles.map(f => new File(table, f).getPath))
+        .read(spark, snap.dv.map(f => new File(table, f).getPath))
         .select(col("file_path").as("__fp"), col("row_index").as("__ri"))
       base.join(dv, Seq("__fp", "__ri"), "left_anti")
     }

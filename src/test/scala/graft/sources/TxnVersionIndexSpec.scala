@@ -58,14 +58,28 @@ class TxnVersionIndexSpec extends SparkSpec {
     TxnTable.commit(spark, Seq((2, 2L)).toDF("k", "v"), t, overwrite = false)
     val oldSet = TxnTable.liveFiles(t, Some(2)).toSet
     assert(TxnTable.resolveVersion(t, oldSet).contains(2))
+    // warm the snapshot and the stats rows of the old table
+    assert(TxnTable.read(spark, t).count() == 2)
+    assert(TxnTable.snapshotRowCount(t) == 2)
+    TxnStats.refresh(spark, t, "k")
+    assert(TxnStats.pruneFiles(spark, t, "k", 1, 1)._1.size == 1)
 
     FileUtils.deleteQuietly(new File(t))
     TxnTable.commit(spark, Seq((10, 10L)).toDF("k", "v"), t, overwrite = false)
-    TxnTable.commit(spark, Seq((20, 20L)).toDF("k", "v"), t, overwrite = false)
+    TxnTable.commit(spark, Seq((20, 20L), (30, 30L)).toDF("k", "v").coalesce(1),
+      t, overwrite = false)
     val newSet = TxnTable.liveFiles(t, Some(2)).toSet
     assert(newSet != oldSet) // part-file names carry fresh UUIDs
     assert(TxnTable.resolveVersion(t, newSet).contains(2))
     assert(TxnTable.resolveVersion(t, oldSet).isEmpty)
+    // the same version numbers must not serve the old table's snapshot
+    assert(TxnTable.read(spark, t).as[(Int, Long)].collect().toSet ==
+      Set((10, 10L), (20, 20L), (30, 30L)))
+    assert(TxnTable.snapshotRowCount(t) == 3)
+    TxnStats.refresh(spark, t, "k") // the same watermark (2) as before
+    val (toRead, nLive) = TxnStats.pruneFiles(spark, t, "k", 10, 10)
+    assert(nLive == 2 && toRead.size == 1 && newSet.contains(toRead.head),
+      s"pruned to $toRead of $newSet")
   }
 
   test("overwrites and restores keep the index consistent with liveFiles") {
