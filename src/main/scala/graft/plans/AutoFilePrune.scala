@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -14,24 +14,25 @@ import org.apache.spark.sql.types._
 import graft.Trace
 import graft.sources.{MetaStore, TxnStats, TxnTable}
 
-/** AUTO-INJECTED dynamic file pruning — the optimizer-rule form of
-  * [[graft.sources.TxnStats.dfpRead]]: a user writing the PLAIN star
-  * shape
+/** AUTO-INJECTED dynamic file pruning, the engine's one join-driven
+  * file prune: a user writing the PLAIN star shape
   *
   *   TxnTable.read(spark, fact).join(dim.filter(...), cond)
   *
-  * gets the same file-level prune the bespoke API offers, with no
-  * bespoke call. The rule recognizes a txn-table parquet scan under one
-  * side of an equi-join, evaluates the OTHER side's join keys at
-  * planning time (one bounded aggregate, plus at most one gated
-  * distinct-key collect — metadata-scale work, never fact bytes), asks
+  * opens only the fact files the dim's keys can reach, with no bespoke
+  * call. The rule recognizes a txn-table parquet scan under one side
+  * of an equi-join, evaluates the OTHER side's join keys at planning
+  * time (one bounded aggregate, plus at most one gated distinct-key
+  * collect — metadata-scale work, never fact bytes), asks
   * [[TxnStats.dfpSkipSet]] which of the scan's files provably hold no
-  * joinable row, and swaps in a scan over the surviving files. Spark's
-  * own DPP prunes directory partitions; this is its file-granular
-  * sibling for an unpartitioned fact whose LAYOUT clusters the join
-  * column — at 100 TB, the difference between opening a handful of
-  * files and opening all of them. The reference's flagship query (a
-  * fact joined to a filtered dim) is exactly this shape.
+  * joinable row (exact-key gap pruning, or range-only pruning once the
+  * dim's distinct-key count passes the cap), and swaps in a scan over
+  * the surviving files. Spark's own DPP prunes directory partitions;
+  * this is its file-granular sibling for an unpartitioned fact whose
+  * LAYOUT clusters the join column — at 100 TB, the difference between
+  * opening a handful of files and opening all of them. The reference's
+  * flagship query (a fact joined to a filtered dim) is exactly this
+  * shape.
   *
   * SOUNDNESS. A side S may be pruned with the other side O's keys only
   * when S's rows reach the output exclusively BY MATCHING — S is
@@ -57,14 +58,24 @@ import graft.sources.{MetaStore, TxnStats, TxnTable}
   *    would disagree with its runtime rows — unsound),
   *  - the scan's column carries a min-max stats sidecar (file-system
   *    check, no IO beyond a listing),
-  *  - key/fact types identical or both integral (the [[TxnStats]]
-  *    type discipline), the join key a BARE column of each side — or
-  *    a column under the integral WIDENING cast Catalyst inserts to
-  *    reconcile mixed-width keys ([[bareKey]]; narrowing declines),
+  *  - key/fact types identical or both integral
+  *    ([[TxnStats.dfpTypesOk]]), the join key a BARE column of each
+  *    side — or a column under the integral WIDENING cast Catalyst
+  *    inserts to reconcile mixed-width keys ([[bareKey]]; narrowing
+  *    declines),
   *  - O's estimated size ≤ `spark.graft.autoDfp.maxDimBytes` (default
   *    64 MiB) — the plan-time evaluation budget; a huge dim declines
-  *    rather than scans. `spark.graft.autoDfp.maxExactKeys` bounds the
-  *    exact-key regime exactly as in [[TxnStats.dfpFiles]].
+  *    rather than scans. `spark.graft.autoDfp.maxExactKeys` (default
+  *    10^6) caps the exact-key mode of [[TxnStats.dfpSkipSet]].
+  *
+  * Several equalities on one scan prune it once per column and the
+  * skips intersect: a conjunctive key (`ON a = x AND b = y`) and a
+  * stacked star (`fact ⋈ dimA ⋈ dimB`, the walk descending through
+  * the inner join) both land on the cells every dim can reach. Every
+  * decision on a txn-table scan is counted under the current
+  * [[Trace]] span: `dfp.pruned`, or `dfp.declined.<reason>` with one
+  * reason per gate (`unindexed`, `types`, `nondeterministic`,
+  * `dimBytes`, `fewFiles`, `nothingSkippable`, `error`).
   *
   * Each pruned (or measured-unprunable) scan is TAGGED with the column
   * so the optimizer's fixed-point re-runs never re-evaluate the dim;
@@ -140,10 +151,9 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     * dim evaluation once per batch against a batch-sized delta — the
     * one regime where O(dim) planning work can exceed the pruned IO,
     * measured as a 3.5× wall-time regression on the streaming bench
-    * family. Inside a stream the bespoke dfp API remains available
-    * where pruning is wanted; the rule declines by THREAD, the only
-    * ambient marker a foreachBatch body carries (its plans are
-    * ordinary batch plans, indistinguishable structurally). Two
+    * family. The rule declines by THREAD, the only ambient marker a
+    * foreachBatch body carries (its plans are ordinary batch plans,
+    * indistinguishable structurally). Two
     * independent markers, either declines: the thread NAME prefix, and
     * the `StreamExecution.QUERY_ID_KEY` local property Spark sets on
     * the stream thread before running batches (referenced as the class
@@ -246,26 +256,29 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     val column = sAttr.name
     if (already.contains(column)) return side
     val root = txnRootOf(fsRel).getOrElse(return side)
-    if (!TxnStats.indexedColumns(root).contains(column)) return side
-    if (!typesOk(sAttr.dataType, oAttr.dataType)) return side
+    // a txn-table scan from here on: every exit counts its outcome
+    def decline(reason: String): LogicalPlan = {
+      Trace.count(s"dfp.declined.$reason")
+      side
+    }
+    if (!TxnStats.indexedColumns(root).contains(column))
+      return decline("unindexed")
+    if (!TxnStats.dfpTypesOk(sAttr.dataType, oAttr.dataType))
+      return decline("types")
     // non-determinism anywhere under O: plan-time keys could disagree
     // with O's runtime rows. Sample carries its non-determinism in the
     // OPERATOR (partition-layout-dependent), not its expressions.
     if (other.exists {
       case _: Sample => true
       case p => p.expressions.exists(e => !e.deterministic)
-    }) return side
-    if (other.stats.sizeInBytes > BigInt(maxDimBytes)) return side
+    }) return decline("nondeterministic")
+    if (other.stats.sizeInBytes > BigInt(maxDimBytes))
+      return decline("dimBytes")
 
     val spark = SparkSession.active
     val rootAbs = new File(root).getAbsolutePath
-    def rel(uri: String): String = {
-      val p = if (uri.startsWith("file:"))
-        new File(new java.net.URI(uri)).getAbsolutePath else uri
-      p.stripPrefix(rootAbs + "/")
-    }
     val scanFiles = fsRel.location.inputFiles.toSeq
-    if (scanFiles.size < 2) return side
+    if (scanFiles.size < 2) return decline("fewFiles")
 
     val dimPlan = Project(Seq(oAttr), other)
     def evaluate(): Option[Set[String]] = {
@@ -274,7 +287,8 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
         val keys = org.apache.spark.sql.graftshim.PlanDataFrame.ofRows(
           spark, dimPlan)
         Trace.span("plans.dfp")(
-          TxnStats.dfpSkipSet(spark, root, column, keys, maxExactKeys))
+          TxnStats.dfpSkipSet(spark, root, column, sAttr.dataType, keys,
+            maxExactKeys))
       } finally inFlight.set(false)
     }
     val skipOpt =
@@ -293,18 +307,19 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
         // the query
         case scala.util.control.NonFatal(_) =>
           markMeasured(scan, already + column)
-          return side
+          return decline("error")
       }
 
     val keep = skipOpt match {
       case None => Seq.empty // dim has no joinable key: nothing matches
-      case Some(skip) => scanFiles.filterNot(f => skip.contains(rel(f)))
+      case Some(skip) => scanFiles.filterNot(f =>
+        skip.contains(localPath(f).stripPrefix(rootAbs + "/")))
     }
     if (keep.size == scanFiles.size) {
       // measured, nothing skippable — remember so fixed-point re-runs
       // don't re-run the dim aggregate
       markMeasured(scan, already + column)
-      return side
+      return decline("nothingSkippable")
     }
     // all-skippable still reads one (skipped ⇒ provably unjoinable ⇒
     // the join drops its rows): the scan keeps its schema and the
@@ -317,6 +332,7 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     val newScan = scan.copy(relation = newRel)
     newScan.copyTagsFrom(scan)
     markMeasured(newScan, already + column)
+    Trace.count("dfp.pruned")
     side.transformUp { case l if l eq scan => newScan }
   }
 
@@ -353,24 +369,28 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     if (files.isEmpty) return None
     // ancestry-walk per DISTINCT parent dir, not per file — a txn scan
     // pins hundreds of siblings of the one table root
-    val parents = files.toSeq.map { f =>
-      val p = if (f.startsWith("file:"))
-        new File(new java.net.URI(f)).getAbsolutePath else f
-      new File(p).getParentFile
-    }.distinct
+    val parents = files.toSeq.map(f => new File(localPath(f)).getParentFile)
+      .distinct
     val roots = parents.map(TxnTable.tableRootOf(_).map(_.getAbsolutePath))
     if (roots.forall(_.isDefined) && roots.flatten.distinct.size == 1)
       roots.head
     else None
   }
 
-  /** The [[TxnStats.dfpFiles]] type discipline, checked up front so a
-    * refusing pair declines the rule instead of throwing mid-optimize. */
-  private def typesOk(factDt: DataType, dimDt: DataType): Boolean = {
-    def integral(t: DataType): Boolean = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    factDt == dimDt || (integral(factDt) && integral(dimDt))
+  /** A scan's file URI as a local absolute path. */
+  private def localPath(uri: String): String =
+    if (uri.startsWith("file:")) new File(new java.net.URI(uri)).getAbsolutePath
+    else uri
+
+  /** The distinct files under `table` that `df`'s optimized plan scans:
+    * the observable effect of this rule on a join over that table. */
+  private[graft] def filesScanned(df: DataFrame, table: String): Int = {
+    val prefix = new File(table).getAbsolutePath + "/"
+    df.queryExecution.optimizedPlan.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location.inputFiles.toSeq
+        case _ => Nil
+      }
+    }.flatten.map(localPath).filter(_.startsWith(prefix)).distinct.size
   }
 }

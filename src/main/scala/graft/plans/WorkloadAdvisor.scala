@@ -431,10 +431,10 @@ object WorkloadAdvisor {
     }
     // ── STATS family: equi-join columns over a TXN table with no
     //    min-max sidecar — the one piece of metadata standing between a
-    //    plain star join and an auto-pruned scan ([[AutoFilePrune]] /
-    //    `TxnStats.dfpRead`): the rule declines exactly these columns
-    //    today, and one `TxnStats.refresh` turns every future run of
-    //    the same join into O(selected files). Candidates reuse the
+    //    plain star join and an auto-pruned scan ([[AutoFilePrune]]):
+    //    the rule declines exactly these columns today, and one
+    //    `TxnStats.refresh` turns every future run of the same join
+    //    into O(selected files). Candidates reuse the
     //    pruner's own walk (scanFor/txnRootOf), so advice and rule
     //    agree on which scans qualify; columns whose sidecar already
     //    exists contribute NO row (the closed loop — the prune is

@@ -906,14 +906,16 @@ object CompositeQueries {
     // ── TEMPORAL-STAR capstone (round 15's surface composed end to
     //    end): the fact clusters on its RAW timestamp + customer key —
     //    no manual epoch column, the temporal ordinal path — and the
-    //    two filtered dims of a star probe prune it through
-    //    MULTI-COLUMN dynamic file pruning: the date dim's window keeps
+    //    two filtered dims of a plain stacked star join prune it through
+    //    MULTI-COLUMN dynamic file pruning (plans.AutoFilePrune): the
+    //    date dim's window keeps
     //    one slice of the curve layout, the customer dim's tercile
     //    another, and the fact scan opens only their intersection,
     //    decided from stats metadata before any fact bytes move. Pins:
     //    each single-dim prune is a strict subset of the live set and
-    //    the intersection is bounded by both; content — read THROUGH
-    //    the pruned scan and joined to both dims — equals the oracle's
+    //    the intersection is bounded by both, each measured off the
+    //    optimized plan of its plain join; content — read THROUGH the
+    //    pruned scan and joined to both dims — equals the oracle's
     //    plain two-predicate filter.
     sql("q35_temporal_star",
       """WITH t AS (SELECT MAX(o_custkey) // 3 AS qc FROM orders)
@@ -924,7 +926,7 @@ object CompositeQueries {
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1996-07-01'
         |  AND o_custkey >= t.qc AND o_custkey < 2 * t.qc""".stripMargin) { (s, d) =>
-      import graft.sources.{TxnLayout, TxnStats, TxnTable}
+      import graft.sources.{TxnLayout, TxnTable}
       val table = graft.Scratch.dir("/root/repo/target/tmp/q35_tstar") + "/fact"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(table))
       val o = Tables.orders(s, d)
@@ -940,18 +942,18 @@ object CompositeQueries {
         .select(col("o_orderdate").as("ka")).distinct()
       val dimB = o.filter(col("o_custkey") >= qc && col("o_custkey") < 2 * qc)
         .select(col("o_custkey").as("kb")).distinct()
-      val (aF, nLive) = TxnStats.dfpFiles(s, table, "o_orderdate", dimA)
-      val (bF, _) = TxnStats.dfpFiles(s, table, "o_custkey", dimB)
-      val probes = Seq("o_orderdate" -> dimA, "o_custkey" -> dimB)
-      val (mF, _) = TxnStats.dfpFilesMulti(s, table, probes)
-      val fact = TxnStats.dfpReadMulti(s, table, probes)
-      fact.join(dimA, fact("o_orderdate") === dimA("ka"))
-        .join(dimB, fact("o_custkey") === dimB("kb"))
-        .agg(count(lit(1)).as("cnt"), sum("o_orderkey").as("key_sum"))
-        .withColumn("pruned_a", lit(aF.size < nLive))
-        .withColumn("pruned_b", lit(bF.size < nLive))
-        .withColumn("pruned_multi",
-          lit(mF.size <= math.min(aF.size, bF.size) && mF.size < nLive))
+      val fact = TxnTable.read(s, table)
+      val byA = fact.join(dimA, col("o_orderdate") === col("ka"))
+      val byB = fact.join(dimB, col("o_custkey") === col("kb"))
+      val star = byA.join(dimB, col("o_custkey") === col("kb"))
+      val nLive = TxnTable.liveFiles(table).size
+      def files(df: org.apache.spark.sql.DataFrame) =
+        graft.plans.AutoFilePrune.filesScanned(df, table)
+      val (aF, bF, mF) = (files(byA), files(byB), files(star))
+      star.agg(count(lit(1)).as("cnt"), sum("o_orderkey").as("key_sum"))
+        .withColumn("pruned_a", lit(aF < nLive))
+        .withColumn("pruned_b", lit(bF < nLive))
+        .withColumn("pruned_multi", lit(mF <= math.min(aF, bF) && mF < nLive))
     },
 
     // ── training-data RELEASE capstone (the round's new lakehouse surface

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sql
 import graft.operators.{Incremental, Multimodal}
+import graft.plans.AutoFilePrune
 import graft.sources.{Sources, TxnTable}
 import graft.streaming.{EventsStreaming, TwsStreaming}
 import org.apache.spark.sql.functions._
@@ -834,17 +835,19 @@ object SourceQueries {
         .withColumn("files_read", lit(toRead.size.toLong))
     },
 
-    // ── JOIN-DRIVEN dynamic file pruning (TxnStats.dfpFiles/dfpRead):
-    //    the fact is key-clustered into four quartile files and joined
-    //    to a three-key dim known only at RUNTIME (min key, smallest
-    //    key ≥ 2·quartile, max key) — a static range filter can't
-    //    exist, and the range envelope [min,max] spans ALL four files.
+    // ── JOIN-DRIVEN dynamic file pruning (plans.AutoFilePrune on a
+    //    plain join): the fact is key-clustered into four quartile
+    //    files and joined to a three-key dim known only at RUNTIME (min
+    //    key, smallest key ≥ 2·quartile, max key) — a static range
+    //    filter can't exist, and the range envelope [min,max] spans ALL
+    //    four files.
     //    Exact-key gap pruning is the win being pinned: the dim's keys
     //    land in files 0/2/3, so the scan opens THREE of four — the
     //    second-quartile file is skipped because no dim key falls in
     //    its [min,max]. The star-join shape at 100 TB: dim selectivity
-    //    → fact file list, before any fact bytes move. files_read
-    //    rides the hash; the oracle replays the same join unpruned.
+    //    → fact file list, before any fact bytes move. files_read is
+    //    measured off the OPTIMIZED PLAN of the plain join and rides the
+    //    hash; the oracle replays the same join unpruned.
     sql("q_scan_dfp",
       """WITH t AS (SELECT MAX(o_orderkey) // 4 AS q FROM orders),
         |d AS (SELECT MIN(o_orderkey) AS k FROM orders
@@ -876,25 +879,27 @@ object SourceQueries {
       val dim = o.agg(min("o_orderkey").as("k"))
         .union(o.filter(col("o_orderkey") >= 2 * q).agg(min("o_orderkey")))
         .union(o.agg(max("o_orderkey")))
-      val (toRead, nLive) = TxnStats.dfpFiles(s, table, "o_orderkey", dim)
-      val fact = TxnStats.dfpRead(s, table, "o_orderkey", dim)
-      fact.join(dim, fact("o_orderkey") === dim("k"))
-        .agg(count(lit(1)).as("cnt"), sum("o_custkey").as("cust_sum"))
-        .withColumn("files_total", lit(nLive.toLong))
-        .withColumn("files_read", lit(toRead.size.toLong))
+      val star = TxnTable.read(s, table)
+        .join(dim, col("o_orderkey") === col("k"))
+      star.agg(count(lit(1)).as("cnt"), sum("o_custkey").as("cust_sum"))
+        .withColumn("files_total", lit(TxnTable.liveFiles(table).size.toLong))
+        .withColumn("files_read",
+          lit(AutoFilePrune.filesScanned(star, table).toLong))
     },
 
-    // ── MULTI-COLUMN dynamic file pruning (TxnStats.dfpFilesMulti):
-    //    the fact probed by TWO filtered dims at once — the common star
-    //    shape (date dim AND customer dim both filtered). The fact is a
+    // ── MULTI-COLUMN dynamic file pruning (plans.AutoFilePrune on a
+    //    stacked star): the fact probed by TWO filtered dims at once —
+    //    the common star shape (date dim AND customer dim both
+    //    filtered). The fact is a
     //    3×3 grid of files over (o_orderkey, o_custkey) terciles; the
     //    orderkey dim alone keeps one ROW of the grid (3 files), the
     //    custkey dim alone one COLUMN (3 files), and the intersection —
     //    sound because each single-column prune is individually sound
     //    for the inner fact side — opens exactly their ONE shared cell:
     //    strictly fewer files than either single-column prune. All
-    //    three prune counts ride the hash; the oracle replays the
-    //    two-dim join unpruned.
+    //    three prune counts, each measured off the optimized plan of
+    //    its plain join, ride the hash; the oracle replays the two-dim
+    //    join unpruned.
     sql("q_scan_dfp_multi",
       """WITH t AS (SELECT MAX(o_orderkey) // 3 AS qk,
         |                  MAX(o_custkey) // 3 AS qc FROM orders)
@@ -926,28 +931,27 @@ object SourceQueries {
         .select(col("o_orderkey").as("ka")).distinct()
       val dimB = o.filter(col("o_custkey") >= qc && col("o_custkey") < 2 * qc)
         .select(col("o_custkey").as("kb")).distinct()
-      val (aFiles, nLive) = TxnStats.dfpFiles(s, table, "o_orderkey", dimA)
-      val (bFiles, _) = TxnStats.dfpFiles(s, table, "o_custkey", dimB)
-      val probes = Seq("o_orderkey" -> dimA, "o_custkey" -> dimB)
-      val (mFiles, _) = TxnStats.dfpFilesMulti(s, table, probes)
-      val fact = TxnStats.dfpReadMulti(s, table, probes)
-      fact.join(dimA, fact("o_orderkey") === dimA("ka"))
-        .join(dimB, fact("o_custkey") === dimB("kb"))
-        .agg(count(lit(1)).as("cnt"),
+      val fact = TxnTable.read(s, table)
+      val byA = fact.join(dimA, col("o_orderkey") === col("ka"))
+      val byB = fact.join(dimB, col("o_custkey") === col("kb"))
+      val star = byA.join(dimB, col("o_custkey") === col("kb"))
+      def files(df: org.apache.spark.sql.DataFrame) =
+        lit(AutoFilePrune.filesScanned(df, table).toLong)
+      star.agg(count(lit(1)).as("cnt"),
           sum(col("o_orderkey") + col("o_custkey")).as("key_sum"))
-        .withColumn("files_total", lit(nLive.toLong))
-        .withColumn("files_a", lit(aFiles.size.toLong))
-        .withColumn("files_b", lit(bFiles.size.toLong))
-        .withColumn("files_multi", lit(mFiles.size.toLong))
+        .withColumn("files_total", lit(TxnTable.liveFiles(table).size.toLong))
+        .withColumn("files_a", files(byA))
+        .withColumn("files_b", files(byB))
+        .withColumn("files_multi", files(star))
     },
 
-    // ── OUTER-JOIN dynamic file pruning (TxnStats.dfpReadOuter): the
-    //    left-outer star probe. The probe side is PRESERVED — a key
-    //    with no fact match (-1 here) must still surface null-extended,
-    //    so the probe is never pruned — but the fact table is the
-    //    NULL-EXTENDING side: a fact row only reaches the output by
-    //    matching, so the same gap pruning as q_scan_dfp applies and
-    //    the second-quartile file skips. Pins: files_read = 3 of 4 AND
+    // ── OUTER-JOIN dynamic file pruning (plans.AutoFilePrune on a
+    //    plain left join): the left-outer star probe. The probe side is
+    //    PRESERVED — a key with no fact match (-1 here) must still
+    //    surface null-extended, so the probe is never pruned — but the
+    //    fact table is the NULL-EXTENDING side: a fact row only reaches
+    //    the output by matching, so the same gap pruning as q_scan_dfp
+    //    applies and the second-quartile file skips. Pins: files_read = 3 of 4 AND
     //    cnt = matched + 1 (the null-extended probe row survives the
     //    pruned read — the oracle replays the LEFT join unpruned).
     sql("q_scan_dfp_outer",
@@ -981,18 +985,18 @@ object SourceQueries {
         .union(o.filter(col("o_orderkey") >= 2 * q).agg(min("o_orderkey")))
         .union(o.agg(max("o_orderkey")))
         .union(Seq(-1L).toDF("k"))
-      val (toRead, nLive) = TxnStats.dfpFiles(s, table, "o_orderkey", probe)
-      val fact = TxnStats.dfpReadOuter(s, table, "o_orderkey", probe)
-      probe.join(fact, probe("k") === fact("o_orderkey"), "left")
-        .agg(count(lit(1)).as("cnt"),
+      val fact = TxnTable.read(s, table)
+      val star = probe.join(fact, probe("k") === fact("o_orderkey"), "left")
+      star.agg(count(lit(1)).as("cnt"),
           count(col("o_orderkey")).as("matched"),
           sum("o_custkey").as("cust_sum"))
-        .withColumn("files_total", lit(nLive.toLong))
-        .withColumn("files_read", lit(toRead.size.toLong))
+        .withColumn("files_total", lit(TxnTable.liveFiles(table).size.toLong))
+        .withColumn("files_read",
+          lit(AutoFilePrune.filesScanned(star, table).toLong))
     },
 
-    // ── OUTER MULTI-COLUMN dynamic file pruning
-    //    (TxnStats.dfpReadOuterMulti): the left-outer star probed on
+    // ── OUTER MULTI-COLUMN dynamic file pruning (plans.AutoFilePrune
+    //    on a plain two-key left join): the left-outer star probed on
     //    TWO fact columns at once — `probe LEFT JOIN fact ON ka = okey
     //    AND kb = ckey`. The probe is preserved (its unmatched (-1,-1)
     //    row must surface null-extended), the fact null-extends on BOTH
@@ -1034,30 +1038,25 @@ object SourceQueries {
           col("o_custkey") >= qc && col("o_custkey") < 2 * qc)
         .select(col("o_orderkey").as("ka"), col("o_custkey").as("kb"))
         .union(Seq((-1L, -1L)).toDF("ka", "kb"))
-      val probes = Seq("o_orderkey" -> probe.select("ka"),
-        "o_custkey" -> probe.select("kb"))
-      val (mFiles, nLive) = TxnStats.dfpFilesMulti(s, table, probes)
-      val fact = TxnStats.dfpReadOuterMulti(s, table, probes)
-      probe.join(fact, probe("ka") === fact("o_orderkey") &&
+      val fact = TxnTable.read(s, table)
+      val star = probe.join(fact, probe("ka") === fact("o_orderkey") &&
           probe("kb") === fact("o_custkey"), "left")
-        .agg(count(lit(1)).as("cnt"),
+      star.agg(count(lit(1)).as("cnt"),
           count(fact("o_orderkey")).as("matched"),
           sum(fact("o_orderkey") + fact("o_custkey")).as("key_sum"))
-        .withColumn("files_total", lit(nLive.toLong))
-        .withColumn("files_multi", lit(mFiles.size.toLong))
+        .withColumn("files_total", lit(TxnTable.liveFiles(table).size.toLong))
+        .withColumn("files_multi",
+          lit(AutoFilePrune.filesScanned(star, table).toLong))
     },
 
-    // ── AUTO-injected dynamic file pruning (plans.AutoFilePrune): the
-    //    SAME star shape as q_scan_dfp, but the program is a PLAIN
-    //    `TxnTable.read(fact).join(dim)` — no dfpRead call anywhere.
-    //    The optimizer rule recognizes the txn scan under the equi-join,
-    //    evaluates the three-key dim at plan time, and swaps in a scan
-    //    over the three reachable files; files_read is measured off the
-    //    OPTIMIZED PLAN of that plain join (input files of the fact's
-    //    scan) and rides the hash, so a regression to "library call
-    //    required" (4 files) hash-fails. The engine-not-library gate:
-    //    the flagship fact⋈filtered-dim shape prunes with no bespoke
-    //    API at 100 TB. Oracle replays the join unpruned.
+    // ── AUTO-injected dynamic file pruning, SQL surface: the SAME star
+    //    shape as q_scan_dfp, but the program is `spark.sql` over temp
+    //    views of the txn read and the dim. The optimizer rule
+    //    recognizes the txn scan under the SQL equi-join, evaluates the
+    //    three-key dim at plan time, and swaps in a scan over the three
+    //    reachable files; files_read is measured off the OPTIMIZED PLAN
+    //    of that query and rides the hash, so a SQL star that stops
+    //    pruning (4 files) hash-fails. Oracle replays the join unpruned.
     sql("q_scan_dfp_auto",
       """WITH t AS (SELECT MAX(o_orderkey) // 4 AS q FROM orders),
         |d AS (SELECT MIN(o_orderkey) AS k FROM orders
@@ -1084,25 +1083,14 @@ object SourceQueries {
       val dim = o.agg(min("o_orderkey").as("k"))
         .union(o.filter(col("o_orderkey") >= 2 * q).agg(min("o_orderkey")))
         .union(o.agg(max("o_orderkey")))
-      // the program under test: a PLAIN join over the plain txn read
-      def plain = TxnTable.read(s, table)
-        .join(dim, col("o_orderkey") === col("k"))
-      // files the fact scan opens in the OPTIMIZED plan of that plain
-      // join — the auto-prune's observable effect, pinned on the hash
-      val tableAbs = new java.io.File(table).getAbsolutePath
-      val factFiles = plain.queryExecution.optimizedPlan.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.inputFiles.count(f =>
-                f.contains(tableAbs) || f.contains(table))
-            case _ => 0
-          }
-      }.max
-      val nLive = TxnTable.liveFiles(table).size
-      plain.agg(count(lit(1)).as("cnt"), sum("o_custkey").as("cust_sum"))
-        .withColumn("files_total", lit(nLive.toLong))
-        .withColumn("files_read", lit(factFiles.toLong))
+      TxnTable.read(s, table).createOrReplaceTempView("dfp_auto_fact")
+      dim.createOrReplaceTempView("dfp_auto_dim")
+      val star = s.sql(
+        """SELECT COUNT(*) AS cnt, SUM(o_custkey) AS cust_sum
+          |FROM dfp_auto_fact JOIN dfp_auto_dim ON o_orderkey = k""".stripMargin)
+      star.withColumn("files_total", lit(TxnTable.liveFiles(table).size.toLong))
+        .withColumn("files_read",
+          lit(AutoFilePrune.filesScanned(star, table).toLong))
     },
 
     // ── small-file-only compaction (TxnTable.compactSmall): one healthy

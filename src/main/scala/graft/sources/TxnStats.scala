@@ -568,88 +568,48 @@ object TxnStats {
 
   // ── join-driven dynamic file pruning ─────────────────────────────────
 
-  /** JOIN-DRIVEN dynamic file pruning — the fact files an INNER
-    * equi-join `fact.column = dim.key` can possibly match, decided at
-    * RUNTIME from the dim side. Spark's own DPP prunes directory
-    * partitions; this is its file-level sibling for an UNPARTITIONED
-    * fact whose layout clusters the join column (range/Z-order/Hilbert
-    * writes) — at 100 TB the star-join shape where the filtered dim
-    * names a handful of key islands and the fact scan should open a
-    * handful of files, not all of them.
+  /** JOIN-DRIVEN dynamic file pruning: the set of stats-INDEXED files
+    * of `table` provably holding no row an equi-join on `column`
+    * against `dimKeys` can match, decided at plan time from the dim
+    * side by the [[graft.plans.AutoFilePrune]] optimizer rule (its only
+    * caller, which also owns the soundness envelope: the fact side must
+    * be filtering-only or null-extending, never preserved). Spark's own
+    * DPP prunes directory partitions; this is its file-level sibling
+    * for an UNPARTITIONED fact whose layout clusters the join column
+    * (range/Z-order/Hilbert writes).
     *
-    * Two pruning regimes, both sound because a skipped file provably
+    * Two pruning modes, both sound because a skipped file provably
     * holds no joinable row:
     *  1. RANGE: one (min, max, approx-distinct) aggregate over the dim
     *     keys — always bounded (one row to the driver, any dim size) —
-    *     then [[pruneFiles]] on `[min, max]`.
-    *  2. EXACT-KEY (gap pruning), gated by `maxExactKeys`: the sorted
-    *     distinct keys come to the driver and each stats-indexed file
-    *     is kept only if SOME key lands inside its [min, max] — a
-    *     binary search per file, O(|files|·log|keys|) driver work on
-    *     metadata only. This is what skips the files BETWEEN key
-    *     islands that a single [min, max] envelope must keep.
-    * Above the gate (a high-NDV dim) regime 1 alone applies — the
-    * collect stays bounded by construction. Unindexed live files are
-    * always read (stats freshness is a safety property), and dim-side
-    * NULL keys are dropped — an inner equi-join can never match them.
+    *     and each indexed file whose [min, max] misses [lo, hi] skips.
+    *  2. EXACT-KEY (gap pruning), while the approximate distinct-key
+    *     count stays within `maxExactKeys`: the sorted distinct keys
+    *     come to the driver and each indexed file is kept only if SOME
+    *     key lands inside its [min, max] — a binary search per file,
+    *     O(|files|·log|keys|) driver work on metadata only. This skips
+    *     the files BETWEEN key islands a single envelope must keep.
+    * Past the cap (a high-NDV dim) mode 1 alone applies, so the collect
+    * stays bounded by construction. Unindexed files are never in the
+    * set (stats freshness is a safety property), and NULL keys are
+    * dropped — an equi-join never matches them.
     *
-    * `dimKeys` must be a SINGLE-column frame (the join keys, pre-
-    * filtered); it is persisted for the duration of the two passes this
-    * function runs over it. Key and fact types must be identical or
-    * both integral (widened to long, the join's own promotion) — any
-    * other cross-type pair is refused, because the join's coercion may
-    * compare under a type where the cast-side pruning is unsound.
-    * Returns (filesToRead, nLive). Sound for inner/left-semi joins from
-    * the fact side AND for the fact table as an outer join's
-    * NULL-EXTENDING side ([[dfpReadOuter]]) — never for a preserved
-    * side, whose unmatched rows live in skipped files. */
-  def dfpFiles(spark: SparkSession, table: String, column: String,
-               dimKeys: DataFrame,
-               maxExactKeys: Long = 1000000L): (Seq[String], Int) = {
-    val live = TxnTable.liveSplit(table)._1
-    dfpSkipSet(spark, table, column, dimKeys, maxExactKeys) match {
-      case None => (Seq.empty, live.size) // dim carries no joinable key
-      case Some(skip) => (live.filterNot(skip), live.size)
-    }
-  }
-
-  /** The CORE per-file prune decision behind [[dfpFiles]] and the
-    * [[graft.plans.AutoFilePrune]] optimizer rule: the set of
-    * stats-INDEXED files provably holding no row joinable on `column`
-    * against `dimKeys`. Decisions are per-file against the column's
-    * IMMUTABLE sidecar bounds (txn data files are never rewritten in
-    * place — a rewrite commits new names), so the set is sound to
-    * subtract from ANY pinned file list over this table, current
-    * snapshot or not — what lets the optimizer rule prune the exact
-    * files a scan already holds rather than re-resolving the live set.
-    * Returns None when the dim side carries NO non-null key at all
-    * (every fact row is provably unjoinable — the caller decides
-    * whether to collapse to empty or merely keep the unindexed files).
-    * Same two regimes and type discipline as [[dfpFiles]]. */
+    * Decisions are per-file against the column's IMMUTABLE sidecar
+    * bounds (txn data files are never rewritten in place — a rewrite
+    * commits new names), so the set is sound to subtract from ANY
+    * pinned file list over this table, current snapshot or not. Returns
+    * None when the dim carries NO non-null key at all (every fact row
+    * is provably unjoinable). `dimKeys` is the single key column; it is
+    * persisted for the two passes run over it. `factDt` is the fact
+    * column's type, which must pass [[dfpTypesOk]] against the keys'. */
   private[graft] def dfpSkipSet(spark: SparkSession, table: String,
-                                column: String, dimKeys: DataFrame,
-                                maxExactKeys: Long = 1000000L): Option[Set[String]] = {
+                                column: String, factDt: DataType,
+                                dimKeys: DataFrame,
+                                maxExactKeys: Long): Option[Set[String]] = {
     require(dimKeys.columns.length == 1,
-      s"dfpFiles wants the single join-key column, got ${dimKeys.columns.length}")
-    val factDt = TxnTable.read(spark, table)
-      .schema.find(_.name == column)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$column is not a column of $table")).dataType
-    // TYPE DISCIPLINE: silently casting arbitrary dim keys to the fact
-    // column's type is UNSOUND — the caller's actual join may coerce
-    // both sides to a different common type (Spark compares a string
-    // fact column against numeric keys numerically, so fact '07'
-    // matches key 7; cast-to-string pruning would skip its file —
-    // wrong join results, not just lost pruning). Accepted forms only:
-    // identical types, or integral↔integral, where both sides WIDEN to
-    // LongType (always exact, matching the join's own promotion).
+      s"dfpSkipSet wants the single join-key column, got ${dimKeys.columns.length}")
     val dimDt = dimKeys.schema.head.dataType
-    def integral(t: DataType): Boolean = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val bothIntegral = integral(dimDt) && integral(factDt)
-    require(dimDt == factDt || bothIntegral,
+    require(dfpTypesOk(factDt, dimDt),
       s"dfp key type $dimDt does not equal fact column type $factDt " +
         "(and they are not both integral) — the join's comparison type " +
         "may differ from the cast, which can unsoundly skip files")
@@ -714,6 +674,22 @@ object TxnStats {
     } finally keyed.unpersist()
   }
 
+  /** The key/fact type pairs [[dfpSkipSet]] prunes soundly: identical
+    * types, or both integral, where both sides WIDEN to LongType
+    * (exact, matching the join's own promotion). Any other pair is
+    * refused: silently casting dim keys to the fact type is UNSOUND
+    * when the join coerces both sides to a different common type (a
+    * string fact column compared against numeric keys compares
+    * numerically, so fact '07' matches key 7; cast-to-string pruning
+    * would skip its file). */
+  private[graft] def dfpTypesOk(factDt: DataType, keyDt: DataType): Boolean = {
+    def integral(t: DataType): Boolean = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    factDt == keyDt || (integral(factDt) && integral(keyDt))
+  }
+
   /** Per-file [min, max] rows of `column`'s stats sidecar (empty when
     * the column is not indexed) — metadata only, the inputs
     * [[graft.sources.TxnLayout.boundsStaleness]] folds. */
@@ -761,103 +737,4 @@ object TxnStats {
       case _ => (a: AnyRef, b: AnyRef) =>
         a.asInstanceOf[Comparable[AnyRef]].compareTo(b)
     }
-
-  /** The fact scan [[dfpFiles]] prunes, DV-aware like [[prunedRead]]:
-    * the returned frame holds every fact row an inner equi-join on
-    * `column` against `dimKeys` can match (and possibly rows it won't —
-    * pruning is file-granular; the JOIN is the exact filter). Feed it
-    * to the join in place of the full table read. */
-  def dfpRead(spark: SparkSession, table: String, column: String,
-              dimKeys: DataFrame,
-              maxExactKeys: Long = 1000000L): DataFrame = {
-    val (toRead, _) = dfpFiles(spark, table, column, dimKeys, maxExactKeys)
-    val (live, dvFiles) = TxnTable.liveSplit(table)
-    require(live.nonEmpty, s"no live files in $table")
-    val pick = if (toRead.nonEmpty) toRead else live.take(1)
-    val df = TxnTable.readFileList(spark, table, pick ++ dvFiles)
-    if (toRead.nonEmpty) df else df.filter(lit(false))
-  }
-
-  /** OUTER-JOIN dynamic file pruning — the left-outer star probe
-    * `probe LEFT JOIN fact ON probe.k = fact.column`: the PROBE side is
-    * preserved (every probe row survives, matched or null-extended) and
-    * must never be pruned, but the fact table is the NULL-EXTENDING
-    * side — a fact row only reaches the output by MATCHING a probe key,
-    * exactly inner semantics from the fact side — so fact files whose
-    * [min, max] no probe key can land in are safely skipped: the rows
-    * they hold could only have produced matches that provably don't
-    * exist, and the probe rows they fail to match null-extend
-    * identically whether the file was read or not. Same two pruning
-    * regimes as [[dfpRead]] (one bounded aggregate; gap pruning under
-    * the NDV gate); `preservedKeys` is the probe side's key column,
-    * pre-filtered. Feed the result to the outer join AS the
-    * null-extending side in place of the full fact read. */
-  def dfpReadOuter(spark: SparkSession, table: String, column: String,
-                   preservedKeys: DataFrame,
-                   maxExactKeys: Long = 1000000L): DataFrame =
-    dfpRead(spark, table, column, preservedKeys, maxExactKeys)
-
-  /** MULTI-COLUMN dynamic file pruning — the fact probed by SEVERAL
-    * filtered dims at once (the star's common shape: date dim AND part
-    * dim both filtered). Each (column, keys) pair prunes independently
-    * through [[dfpFiles]] and the per-column file sets INTERSECT:
-    * sound by composition, because each single-column prune is
-    * individually sound for the inner/semi fact side — a file one
-    * column's prune skips provably holds no row joinable on THAT
-    * column, hence no row surviving the conjunction of all the joins.
-    * Unindexed live files survive every per-column prune (each keeps
-    * them), so they survive the intersection — never skipped blind.
-    * A dim with no joinable key empties its set, and correctly empties
-    * the intersection (the inner star is provably empty). Cost is one
-    * bounded aggregate (+ at most one gated key collect) per column —
-    * |probes| metadata passes, no fact bytes. Same soundness envelope
-    * as [[dfpFiles]]: inner/left-semi from the fact side, or the fact
-    * as an outer join's null-extending side; NEVER a preserved side. */
-  def dfpFilesMulti(spark: SparkSession, table: String,
-                    probes: Seq[(String, DataFrame)],
-                    maxExactKeys: Long = 1000000L): (Seq[String], Int) = {
-    require(probes.nonEmpty, "dfpFilesMulti wants at least one (column, keys) probe")
-    require(probes.map(_._1).distinct.size == probes.size,
-      s"duplicate probe columns: ${probes.map(_._1)} — union the key frames instead")
-    val live = TxnTable.liveSplit(table)._1
-    val sets = probes.map { case (c, keys) =>
-      dfpFiles(spark, table, c, keys, maxExactKeys)._1.toSet
-    }
-    (live.filter(f => sets.forall(_.contains(f))), live.size)
-  }
-
-  /** The fact scan [[dfpFilesMulti]] prunes — DV-aware like
-    * [[dfpRead]]; feed it to the multi-dim join in place of the full
-    * fact read (the joins remain the exact filters). */
-  def dfpReadMulti(spark: SparkSession, table: String,
-                   probes: Seq[(String, DataFrame)],
-                   maxExactKeys: Long = 1000000L): DataFrame = {
-    val (toRead, _) = dfpFilesMulti(spark, table, probes, maxExactKeys)
-    val (live, dvFiles) = TxnTable.liveSplit(table)
-    require(live.nonEmpty, s"no live files in $table")
-    val pick = if (toRead.nonEmpty) toRead else live.take(1)
-    val df = TxnTable.readFileList(spark, table, pick ++ dvFiles)
-    if (toRead.nonEmpty) df else df.filter(lit(false))
-  }
-
-  /** OUTER MULTI-COLUMN dynamic file pruning — the left-outer star
-    * probed by SEVERAL preserved dims at once:
-    * `probe LEFT JOIN fact ON p.a = fact.a AND p.b = fact.b` with the
-    * probe side preserved (never pruned) and the fact null-extending
-    * on EVERY conjunct. A fact row then reaches the output only by
-    * matching ALL the keys — exactly the inner conjunction from the
-    * fact side — so each per-column prune is individually sound
-    * ([[dfpReadOuter]]'s argument) and their INTERSECTION composes
-    * precisely like [[dfpFilesMulti]]: a file skipped on either column
-    * provably holds no row matching that column's keys, hence no row
-    * surviving the conjunction; the probe rows it fails to match
-    * null-extend identically whether the file was read or not.
-    * UNSOUND for the disjunctive form (ON p.a = fact.a OR …) and for
-    * any shape where the fact is preserved — same envelope as every
-    * dfp form here. Feed the result to the outer join AS the
-    * null-extending side in place of the full fact read. */
-  def dfpReadOuterMulti(spark: SparkSession, table: String,
-                        probes: Seq[(String, DataFrame)],
-                        maxExactKeys: Long = 1000000L): DataFrame =
-    dfpReadMulti(spark, table, probes, maxExactKeys)
 }

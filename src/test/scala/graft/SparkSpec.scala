@@ -25,6 +25,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** `body` planned with join-driven file pruning off: the reference a
+    * pruned plan's rows are compared against. */
+  def unpruned[A](body: => A): A = {
+    spark.conf.set("spark.graft.autoDfp.enabled", "false")
+    try body finally spark.conf.unset("spark.graft.autoDfp.enabled")
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one forked JVM — don't stop it per-suite
     super.afterAll()

@@ -6,7 +6,6 @@ import graft.{SparkSpec, Trace}
 import graft.sources.{TxnStats, TxnTable}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Behavior specs for auto-injected dynamic file pruning: a PLAIN
@@ -18,6 +17,7 @@ import org.apache.spark.sql.functions._
 class AutoFilePruneSpec extends SparkSpec {
 
   import spark.implicits._
+  import AutoFilePrune.filesScanned
 
   private val root = "/root/repo/target/tmp/spec_autodfp"
   private val factT = s"$root/fact"
@@ -39,25 +39,12 @@ class AutoFilePruneSpec extends SparkSpec {
   private val dimRows = Seq((5L, "a"), (250L, "b"), (399L, "c"))
   private def dim = dimRows.toDF("dk", "tag")
 
-  /** Files the FACT scan reads in the optimized plan (max over scans —
-    * the dim sides here are LocalRelations, never file scans). */
-  private def factFiles(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation =>
-        lr.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.length
-    }.maxOption.getOrElse(0) // 0: Spark folded the scan away entirely
-
-  private def unpruned[A](body: => A): A = {
-    spark.conf.set("spark.graft.autoDfp.enabled", "false")
-    try body finally spark.conf.unset("spark.graft.autoDfp.enabled")
-  }
-
   test("plain inner join: 3 of 4 files open, result identical to unpruned") {
     def q = TxnTable.read(spark, factT).join(dim, col("k") === col("dk"))
     val expected = unpruned { q.collect().toSet }
-    assert(unpruned { factFiles(q) } == 4)
+    assert(unpruned { filesScanned(q, factT) } == 4)
     val pruned = q
-    assert(factFiles(pruned) == 3, pruned.queryExecution.optimizedPlan)
+    assert(filesScanned(pruned, factT) == 3, pruned.queryExecution.optimizedPlan)
     assert(pruned.collect().toSet == expected)
     assert(expected.size == 3)
   }
@@ -67,7 +54,7 @@ class AutoFilePruneSpec extends SparkSpec {
       .filter(col("v") % 2 === 0)
       .select(col("k"), (col("v") + 1).as("v1"))
       .join(dim.filter(col("tag") =!= "zzz"), col("k") === col("dk"))
-    assert(factFiles(q) == 3)
+    assert(filesScanned(q, factT) == 3)
     assert(q.collect().toSet == unpruned { q.collect().toSet })
   }
 
@@ -75,7 +62,7 @@ class AutoFilePruneSpec extends SparkSpec {
     val probe = Seq(5L, 250L, 399L, -1L).toDF("dk")
     def extending = probe.join(TxnTable.read(spark, factT),
       col("dk") === col("k"), "left")
-    assert(factFiles(extending) == 3)
+    assert(filesScanned(extending, factT) == 3)
     val rows = extending.collect()
     assert(rows.length == 4 && rows.count(_.isNullAt(1)) == 1,
       "null-extended probe row must survive the prune")
@@ -84,7 +71,7 @@ class AutoFilePruneSpec extends SparkSpec {
     // surface, matched or not — never pruned
     def preserved = TxnTable.read(spark, factT).join(probe,
       col("k") === col("dk"), "left")
-    assert(factFiles(preserved) == 4)
+    assert(filesScanned(preserved, factT) == 4)
     assert(preserved.count() == 400)
   }
 
@@ -93,11 +80,11 @@ class AutoFilePruneSpec extends SparkSpec {
       col("k") === col("dk"), "left_anti")
     // fact is the preserved output of an anti join — right side is the
     // prunable one, but it's a LocalRelation; fact must stay 4 files
-    assert(factFiles(anti) == 4)
+    assert(filesScanned(anti, factT) == 4)
     assert(anti.count() == 397)
     def semi = TxnTable.read(spark, factT).join(dim,
       col("k") === col("dk"), "left_semi")
-    assert(factFiles(semi) == 3)
+    assert(filesScanned(semi, factT) == 3)
     assert(semi.collect().map(_.getLong(0)).toSet == Set(5L, 250L, 399L))
   }
 
@@ -106,7 +93,7 @@ class AutoFilePruneSpec extends SparkSpec {
     // PropagateEmptyRelation folds the whole join first (factFiles 0)
     val noKeys = Seq.empty[Long].toDF("dk")
     def q = TxnTable.read(spark, factT).join(noKeys, col("k") === col("dk"))
-    assert(factFiles(q) == 0)
+    assert(filesScanned(q, factT) == 0)
     assert(q.count() == 0)
     // an all-NULL parquet dim (Catalyst can't fold a file scan): the
     // rule measures zero joinable keys → the scan keeps ONE provably
@@ -116,17 +103,17 @@ class AutoFilePruneSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(nullDir)
     def qn = TxnTable.read(spark, factT)
       .join(spark.read.parquet(nullDir), col("k") === col("dk"))
-    assert(factFiles(qn) == 1) // max over fact scan (1 kept) + dim scan (1)
+    assert(filesScanned(qn, factT) == 1)
     assert(qn.count() == 0)
   }
 
   test("gates decline: kill switch, dim budget, non-determinism, non-txn scan, blocked walk") {
     def q = TxnTable.read(spark, factT).join(dim, col("k") === col("dk"))
-    unpruned { assert(factFiles(q) == 4) }
+    unpruned { assert(filesScanned(q, factT) == 4) }
     spark.conf.set("spark.graft.autoDfp.maxDimBytes", "1")
-    try assert(factFiles(q) == 4, "over-budget dim must decline")
+    try assert(filesScanned(q, factT) == 4, "over-budget dim must decline")
     finally spark.conf.unset("spark.graft.autoDfp.maxDimBytes")
-    assert(factFiles(q) == 3, "and prune again once the budget is back")
+    assert(filesScanned(q, factT) == 3, "and prune again once the budget is back")
 
     // a non-deterministic FILTER below the join (it cannot move): the
     // plan-time key set could disagree with the runtime rows → decline.
@@ -141,16 +128,16 @@ class AutoFilePruneSpec extends SparkSpec {
     val pdim = spark.read.parquet(dimDir)
     def qr = TxnTable.read(spark, factT).join(pdim.filter(rand() < 0.999999),
       col("k") === col("dk"))
-    assert(factFiles(qr) == 4, "non-deterministic dim filter must decline")
+    assert(filesScanned(qr, factT) == 4, "non-deterministic dim filter must decline")
     def qs = TxnTable.read(spark, factT).join(pdim.sample(0.999999),
       col("k") === col("dk"))
-    assert(factFiles(qs) == 4, "sampled dim must decline")
+    assert(filesScanned(qs, factT) == 4, "sampled dim must decline")
     // a non-deterministic COLUMN beside the key: whether Catalyst
     // hoists it above the join (prunable) or not (declined) the
     // result must match — pin correctness, not the plan
     def qc = TxnTable.read(spark, factT).join(pdim.withColumn("r", rand()),
       col("k") === col("dk"))
-    assert(factFiles(qc) <= 4 &&
+    assert(filesScanned(qc, factT) <= 4 &&
       qc.select("k", "dk", "tag").collect().toSet ==
         unpruned { qc.select("k", "dk", "tag").collect().toSet })
 
@@ -158,25 +145,25 @@ class AutoFilePruneSpec extends SparkSpec {
     val plainDir = s"$root/plain"
     TxnTable.read(spark, factT).write.mode("overwrite").parquet(plainDir)
     def qp = spark.read.parquet(plainDir).join(dim, col("k") === col("dk"))
-    assert(factFiles(qp) ==
+    assert(filesScanned(qp, plainDir) ==
       spark.read.parquet(plainDir).inputFiles.length)
 
     // an Aggregate between the join and the scan blocks the walk —
     // pruning under it could change the aggregated values
     def qa = TxnTable.read(spark, factT).groupBy("k")
       .agg(sum("v").as("sv")).join(dim, col("k") === col("dk"))
-    assert(factFiles(qa) == 4)
+    assert(filesScanned(qa, factT) == 4)
     assert(qa.count() == 3)
   }
 
   test("full outer and no-equality joins never prune") {
     def fo = TxnTable.read(spark, factT).join(dim,
       col("k") === col("dk"), "full_outer")
-    assert(factFiles(fo) == 4)
+    assert(filesScanned(fo, factT) == 4)
     assert(fo.count() == 400 + 0) // every dim key matches a fact row
     def rng = TxnTable.read(spark, factT).join(dim,
       col("k") < col("dk"))
-    assert(factFiles(rng) == 4)
+    assert(filesScanned(rng, factT) == 4)
   }
 
   test("SQL surface: a plain spark.sql star over a txn view prunes identically") {
@@ -185,7 +172,7 @@ class AutoFilePruneSpec extends SparkSpec {
     def q = spark.sql(
       """SELECT f.k, f.v, d.tag FROM autodfp_fact f
         |JOIN autodfp_dim d ON f.k = d.dk""".stripMargin)
-    assert(factFiles(q) == 3, q.queryExecution.optimizedPlan)
+    assert(filesScanned(q, factT) == 3, q.queryExecution.optimizedPlan)
     assert(q.collect().toSet == unpruned { q.collect().toSet })
     // and through a derived VIEW with a filter — the walk descends the
     // SubqueryAlias/Project/Filter stack SQL planning builds
@@ -194,41 +181,95 @@ class AutoFilePruneSpec extends SparkSpec {
     def qv = spark.sql(
       """SELECT f.k FROM autodfp_fact_view f
         |JOIN autodfp_dim d ON f.k = d.dk""".stripMargin)
-    assert(factFiles(qv) == 3)
+    assert(filesScanned(qv, factT) == 3)
     assert(qv.count() == 3)
   }
 
-  test("conjunctive two-column keys compose: the auto form of multi-column DFP") {
-    // a second fact clustered on BOTH (a, b): a 2×2 grid of files; the
-    // dim pins one (a-half, b-half) cell per conjunct — each equality
-    // prunes its own column and the SAME scan narrows twice (the
-    // per-column tag admits the second measurement), landing on the
-    // one shared cell: strictly fewer files than either alone
-    val gridT = s"$root/grid"
-    FileUtils.deleteQuietly(new File(gridT))
+  // a second fact clustered on BOTH (a, b): a 2×2 grid of files, stats
+  // on a and b (not v). id 50 → (a=50, b=350) lives in the
+  // (a<200, b>=200) cell only; a prune on a alone or b alone keeps its
+  // half (2 files, values interleave inside the half)
+  private lazy val gridT: String = {
+    val t = s"$root/grid"
+    FileUtils.deleteQuietly(new File(t))
     val g = spark.range(0, 400).select(col("id").as("a"),
       (col("id") * 7 % 400).as("b"), col("id").as("v"))
     Seq(col("a") < 200 && col("b") >= 200, col("a") < 200 && col("b") < 200,
       col("a") >= 200 && col("b") >= 200, col("a") >= 200 && col("b") < 200)
-      .foreach(p => TxnTable.commit(spark, g.filter(p).coalesce(1), gridT,
+      .foreach(p => TxnTable.commit(spark, g.filter(p).coalesce(1), t,
         overwrite = false))
-    TxnStats.refresh(spark, gridT, "a")
-    TxnStats.refresh(spark, gridT, "b")
-    // id 50 → (a=50, b=350): the (a<200, b>=200) cell only. Each
-    // single-column prune keeps its half (2 files, values interleave
-    // inside the half), the conjunction opens the one shared cell
+    TxnStats.refresh(spark, t, "a")
+    TxnStats.refresh(spark, t, "b")
+    t
+  }
+
+  test("conjunctive two-column keys compose: the auto form of multi-column DFP") {
+    // the dim pins one (a-half, b-half) cell per conjunct — each
+    // equality prunes its own column and the SAME scan narrows twice
+    // (the per-column tag admits the second measurement), landing on
+    // the one shared cell: strictly fewer files than either alone
     val d2 = Seq((50L, 350L)).toDF("da", "db")
     def q = TxnTable.read(spark, gridT).join(d2,
       col("a") === col("da") && col("b") === col("db"))
-    assert(factFiles(q) == 1, q.queryExecution.optimizedPlan)
+    assert(filesScanned(q, gridT) == 1, q.queryExecution.optimizedPlan)
     assert(q.select("v").collect().map(_.getLong(0)).toSeq == Seq(50L))
     // one indexed + one UNINDEXED column: only the indexed conjunct
     // prunes (2 of 4), the unindexed one declines — never blind-skips
     val d3 = Seq((50L, 999L)).toDF("da", "dv")
     def qu = TxnTable.read(spark, gridT).join(d3,
       col("a") === col("da") && col("v") === col("dv"))
-    assert(factFiles(qu) == 2, qu.queryExecution.optimizedPlan)
+    assert(filesScanned(qu, gridT) == 2, qu.queryExecution.optimizedPlan)
     assert(qu.count() == 0)
+  }
+
+  test("stacked star: two dims joined one after the other intersect their prunes") {
+    // fact ⋈ dimA ⋈ dimB: the outer join's walk descends through the
+    // inner join to the scan the inner join already pruned on a, and
+    // prunes it again on b — the two-dim star lands on the one cell
+    // both dims can reach
+    val dimA = Seq(50L).toDF("da")
+    val dimB = Seq(350L).toDF("db")
+    def byA = TxnTable.read(spark, gridT).join(dimA, col("a") === col("da"))
+    def byB = TxnTable.read(spark, gridT).join(dimB, col("b") === col("db"))
+    def star = byA.join(dimB, col("b") === col("db"))
+    assert(filesScanned(byA, gridT) == 2)
+    assert(filesScanned(byB, gridT) == 2)
+    assert(filesScanned(star, gridT) == 1, star.queryExecution.optimizedPlan)
+    assert(star.select("v").collect().map(_.getLong(0)).toSeq == Seq(50L))
+    assert(star.collect().toSet == unpruned { star.collect().toSet })
+  }
+
+  test("every decision on a txn scan is counted: pruned, or declined with its gate") {
+    // the dfp.* outcome counters one optimization of `df` records
+    def outcomes(df: DataFrame): Map[String, Long] =
+      Trace.record(spark)(df.queryExecution.optimizedPlan)._2.rows
+        .flatMap(_.counts).filter(_._1.startsWith("dfp.")).filterNot(
+          _._1.startsWith("dfp.skipCache")).groupMapReduce(_._1)(_._2)(_ + _)
+    def fact = TxnTable.read(spark, factT)
+    assert(outcomes(fact.join(dim, col("k") === col("dk"))) ==
+      Map("dfp.pruned" -> 1L))
+    assert(outcomes(fact.join(dim, col("v") === col("dk"))) ==
+      Map("dfp.declined.unindexed" -> 1L))
+    assert(outcomes(fact.join(Seq(5L, 150L, 250L, 399L).toDF("dk"),
+      col("k") === col("dk"))) == Map("dfp.declined.nothingSkippable" -> 1L))
+    spark.conf.set("spark.graft.autoDfp.maxDimBytes", "1")
+    try assert(outcomes(fact.join(dim, col("k") === col("dk"))) ==
+      Map("dfp.declined.dimBytes" -> 1L))
+    finally spark.conf.unset("spark.graft.autoDfp.maxDimBytes")
+    val dimDir = s"$root/dimcount"
+    dim.coalesce(1).write.mode("overwrite").parquet(dimDir)
+    assert(outcomes(fact.join(spark.read.parquet(dimDir).sample(0.999999),
+      col("k") === col("dk"))) == Map("dfp.declined.nondeterministic" -> 1L))
+    val oneT = s"$root/onefile"
+    FileUtils.deleteQuietly(new File(oneT))
+    TxnTable.commit(spark, spark.range(0, 10).select(col("id").as("k"))
+      .coalesce(1), oneT, overwrite = false)
+    TxnStats.refresh(spark, oneT, "k")
+    assert(outcomes(TxnTable.read(spark, oneT).join(dim,
+      col("k") === col("dk"))) == Map("dfp.declined.fewFiles" -> 1L))
+    // a plain parquet scan is no txn scan: nothing to count
+    assert(outcomes(spark.read.parquet(dimDir).join(dim.select(
+      col("dk").as("x")), col("dk") === col("x"))) == Map.empty)
   }
 
   test("mixed-width integral keys: the analyzer's widening cast doesn't block the prune") {
@@ -245,13 +286,13 @@ class AutoFilePruneSpec extends SparkSpec {
     // with cast(ik AS BIGINT) — widening, monotone, prunable
     val dimL = Seq(5L, 250L, 399L).toDF("dk")
     def q = TxnTable.read(spark, intT).join(dimL, col("ik") === col("dk"))
-    assert(factFiles(q) == 3, q.queryExecution.optimizedPlan)
+    assert(filesScanned(q, intT) == 3, q.queryExecution.optimizedPlan)
     assert(q.collect().toSet == unpruned { q.collect().toSet })
     // a user-written NARROWING cast truncates — raw bounds cannot
     // decide post-cast equality, so it must decline
     def qn = TxnTable.read(spark, factT).join(dimL,
       col("k").cast("int") === col("dk").cast("int"))
-    assert(factFiles(qn) == 4, qn.queryExecution.optimizedPlan)
+    assert(filesScanned(qn, factT) == 4, qn.queryExecution.optimizedPlan)
   }
 
   test("micro-batch bodies decline: foreachBatch joins never pay plan-time dim evaluation") {
@@ -266,14 +307,14 @@ class AutoFilePruneSpec extends SparkSpec {
     @volatile var inBatch = -1
     val q = ms.toDF().writeStream.foreachBatch {
       (_: DataFrame, _: Long) =>
-        inBatch = factFiles(
-          TxnTable.read(spark, factT).join(dim, col("k") === col("dk")))
+        inBatch = filesScanned(
+          TxnTable.read(spark, factT).join(dim, col("k") === col("dk")), factT)
     }.start()
     try { ms.addData(1L); q.processAllAvailable() } finally q.stop()
     assert(inBatch == 4,
       s"a micro-batch body must keep the full scan, opened $inBatch")
-    assert(factFiles(TxnTable.read(spark, factT)
-      .join(dim, col("k") === col("dk"))) == 3,
+    assert(filesScanned(TxnTable.read(spark, factT)
+      .join(dim, col("k") === col("dk")), factT) == 3,
       "the same join on the caller thread still prunes")
   }
 
@@ -305,7 +346,7 @@ class AutoFilePruneSpec extends SparkSpec {
       dimT, overwrite = false)
     val q2 = TxnTable.read(spark, factT).join(TxnTable.read(spark, dimT),
       col("k") === col("dk"))
-    val (files2, r3) = Trace.record(spark)(factFiles(q2))
+    val (files2, r3) = Trace.record(spark)(filesScanned(q2, factT))
     assert(files2 == 4, "the new dim key must defeat the old skip set")
     assert(r3.count(miss) > 0, "a changed dim snapshot must MISS, never reuse stale keys")
     assert(q2.collect().length == 4)
@@ -321,7 +362,7 @@ class AutoFilePruneSpec extends SparkSpec {
     fact2.filter(col("k") < 200).coalesce(1).write.parquet(s"$plainRoot/data/seed")
     def plainQ = spark.read.parquet(s"$plainRoot/data/seed")
       .join(dim, col("k") === col("dk"))
-    assert(factFiles(plainQ) ==
+    assert(filesScanned(plainQ, plainRoot) ==
       spark.read.parquet(s"$plainRoot/data/seed").inputFiles.length)
     // 2) a txn table is BORN under the previously-negative ancestry
     //    (publish invalidates the root cache) — its star must prune
@@ -332,7 +373,7 @@ class AutoFilePruneSpec extends SparkSpec {
         overwrite = false))
     TxnStats.refresh(spark, bornT, "k")
     def q = TxnTable.read(spark, bornT).join(dim, col("k") === col("dk"))
-    assert(factFiles(q) == 3,
+    assert(filesScanned(q, bornT) == 3,
       "a stale negative root resolution must not hide a newborn table")
     assert(q.collect().toSet == unpruned { q.collect().toSet })
     // 3) sidecar metadata memoization: a SECOND stats column refreshed
@@ -340,7 +381,7 @@ class AutoFilePruneSpec extends SparkSpec {
     TxnStats.refresh(spark, bornT, "v")
     val dv = Seq(15L).toDF("dv") // v = 3k hits only the k<100 file
     def qv = TxnTable.read(spark, bornT).join(dv, col("v") === col("dv"))
-    assert(factFiles(qv) == 1,
+    assert(filesScanned(qv, bornT) == 1,
       "a sidecar refreshed after a cached column listing must be seen")
   }
 
@@ -374,11 +415,11 @@ class AutoFilePruneSpec extends SparkSpec {
       // 0/2/3 AND file 1 ([100,200)) — range alone cannot gap-prune,
       // so all 4 stay: the regime switch is the behavior under test
       def q = TxnTable.read(spark, factT).join(dim, col("k") === col("dk"))
-      assert(factFiles(q) == 4)
+      assert(filesScanned(q, factT) == 4)
       // a CONTIGUOUS low dim range-prunes to the one covering file
       val lowDim = Seq(1L, 2L, 3L).toDF("dk")
       def ql = TxnTable.read(spark, factT).join(lowDim, col("k") === col("dk"))
-      assert(factFiles(ql) == 1)
+      assert(filesScanned(ql, factT) == 1)
       assert(ql.count() == 3)
     } finally spark.conf.unset("spark.graft.autoDfp.maxExactKeys")
   }

@@ -3,9 +3,9 @@ package graft.sources
 import java.io.File
 
 import graft.{ChildJvm, SparkSpec}
+import graft.plans.AutoFilePrune.filesScanned
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The writer of [[CrossProcessSpec]], run in a child JVM: it appends
@@ -53,18 +53,6 @@ class CrossProcessSpec extends SparkSpec {
   // appended range
   private def dim = Seq(5L, 250L, 399L, 450L).toDF("dk")
 
-  /** Files the fact scan reads in the optimized plan. */
-  private def factFiles(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation =>
-        lr.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.length
-    }.max
-
-  private def unpruned[A](body: => A): A = {
-    spark.conf.set("spark.graft.autoDfp.enabled", "false")
-    try body finally spark.conf.unset("spark.graft.autoDfp.enabled")
-  }
-
   override def beforeAll(): Unit = {
     super.beforeAll()
     FileUtils.deleteQuietly(new File(root))
@@ -80,14 +68,14 @@ class CrossProcessSpec extends SparkSpec {
     assert(TxnTable.read(spark, fact).count() == 400)
     assert(TxnTable.snapshotRowCount(fact) == 400)
     def star = TxnTable.read(spark, fact).join(dim, col("k") === col("dk"))
-    assert(factFiles(star) == 3)
+    assert(filesScanned(star, fact) == 3)
     assert(star.count() == 3)
     def byV = TxnTable.read(spark, fact).join(Seq(105L).toDF("dv"),
       col("v") === col("dv"))
-    assert(factFiles(byV) == 4, "no stats on v yet: nothing prunes")
+    assert(filesScanned(byV, fact) == 4, "no stats on v yet: nothing prunes")
     def plainStar = spark.read.parquet(s"$plain/data/seed")
       .join(dim, col("k") === col("dk"))
-    assert(factFiles(plainStar) == 4, "a plain dir never prunes")
+    assert(filesScanned(plainStar, plain) == 4, "a plain dir never prunes")
 
     ChildJvm.run("graft.sources.CrossProcessWriter", Seq(fact, plain),
       new File(s"$root/child.log"))
@@ -97,10 +85,10 @@ class CrossProcessSpec extends SparkSpec {
     // the appended file has no k stats, so it is read, never skipped
     assert(star.collect().toSet == unpruned(star.collect().toSet))
     assert(star.count() == 4)
-    assert(factFiles(byV) == 1, "the child's stats on v must prune")
+    assert(filesScanned(byV, fact) == 1, "the child's stats on v must prune")
     assert(byV.collect().toSeq.map(_.getAs[Long]("k")) == Seq(15L))
     def bornStar = TxnTable.read(spark, plain).join(dim, col("k") === col("dk"))
-    assert(factFiles(bornStar) == 3,
+    assert(filesScanned(bornStar, plain) == 3,
       "a table another process created at a plain dir must prune")
     assert(bornStar.collect().toSet == unpruned(bornStar.collect().toSet))
   }

@@ -3,8 +3,11 @@ package graft.sources
 import java.io.File
 
 import graft.SparkSpec
+import graft.plans.AutoFilePrune.filesScanned
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** Incremental min-max stats under the txn log: O(Δ) refresh, pruning
   * correctness, the never-skip-blind freshness rule, and stale-stats
@@ -287,46 +290,55 @@ class TxnStatsSpec extends SparkSpec {
       "deleted rows must not resurface through the stats-pruned read")
   }
 
-  test("dfp: exact-key gap pruning skips files the range envelope keeps") {
-    val t = fresh("dfp")
+  // The dfp tests below pin the per-file decision TxnStats.dfpSkipSet
+  // makes, seen through the AutoFilePrune rule on a plain join (the
+  // files its optimized plan scans), or called directly where the rule
+  // declines first (a one-file scan, a refused key type).
+
+  private def quartiles(name: String): String = {
+    val t = fresh(name)
     Seq((0L, 100L), (100L, 200L), (200L, 300L), (300L, 400L))
       .foreach { case (lo, hi) => commitRange(t, lo, hi) }
     TxnStats.refresh(spark, t, "id")
+    t
+  }
+
+  test("dfp: exact-key gap pruning skips files the range envelope keeps") {
+    val t = quartiles("dfp")
     // keys 5 / 250 / 399 land in files 0, 2, 3 — the [100, 200) file
     // holds none, but the range envelope [5, 399] covers all four
     val dim = Seq(5L, 250L, 399L).toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "id", dim)
-    assert(nLive == 4 && toRead.size == 3,
-      s"gap pruning should skip exactly the keyless file, got $toRead")
+    def star = TxnTable.read(spark, t).join(dim, col("id") === col("k"))
+    assert(filesScanned(star, t) == 3,
+      "gap pruning should skip exactly the keyless file")
     assert(TxnStats.pruneFiles(spark, t, "id", 5L, 399L)._1.size == 4,
       "the range envelope alone keeps every file — the gap is the win")
     // soundness: the pruned join equals the full join, row for row
-    val fact = TxnStats.dfpRead(spark, t, "id", dim)
-    val pruned = fact.join(dim, fact("id") === dim("k"))
-      .select("id", "payload").as[(Long, Long)].collect().sorted.toSeq
-    val full = TxnTable.read(spark, t)
-    val all = full.join(dim, full("id") === dim("k"))
-      .select("id", "payload").as[(Long, Long)].collect().sorted.toSeq
-    assert(pruned == all && all.size == 3)
+    def rows = star.select("id", "payload").as[(Long, Long)].collect()
+      .sorted.toSeq
+    val pruned = rows
+    assert(pruned == unpruned(rows) && pruned.size == 3)
   }
 
   test("dfp: key-count gate falls back to range pruning; empty dim reads nothing") {
-    val t = fresh("dfp_gate")
-    Seq((0L, 100L), (100L, 200L), (200L, 300L), (300L, 400L))
-      .foreach { case (lo, hi) => commitRange(t, lo, hi) }
-    TxnStats.refresh(spark, t, "id")
+    val t = quartiles("dfp_gate")
     val dim = Seq(5L, 250L, 399L).toDF("k")
-    // gate below the key count: no driver collect of keys, range-only
-    val (gated, _) = TxnStats.dfpFiles(spark, t, "id", dim, maxExactKeys = 2)
-    assert(gated.size == 4, "above the gate only the [min,max] envelope prunes")
-    // empty dim: an inner join can match nothing — zero files, empty frame
+    def star = TxnTable.read(spark, t).join(dim, col("id") === col("k"))
+    // cap below the key count: no driver collect of keys, range-only
+    spark.conf.set("spark.graft.autoDfp.maxExactKeys", "2")
+    try assert(filesScanned(star, t) == 4,
+      "above the cap only the [min,max] envelope prunes")
+    finally spark.conf.unset("spark.graft.autoDfp.maxExactKeys")
+    assert(filesScanned(star, t) == 3)
+    // empty dim: an inner join can match nothing — no joinable key,
+    // and the join reads no fact file at all
     val none = Seq.empty[Long].toDF("k")
-    val (files0, n0) = TxnStats.dfpFiles(spark, t, "id", none)
-    assert(files0.isEmpty && n0 == 4)
-    assert(TxnStats.dfpRead(spark, t, "id", none).count() == 0)
+    assert(TxnStats.dfpSkipSet(spark, t, "id", LongType, none, 1000000L).isEmpty)
+    def emptyStar = TxnTable.read(spark, t).join(none, col("id") === col("k"))
+    assert(filesScanned(emptyStar, t) == 0 && emptyStar.count() == 0)
     // all-NULL dim keys are identical to an empty dim under inner-join
     val nulls = Seq[Option[Long]](None, None).toDF("k")
-    assert(TxnStats.dfpFiles(spark, t, "id", nulls)._1.isEmpty)
+    assert(TxnStats.dfpSkipSet(spark, t, "id", LongType, nulls, 1000000L).isEmpty)
   }
 
   test("dfp: unindexed live files are always read; int keys cast to the fact type") {
@@ -338,11 +350,9 @@ class TxnStatsSpec extends SparkSpec {
     // Int dim keys against a BIGINT fact column: key 5 hits file 0 only,
     // but the unindexed third file must still be read (never skip blind)
     val dim = Seq(5).toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "id", dim)
-    assert(nLive == 3 && toRead.size == 2,
-      s"file 0 (key hit) + the unindexed file, got $toRead")
-    val fact = TxnStats.dfpRead(spark, t, "id", dim)
-    assert(fact.join(dim, fact("id") === dim("k")).count() == 1)
+    def star = TxnTable.read(spark, t).join(dim, col("id") === col("k"))
+    assert(filesScanned(star, t) == 2, "file 0 (key hit) + the unindexed file")
+    assert(star.count() == 1)
   }
 
   test("dfp: cross-type keys refuse; integral pairs widen soundly either way") {
@@ -361,40 +371,41 @@ class TxnStatsSpec extends SparkSpec {
     // a key beyond int range can never match an int fact — and must
     // not WRAP into a false file hit (2^33 + 5 wraps to 5)
     val dim = Seq(5L, (1L << 33) + 5L).toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "id", dim)
-    assert(nLive == 2 && toRead.size == 1,
-      s"key 5 hits file 0 only; the overflowing key hits nothing, got $toRead")
+    def star = TxnTable.read(spark, t).join(dim, col("id") === col("k"))
+    assert(filesScanned(star, t) == 1,
+      "key 5 hits file 0 only; the overflowing key hits nothing")
+    assert(star.count() == 1)
     // a STRING dim against the int fact is refused loudly: the join's
     // own coercion compares numerically ('07' matches 7), which a
     // cast-to-fact-type prune would get wrong
     val e = intercept[IllegalArgumentException] {
-      TxnStats.dfpFiles(spark, t, "id", Seq("07").toDF("k"))
+      TxnStats.dfpSkipSet(spark, t, "id", IntegerType, Seq("07").toDF("k"),
+        1000000L)
     }
     assert(e.getMessage.contains("fact column type"), e.getMessage)
+    // ... and the plain join over that key never prunes, so '07' still
+    // finds its row
+    def strStar = TxnTable.read(spark, t)
+      .join(Seq("07").toDF("k"), col("id") === col("k"))
+    assert(filesScanned(strStar, t) == 2)
+    assert(strStar.count() == 1)
   }
 
   test("dfp outer: the null-extending fact side prunes, preserved probe rows survive") {
-    val t = fresh("dfp_outer")
-    Seq((0L, 100L), (100L, 200L), (200L, 300L), (300L, 400L))
-      .foreach { case (lo, hi) => commitRange(t, lo, hi) }
-    TxnStats.refresh(spark, t, "id")
+    val t = quartiles("dfp_outer")
     // probe keys land in files 0/2/3 plus one key matching NOTHING —
     // the fact (null-extending) side skips the keyless file, while the
     // unmatched probe row must still null-extend identically
     val probe = Seq(5L, 250L, 399L, -1L).toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "id", probe)
-    assert(nLive == 4 && toRead.size == 3, s"got $toRead")
-    val fact = TxnStats.dfpReadOuter(spark, t, "id", probe)
-    val pruned = probe.join(fact, probe("k") === fact("id"), "left")
-      .select("k", "id").collect()
+    def star = probe.join(TxnTable.read(spark, t), col("k") === col("id"),
+      "left")
+    assert(filesScanned(star, t) == 3)
+    def rows = star.select("k", "id").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -999L else r.getLong(1)))
       .sorted.toSeq
-    val full = TxnTable.read(spark, t)
-    val all = probe.join(full, probe("k") === full("id"), "left")
-      .select("k", "id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) -999L else r.getLong(1)))
-      .sorted.toSeq
-    assert(pruned == all, "outer-join results must be identical pruned vs full")
+    val pruned = rows
+    assert(pruned == unpruned(rows),
+      "outer-join results must be identical pruned vs full")
     assert(pruned.contains((-1L, -999L)),
       "the unmatched probe key must surface null-extended")
   }
@@ -409,12 +420,10 @@ class TxnStatsSpec extends SparkSpec {
     }
     TxnStats.refresh(spark, t, "s")
     val dim = Seq("a007", "c031").toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "s", dim)
-    assert(nLive == 3 && toRead.size == 2,
-      s"the all-b middle file holds neither key, got $toRead")
-    val fact = TxnStats.dfpRead(spark, t, "s", dim)
-    assert(fact.join(dim, fact("s") === dim("k"))
-      .select("id").as[Long].collect().sorted.toSeq == Seq(7L, 31L))
+    def star = TxnTable.read(spark, t).join(dim, col("s") === col("k"))
+    assert(filesScanned(star, t) == 2,
+      "the all-b middle file holds neither key")
+    assert(star.select("id").as[Long].collect().sorted.toSeq == Seq(7L, 31L))
   }
 
   test("dfp: string keys compare in Spark's UTF-8 byte order, not UTF-16") {
@@ -428,11 +437,11 @@ class TxnStatsSpec extends SparkSpec {
       t, overwrite = false)
     TxnStats.refresh(spark, t, "s")
     val dim = Seq("😀").toDF("k")
-    val (toRead, nLive) = TxnStats.dfpFiles(spark, t, "s", dim)
-    assert(nLive == 1 && toRead.size == 1,
+    assert(TxnStats.dfpSkipSet(spark, t, "s", StringType, dim, 1000000L) ==
+      Some(Set.empty[String]),
       "the file holds the key — skipping it loses the matching row")
-    val fact = TxnStats.dfpRead(spark, t, "s", dim)
-    assert(fact.join(dim, fact("s") === dim("k")).count() == 1)
+    assert(TxnTable.read(spark, t).join(dim, col("s") === col("k"))
+      .count() == 1)
   }
 
   test("dfp multi: per-column prunes intersect soundly; unindexed and empty-dim edges") {
@@ -448,36 +457,25 @@ class TxnStatsSpec extends SparkSpec {
     TxnStats.refresh(spark, t, "b")
     val dimA = Seq(5L).toDF("ka")   // a-low band
     val dimB = Seq(105L).toDF("kb") // b-high band
-    assert(TxnStats.dfpFiles(spark, t, "a", dimA)._1.size == 2)
-    assert(TxnStats.dfpFiles(spark, t, "b", dimB)._1.size == 2)
-    val probes = Seq("a" -> dimA, "b" -> dimB)
-    val (mFiles, nLive) = TxnStats.dfpFilesMulti(spark, t, probes)
-    assert(nLive == 4 && mFiles.size == 1,
-      s"the intersection is the one shared grid cell: $mFiles")
-    val fact = TxnStats.dfpReadMulti(spark, t, probes)
-    assert(fact.join(dimA, fact("a") === dimA("ka"))
-      .join(dimB, fact("b") === dimB("kb")).count() == 1L,
-      "the (5, 105) row lives in the kept cell")
+    def byA = TxnTable.read(spark, t).join(dimA, col("a") === col("ka"))
+    def star(db: DataFrame) = byA.join(db, col("b") === col("kb"))
+    assert(filesScanned(byA, t) == 2)
+    assert(filesScanned(TxnTable.read(spark, t)
+      .join(dimB, col("b") === col("kb")), t) == 2)
+    assert(filesScanned(star(dimB), t) == 1,
+      "the intersection is the one shared grid cell")
+    assert(star(dimB).count() == 1L, "the (5, 105) row lives in the kept cell")
     // an UNINDEXED live file survives every per-column prune, so it
     // survives the intersection — never skipped blind
     TxnTable.commit(spark, Seq((5L, 105L)).toDF("a", "b").coalesce(1),
       t, overwrite = false)
-    val (m2, _) = TxnStats.dfpFilesMulti(spark, t, probes)
-    assert(m2.size == 2, s"kept cell + the unindexed file: $m2")
-    assert(TxnStats.dfpReadMulti(spark, t, probes)
-      .filter(col("a") === 5L && col("b") === 105L).count() == 2L)
+    assert(filesScanned(star(dimB), t) == 2, "kept cell + the unindexed file")
+    assert(star(dimB).count() == 2L)
     // a dim with NO joinable key empties the intersection: the inner
     // star is provably empty, no fact bytes move
-    val (m3, _) = TxnStats.dfpFilesMulti(spark, t,
-      Seq("a" -> dimA, "b" -> spark.range(0).select(col("id").as("kb"))))
-    assert(m3.isEmpty)
-    assert(TxnStats.dfpReadMulti(spark, t,
-      Seq("a" -> dimA, "b" -> spark.range(0).select(col("id").as("kb"))))
-      .count() == 0L)
-    // duplicate probe columns refuse (union the key frames instead)
-    intercept[IllegalArgumentException] {
-      TxnStats.dfpFilesMulti(spark, t, Seq("a" -> dimA, "a" -> dimA))
-    }
+    val noKeys = spark.range(0).select(col("id").as("kb"))
+    assert(filesScanned(star(noKeys), t) == 1)
+    assert(star(noKeys).count() == 0L)
   }
 
   test("INT96 timestamps decline footer stats — never misread as all-null (row-loss guard)") {
