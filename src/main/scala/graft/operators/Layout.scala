@@ -386,14 +386,7 @@ object Layout {
     val staging = path + ".staging"
     spark.read.parquet(path).coalesce(nOut)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    if (!dir.renameTo(old))
-      throw new java.io.IOException(s"compact swap failed: $path -> $old (live table untouched)")
-    if (!new java.io.File(staging).renameTo(dir))
-      throw new java.io.IOException(
-        s"compact swap failed: $staging -> $path — previous table preserved at $old")
-    org.apache.commons.io.FileUtils.deleteDirectory(old)
+    graft.sources.AtomicFile.swapDir(new java.io.File(staging), dir)
     dataFiles(dir).length
   }
 

@@ -292,7 +292,9 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
       } finally inFlight.set(false)
     }
     val skipOpt =
-      try {
+      // a provably empty dim has no joinable key: no plan-time job
+      if (other.maxRows.contains(0L)) None
+      else try {
         // failures are never cached, nor are mutable-leaf dims
         // (cacheableDim); an uncacheable dim counts as a miss
         if (cacheableDim(other))

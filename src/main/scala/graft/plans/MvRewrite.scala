@@ -558,9 +558,6 @@ object MvRewrite extends Rule[LogicalPlan] {
             Alias(Max(need(s"max_$c").getOrElse(return None)).toAggregateExpression(),
               name)(exprId = al.exprId)
           case a: Average =>
-            if (!conf.getConfString(
-                "spark.graft.mvRewrite.avg.enabled", "true").toBoolean)
-              return None
             val c = measure(a.child).getOrElse(return None)
             Alias(Divide(
               Cast(Sum(need(s"sum_$c").getOrElse(return None)).toAggregateExpression(), DoubleType),
@@ -661,9 +658,6 @@ object MvRewrite extends Rule[LogicalPlan] {
             Alias(Max(attr(s"max_$c").getOrElse(return None)).toAggregateExpression(),
               name)(exprId = al.exprId)
           case a: Average =>
-            if (!conf.getConfString(
-                "spark.graft.mvRewrite.avg.enabled", "true").toBoolean)
-              return None
             val c = measure(a.child).getOrElse(return None)
             // exact integer sums, one final IEEE division — numerator is
             // NULL exactly when cnt_c sums to 0, matching AVG's
@@ -672,9 +666,7 @@ object MvRewrite extends Rule[LogicalPlan] {
             // so past 2^53 of per-group sum its low bits depend on
             // partitioning; this rewrite is the exact value instead —
             // equal whenever the base AVG is itself exact (sums < 2^53),
-            // strictly more accurate beyond. Callers needing
-            // bit-identity-with-base at any magnitude can disable just
-            // this rewrite via spark.graft.mvRewrite.avg.enabled=false.
+            // strictly more accurate beyond.
             Alias(Divide(
               Cast(Sum(attr(s"sum_$c").getOrElse(return None)).toAggregateExpression(), DoubleType),
               Cast(Sum(attr(s"cnt_$c").getOrElse(return None)).toAggregateExpression(), DoubleType)),

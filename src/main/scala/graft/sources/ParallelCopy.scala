@@ -1,60 +1,35 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.Overlap
 import org.apache.spark.SparkException
 import org.apache.spark.sql.SparkSession
 
-/** Bounded-parallel fan-out for replication file copies.
+/** Bounded-parallel fan-out for replication file copies. Each copy is
+  * [[AtomicFile.copyIfAbsent]], which also holds the crash-safety
+  * argument: a copy cut short leaves only an inert tmp, and a re-run
+  * skips finished targets. Copies are order-free (each lands its own
+  * target through its own tmp); the caller publishes only after
+  * [[copyAll]] returns, so every file of a batch lands first.
   *
-  * [[TxnTable.replicate]] and [[TxnCatalog.replicate]] copy every data
-  * file through the same crash-safe primitive (tmp + ATOMIC_MOVE,
-  * skip-if-present resume) — but running those copies one at a time on
-  * the driver thread is the 100 TB wall for the whole DR family: a
-  * sync's wall-clock is Σ(file latencies) instead of Σ/parallelism, and
-  * at real file counts the sync simply cannot complete. The copies are
-  * trivially parallel — each lands its OWN target path via its own tmp
-  * file, so no two tasks ever touch the same destination, and the
-  * skip-if-present check is a per-path read — and the ordering that
-  * matters for crash safety (all of a version's files BEFORE its
-  * publish, all of a txn's data BEFORE its catalog entry) is preserved
-  * by the caller joining the whole batch before publishing.
+  * Three copy paths, picked by batch size:
+  *  - at most one file: inline on the caller's thread;
+  *  - a small batch: driver threads through [[graft.Overlap]];
+  *  - at least `spark.graft.replicate.distributedThreshold` files
+  *    (default 256) with an active session: one Spark job over the copy
+  *    manifest, so the bytes flow through executors, not the driver.
+  *    Copies are idempotent, so task retries and speculation are safe.
   *
-  * THREE rungs, dispatched by batch size:
-  *  - ≤1 file: inline on the caller thread (the steady-state O(Δ) sync
-  *    that ships one file never spins anything up);
-  *  - small batch: driver threads through [[graft.Overlap]], the
-  *    engine's one bounded pool — parallel latency hiding with zero
-  *    job-scheduling overhead;
-  *  - ≥ `spark.graft.replicate.distributedThreshold` files (default
-  *    256) with an active session: a SPARK JOB over the copy manifest
-  *    ([[copyDistributed]]) — every byte flows through an EXECUTOR's
-  *    NIC, not the driver's. At 100 TB the driver threads cap sync
-  *    throughput at one machine's IO; the manifest job scales it with
-  *    the cluster. Tasks are idempotent (skip-if-present, private
-  *    UUID-tmp), so Spark's task retries and speculation are safe.
-  *
-  * Failure contract (all rungs): the first task failure propagates its
-  * ORIGINAL exception (not the ExecutionException / SparkException
-  * wrapper) and remaining work is cancelled/failed. On the driver rung
-  * that is [[graft.Overlap]]'s contract: copies not yet started are
-  * dropped, and the batch JOINS its in-flight copies before it
-  * rethrows, so nothing of the failed batch is still writing when the
-  * caller sees the fault. A copy cut short (a crash, or a distributed
-  * task killed mid-copy) leaves at most its private tmp file — an
-  * ordinary vacuum orphan the resume path never mistakes for a finished
-  * copy (the atomic move is what publishes a target). This is exactly
-  * the crash window the serial path already had, so the resume
-  * semantics are unchanged: re-running the sync skips completed targets
-  * and re-copies the rest.
+  * On every path the first failure propagates its ORIGINAL exception
+  * (not Spark's or the pool's wrapper) and the rest of the batch is
+  * cancelled; the driver path joins its in-flight copies first.
   */
 private[graft] object ParallelCopy {
 
-  /** What a copy task does when its SOURCE file is missing — resolved
-    * by the caller at manifest build, so a task is pure data and the
-    * decision ships to executors by value. */
+  /** What a copy does when its SOURCE file is missing. A distributed
+    * task carries it by value, so the decision ships to executors as
+    * data. */
   sealed trait OnMissing extends Serializable
   /** Attempt the copy anyway: the natural NoSuchFileException is the
     * contract (a seed file is live at the seed snapshot — its absence
@@ -69,8 +44,7 @@ private[graft] object ParallelCopy {
 
   /** One file copy, by value: absolute source path, absolute target
     * path, and the missing-source policy. */
-  final case class CopyTask(from: String, to: String,
-                            onMissing: OnMissing = FailMissing)
+  final case class CopyTask(from: String, to: String, onMissing: OnMissing)
       extends Serializable
 
   /** IO-bound fan-out width: capped well below the shuffle-partition
@@ -92,34 +66,39 @@ private[graft] object ParallelCopy {
     SparkSession.getActiveSession.fold(dflt)(Overlap.confInt(_, key, dflt))
 
   /** The session a distributed batch would run on, iff this batch is
-    * big enough and a session exists. Callers dispatch on this so the
-    * small-batch path never constructs a full manifest (e.g. never
-    * forces the live-at-snapshot set the corruption policy needs). */
-  private[graft] def distributedFor(batchSize: Int): Option[SparkSession] =
+    * big enough and a session exists. */
+  private def distributedFor(batchSize: Int): Option[SparkSession] =
     if (batchSize >= math.max(2, distributedThreshold))
       SparkSession.getActiveSession
     else None
 
-  /** The crash-safe copy primitive every rung shares: skip-if-present
-    * (resume), private UUID tmp + ATOMIC_MOVE (a crash leaves an inert
-    * orphan, never a half-published target). Returns 1 iff this call
-    * physically copied. */
-  private def copyOne(t: CopyTask): Long = {
-    val from = new File(t.from)
-    val to = new File(t.to)
-    if (!from.isFile) t.onMissing match {
-      case SkipMissing => return 0L
+  /** Copy every table-relative path in `rels` from `src` to `dst`,
+    * skipping targets already present; returns the files physically
+    * copied. `onMissing` decides what a missing source file means. The
+    * driver paths call it only for a source found missing (a policy may
+    * be costly to build, e.g. a live-set walk); the distributed path
+    * resolves it per file when it builds the manifest, so tasks ship as
+    * pure data. */
+  def copyAll(src: String, dst: String, rels: Seq[String])(
+      onMissing: String => OnMissing): Int =
+    distributedFor(rels.size) match {
+      case Some(sess) =>
+        copyDistributed(sess, rels.map(rel => CopyTask(
+          new File(src, rel).getPath, new File(dst, rel).getPath, onMissing(rel))))
+      case None =>
+        mapPar(rels)(rel =>
+          copyOne(new File(src, rel), new File(dst, rel), onMissing(rel))).sum
+    }
+
+  /** One copy: 1 iff this call physically copied. `onMissing` is only
+    * evaluated when `from` is missing. */
+  private def copyOne(from: File, to: File, onMissing: => OnMissing): Int = {
+    if (!from.isFile) onMissing match {
+      case SkipMissing => return 0
       case CorruptMissing(msg) => throw new IllegalArgumentException(msg)
       case FailMissing => () // fall through: Files.copy throws the NSFE
     }
-    if (to.isFile) return 0L
-    to.getParentFile.mkdirs()
-    val tmp = new File(to.getParentFile,
-      s".${to.getName}-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.copy(from.toPath, tmp.toPath)
-    Files.move(tmp.toPath, to.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    1L
+    if (AtomicFile.copyIfAbsent(from, to)) 1 else 0
   }
 
   /** EXECUTOR-distributed batch copy: one Spark job over the manifest,
@@ -129,13 +108,13 @@ private[graft] object ParallelCopy {
     * pool. A task failure fails the job; the ORIGINAL exception is
     * unwrapped from Spark's wrapper chain so callers and specs see the
     * same fault the serial path would have thrown. */
-  private[graft] def copyDistributed(spark: SparkSession,
-                                     tasks: Seq[CopyTask]): Long = {
+  private def copyDistributed(spark: SparkSession, tasks: Seq[CopyTask]): Int = {
     val slices = math.min(tasks.size,
       math.max(defaultParallelism, spark.sparkContext.defaultParallelism))
     try
       spark.sparkContext.parallelize(tasks, slices)
-        .mapPartitions(it => Iterator.single(it.map(copyOne).sum))
+        .mapPartitions(it => Iterator.single(it.map(t =>
+          copyOne(new File(t.from), new File(t.to), t.onMissing)).sum))
         .collect().sum
     catch { case e: SparkException => throw originalOf(e) }
   }
@@ -149,11 +128,11 @@ private[graft] object ParallelCopy {
   }
 
   /** Run `f` over `items` on bounded driver threads, joining every
-    * task before returning — the caller's next step (a log publish) must
-    * only ever see a fully-landed batch. Single-item and empty batches
-    * run inline (no pool spin-up for the steady-state O(Δ) sync that
-    * ships one file). */
-  def foreachPar[A](items: Seq[A])(f: A => Unit): Unit =
+    * task before returning its results in input order — the caller's
+    * next step (a log publish) must only ever see a fully-landed batch.
+    * Single-item and empty batches run inline (no pool spin-up for the
+    * steady-state O(Δ) sync that ships one file). */
+  def mapPar[A, B](items: Seq[A])(f: A => B): Seq[B] =
     Overlap.map(SparkSession.getActiveSession, items, defaultParallelism,
       "replicate copy")(f)
 }

@@ -88,18 +88,7 @@ object Sources {
       } else updates
     val staging = path + ".staging"
     merged.write.mode(SaveMode.Overwrite).parquet(staging) // materializes the read
-    // crash-safe swap: move the live snapshot ASIDE (rename, not delete)
-    // before promoting staging, so there is no window where the only copy
-    // of the table is gone. If the promote itself fails, the previous
-    // snapshot is intact at `.old` — recovery is renaming it back.
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) org.apache.commons.io.FileUtils.deleteDirectory(old)
-    if (dir.exists() && !dir.renameTo(old))
-      throw new java.io.IOException(s"upsert swap failed: $path -> $old (live snapshot untouched)")
-    if (!new java.io.File(staging).renameTo(dir))
-      throw new java.io.IOException(
-        s"upsert swap failed: $staging -> $path — previous snapshot preserved at $old")
-    org.apache.commons.io.FileUtils.deleteDirectory(old) // success: drop the old copy
+    AtomicFile.swapDir(new java.io.File(staging), dir)
   }
 
   /** In-memory embedded Derby — the JDBC warehouse stand-in (the Derby

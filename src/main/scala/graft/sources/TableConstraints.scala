@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
   * Storage: one `_graft_constraints.json` at the table root — beside
   * `_graft_log` for a [[TxnTable]], directly inside a plain parquet
   * directory otherwise (the underscore prefix keeps it invisible to
-  * file-listing scans, like `_SUCCESS`). Writes are tmp + atomic
-  * rename; [[TxnTable.cloneShallow]]/[[TxnCatalog.cloneCatalog]] copy
-  * the file with the rest of the root, so constraints travel with
-  * clones. The file is NOT in the `v*.json` log namespace the CDC
+  * file-listing scans, like `_SUCCESS`). Writes are
+  * [[AtomicFile.replace]]; [[TxnTable.cloneShallow]] and
+  * [[TxnCatalog.cloneCatalog]] copy the file with the rest of the root,
+  * so constraints travel with clones. The file is NOT in the `v*.json` log namespace the CDC
   * streams glob.
   *
   * Semantics: a constraint with `rely = true` is an OPTIMIZER CONTRACT
@@ -141,11 +141,7 @@ object TableConstraints {
     val target = file(dir)
     require(target.getParentFile.isDirectory,
       s"constraint target is not a directory: $dir")
-    val tmp = new File(dir,
-      "._graft_constraints-" + java.util.UUID.randomUUID.toString.take(8) + ".tmp")
-    Files.write(tmp.toPath, render(us, fks, nns, cks).getBytes(UTF_8))
-    Files.move(tmp.toPath, target.toPath,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    AtomicFile.replace(target, render(us, fks, nns, cks).getBytes(UTF_8))
   }
 
   private def readDir(spark: SparkSession, dir: String) =
@@ -674,14 +670,9 @@ object TableConstraints {
     val rs = refs.toSeq.sortBy(_._1)
       .map { case (r, v) => s"""{"ref":"$r","version":$v}""" }
       .mkString("[", ",", "]")
-    val tmp = new File(dir,
-      "._graft_constraints_audit-" +
-        java.util.UUID.randomUUID.toString.take(8) + ".tmp")
-    Files.write(tmp.toPath,
+    AtomicFile.replace(auditFile(dir),
       s"""{"version":$version,"cons":"${constraintsDigest(dir)}","refs":$rs}"""
         .getBytes(UTF_8))
-    Files.move(tmp.toPath, auditFile(dir).toPath,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** True when every version in (fromExclusive, toInclusive] only ADDED

@@ -351,10 +351,11 @@ object TxnCatalog {
     val stream = Files.walk(srcPath)
     try {
       stream.filter(p => Files.isRegularFile(p)).forEach { p =>
-        if (!p.getFileName.toString.endsWith(".tmp") && !pastPin(p)) {
+        if (!AtomicFile.isTmp(p.getFileName.toString) && !pastPin(p)) {
           val to = dstPath.resolve(srcPath.relativize(p))
           Files.createDirectories(to.getParent)
-          Files.createLink(to, p)
+          if (!AtomicFile.link(p, to))
+            throw new java.nio.file.FileAlreadyExistsException(to.toString)
         }
       }
     } finally stream.close()
@@ -413,7 +414,7 @@ object TxnCatalog {
       if (Files.isDirectory(mDir)) {
         val walk = Files.walk(mDir)
         try walk.filter(p => Files.isRegularFile(p)).forEach { p =>
-          if (!p.getFileName.toString.endsWith(".tmp")) {
+          if (!AtomicFile.isTmp(p.getFileName.toString)) {
             val b = bDir.resolve(mDir.relativize(p))
             require(Files.isRegularFile(b) &&
               Files.getAttribute(p, "unix:ino") == Files.getAttribute(b, "unix:ino"),
@@ -425,23 +426,9 @@ object TxnCatalog {
     }
     // link the audited tables' files over; pre-existing paths are the
     // shared clone inodes already (verified above), so only new files land
-    for (t <- auditTables; if Files.isDirectory(new File(tablePath(branch, t)).toPath)) {
-      val bDir = new File(tablePath(branch, t)).toPath
-      val mDir = new File(tablePath(main, t)).toPath
-      val stream = Files.walk(bDir)
-      try {
-        stream.filter(p => Files.isRegularFile(p)).forEach { p =>
-          if (!p.getFileName.toString.endsWith(".tmp")) {
-            val to = mDir.resolve(bDir.relativize(p))
-            if (!Files.exists(to)) {
-              Files.createDirectories(to.getParent)
-              try Files.createLink(to, p)
-              catch { case _: java.nio.file.FileAlreadyExistsException => () }
-            }
-          }
-        }
-      } finally stream.close()
-    }
+    for (t <- auditTables; if Files.isDirectory(new File(tablePath(branch, t)).toPath))
+      AtomicFile.linkTree(new File(tablePath(branch, t)).toPath,
+        new File(tablePath(main, t)).toPath)
     val bv = tableVersions(branch, Some(branchTxn))
     val blists = versionLists(branch, Some(branchTxn))
     val bcmap = colMap(branch, Some(branchTxn))
@@ -609,20 +596,8 @@ object TxnCatalog {
     // tables re-publish their appended files as fresh versions
     for (t <- auditTables -- conflicts) {
       val bDir = new File(tablePath(branch, t)).toPath
-      val rDir = new File(tablePath(reb, t)).toPath
-      if (Files.isDirectory(bDir)) {
-        val stream = Files.walk(bDir)
-        try stream.filter(p => Files.isRegularFile(p)).forEach { p =>
-          if (!p.getFileName.toString.endsWith(".tmp")) {
-            val to = rDir.resolve(bDir.relativize(p))
-            if (!Files.exists(to)) {
-              Files.createDirectories(to.getParent)
-              try Files.createLink(to, p)
-              catch { case _: java.nio.file.FileAlreadyExistsException => () }
-            }
-          }
-        } finally stream.close()
-      }
+      if (Files.isDirectory(bDir))
+        AtomicFile.linkTree(bDir, new File(tablePath(reb, t)).toPath)
     }
     val newVersions = appended.map { case (t, perVersion) =>
       val bPath = tablePath(branch, t)
@@ -637,8 +612,7 @@ object TxnCatalog {
             s"on $main — cannot rebase")
         if (!Files.exists(to)) {
           Files.createDirectories(to.getParent)
-          try Files.createLink(to, from)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
+          AtomicFile.link(from, to)
         }
       }
       t -> perVersion.map(files =>
@@ -909,26 +883,11 @@ object TxnCatalog {
     val head = currentTxn(src)
     require(head >= 1, s"nothing to replicate: $src has no txns")
     val srcAbs = new File(src).getAbsolutePath
-    val copied = new java.util.concurrent.atomic.AtomicInteger(0)
-    def atomicCopy(from: File, to: File): Unit = {
-      to.getParentFile.mkdirs()
-      val tmp = new File(to.getParentFile,
-        s".${to.getName}-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      Files.copy(from.toPath, tmp.toPath)
-      Files.move(tmp.toPath, to.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      copied.incrementAndGet()
-    }
-    def copyData(rel: String): Unit = {
-      val from = new File(src, rel)
-      // missing at src = vacuumed there; the mirror reflects retention
-      if (from.isFile && !new File(dst, rel).isFile)
-        atomicCopy(from, new File(dst, rel))
-    }
+    var copied = 0
     def copyVerified(rel: String): Unit = {
       val from = new File(src, rel)
       val to = new File(dst, rel)
-      if (!to.isFile) atomicCopy(from, to)
+      if (AtomicFile.copyIfAbsent(from, to)) copied += 1
       else require(java.util.Arrays.equals(Files.readAllBytes(from.toPath),
         Files.readAllBytes(to.toPath)),
         s"replica fork: $dst/$rel differs from the source's entry")
@@ -970,13 +929,8 @@ object TxnCatalog {
       require(!catPromotedFile(dst).isFile,
         s"$dst was promoted to primary mid-sync — the promotion wins; " +
           "aborting without resurrecting the replica marker")
-      val tmp = new File(dst,
-        s"._graft_replica-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      Files.write(tmp.toPath,
-        s"""{"src":"$srcAbs","syncedTxn":$t}"""
-          .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp.toPath, marker.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      AtomicFile.replace(marker,
+        s"""{"src":"$srcAbs","syncedTxn":$t}""".getBytes(StandardCharsets.UTF_8))
     }
     if (!marker.isFile) writeMarker(0)
     // entries carry CUMULATIVE lineages; syncing copies only each
@@ -1011,35 +965,19 @@ object TxnCatalog {
             .foreach(f => dataRels += s"tables/$name/$f")
         }
       }
-      // a bulk-sized txn distributes its data copies as a Spark job
-      // (executor NICs, not the driver's); the missing-source policy is
-      // always skip here — the mirror reflects the source's retention
-      val rels = dataRels.result()
-      ParallelCopy.distributedFor(rels.size) match {
-        case Some(sess) =>
-          copied.addAndGet(ParallelCopy.copyDistributed(sess, rels.map(rel =>
-            ParallelCopy.CopyTask(new File(src, rel).getPath,
-              new File(dst, rel).getPath, ParallelCopy.SkipMissing)).toSeq).toInt)
-        case None => ParallelCopy.foreachPar(rels)(copyData)
-      }
+      // missing at src = vacuumed there: the mirror reflects the
+      // source's retention
+      copied += ParallelCopy.copyAll(src, dst, dataRels.result())(
+        _ => ParallelCopy.SkipMissing)
       prevLin = lin
       // the catalog entry LAST — the cross-table commit point: a reader
       // of the replica never sees half a transaction
-      val tmpE = new File(txnDir(dst),
-        f".t$t%05d-${java.util.UUID.randomUUID.toString.take(8)}.json.tmp")
       txnDir(dst).mkdirs()
-      Files.copy(entry.toPath, tmpE.toPath)
-      val target = new File(txnDir(dst), f"t$t%05d.json").toPath
-      try {
-        Files.createLink(target, tmpE.toPath)
-        Files.deleteIfExists(tmpE.toPath)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmpE.toPath)
-          require(java.util.Arrays.equals(
-            Files.readAllBytes(entry.toPath), Files.readAllBytes(target)),
-            s"replica fork: $dst txn t$t was published by a local writer")
-      }
+      val bytes = Files.readAllBytes(entry.toPath)
+      val target = new File(txnDir(dst), f"t$t%05d.json")
+      if (!AtomicFile.putIfAbsent(target, bytes))
+        require(java.util.Arrays.equals(bytes, Files.readAllBytes(target.toPath)),
+          s"replica fork: $dst txn t$t was published by a local writer")
       replicateMidSyncHook(t)
       writeMarker(t)
     }
@@ -1052,15 +990,10 @@ object TxnCatalog {
       if (cons.isFile) {
         val to = new File(tablePath(dst, name), "_graft_constraints.json")
         to.getParentFile.mkdirs()
-        val tmp = new File(to.getParentFile,
-          s"._graft_constraints-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-        Files.copy(cons.toPath, tmp.toPath)
-        Files.move(tmp.toPath, to.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        AtomicFile.replace(to, Files.readAllBytes(cons.toPath))
       }
     }
-    (currentTxn(dst), copied.get)
+    (currentTxn(dst), copied)
   }
 
   private def catPromotedFile(t: String) = new File(t, "_graft_promoted.json")
@@ -1081,8 +1014,7 @@ object TxnCatalog {
     require(marker.isFile, s"$dst is not a catalog replica — nothing to promote")
     require(currentTxn(dst) >= 1,
       s"$dst has no replicated transactions — sync before promoting")
-    Files.move(marker.toPath, catPromotedFile(dst).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.move(marker, catPromotedFile(dst))
     currentTxn(dst)
   }
 
@@ -1128,13 +1060,9 @@ object TxnCatalog {
         s"$oldSrc holds transaction t$t the new primary never saw; " +
           "export it before demoting")
     }
-    val tmp = new File(oldSrc,
-      s"._graft_replica-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp.toPath,
+    AtomicFile.replace(catReplicaFile(oldSrc),
       s"""{"src":"${new File(newPrimary).getAbsolutePath}","syncedTxn":$head}"""
         .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, catReplicaFile(oldSrc).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Multi-table atomic FORGET — the right-to-be-forgotten transaction:
@@ -1211,7 +1139,9 @@ object TxnCatalog {
     * keeps EVERY catalog-travelable snapshot intact: any version listed
     * in any entry's lineage keeps all the files its log entry added
     * (even files a later overwrite removed — an older entry still
-    * replays them). Returns the deleted file count. */
+    * replays them). Dead tmps of crashed writers in `_graft_txn` and in
+    * each table ([[TxnTable.sweepTmps]]) go too. Returns the deleted
+    * data-file count. */
   def vacuum(catalog: String): Int = Trace.span("sources.vacuum") {
     val entries = txnFiles(catalog)
     val keepByTable = scala.collection.mutable.Map
@@ -1223,6 +1153,7 @@ object TxnCatalog {
           scala.collection.mutable.Set.empty) ++= vs
       }
     }
+    AtomicFile.deleteTmps(txnDir(catalog))
     val tablesDir = new File(catalog, "tables")
     Option(tablesDir.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map { td =>
@@ -1240,7 +1171,8 @@ object TxnCatalog {
             !keepFiles.contains(s"data/${f.getParentFile.getName}/${f.getName}"))
         // fan the deletes out like the replication copies: order-free,
         // idempotent, and driver-serial would be the 100 TB wall
-        ParallelCopy.foreachPar(doomed.toSeq)(f => { f.delete(); () })
+        ParallelCopy.mapPar(doomed.toSeq)(_.delete())
+        TxnTable.sweepTmps(td.getPath)
         doomed.length
       }.sum
   }
@@ -1265,20 +1197,11 @@ object TxnCatalog {
     val entry = s"""{"txn":$txn,"tables":${jsonMap(tables)},""" +
       s""""versions":${jsonLists(versions)}$colmapField$dropsField$tagField}"""
     txnDir(catalog).mkdirs()
-    val tmpF = new File(txnDir(catalog),
-      f".t$txn%05d-" + java.util.UUID.randomUUID.toString.take(8) + ".json.tmp")
-    Files.write(tmpF.toPath, entry.getBytes(StandardCharsets.UTF_8))
-    val target = new File(txnDir(catalog), f"t$txn%05d.json").toPath
-    try {
-      Files.createLink(target, tmpF.toPath)
-      Files.deleteIfExists(tmpF.toPath)
-    } catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmpF.toPath)
-        throw new java.util.ConcurrentModificationException(
-          s"catalog txn $txn of $catalog was published by another writer " +
-            "(this writer's staged table versions stay orphaned)", e)
-    }
+    if (!AtomicFile.putIfAbsent(new File(txnDir(catalog), f"t$txn%05d.json"),
+        entry.getBytes(StandardCharsets.UTF_8)))
+      throw new java.util.ConcurrentModificationException(
+        s"catalog txn $txn of $catalog was published by another writer " +
+          "(this writer's staged table versions stay orphaned)")
     txn
   }
 

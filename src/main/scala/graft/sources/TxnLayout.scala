@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.Files
 
 import graft.{Overlap, Trace}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   *
   * Single-writer like the other sidecar maintainers: the sidecar is
   * advisory metadata (a wrong one costs rewrite IO, never rows — reads
-  * never consult it), written atomically via tmp + move.
+  * never consult it), written atomically by [[AtomicFile.replace]].
   */
 object TxnLayout {
 
@@ -280,10 +280,7 @@ object TxnLayout {
         s""""quant":$quant,"qbounds":$qbounds,"raw":$raw,"files":$files}"""
     val f = sidecarFile(table)
     f.getParentFile.mkdirs()
-    val tmp = new File(f.getParentFile,
-      s".cluster-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp.toPath, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, f.toPath, StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.replace(f, body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Per-file [min, max] of `code` over exactly `files` (table-relative)
@@ -656,8 +653,7 @@ object TxnLayout {
         // byte-identical to the sequential form; a failed segment
         // cancels the others and propagates its ORIGINAL exception, and
         // the staged dirs stay ordinary vacuum orphans.
-        val added = Overlap.map(Some(spark), segs.zipWithIndex,
-          Overlap.confInt(spark, "spark.graft.recluster.writeParallelism", 4),
+        val added = Overlap.map(Some(spark), segs.zipWithIndex, 4,
           "recluster segment") { case (sg, i) => segJob(sg, i) }.flatten
         TxnTable.publishRewrite(table, added, rewriteSet, Some(version))
       } finally tagged.unpersist() // incl. a failed segment write

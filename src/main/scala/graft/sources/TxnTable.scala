@@ -24,7 +24,7 @@ import graft.Trace
   * }}}
   *
   * Commit protocol: write the data dir first, then publish the log entry
-  * via tmp-file + atomic rename. A crash before the rename leaves invisible
+  * with [[AtomicFile.putIfAbsent]]. A crash before the link leaves invisible
   * orphan data (vacuum's job), never a torn table. Readers list the log
   * (|commits| entries — metadata, not data), replay add/remove driver-side,
   * and hand Spark the exact file list: an old reader mid-scan keeps its
@@ -107,12 +107,8 @@ object TxnTable {
         val body = fresh.map { rel =>
           s""""$rel":${footerRowCount(new File(table, rel))}"""
         }.mkString("{", ",", "}")
-        val tmp = new File(logDir(table), f".v$version%05d-" +
-          java.util.UUID.randomUUID.toString.take(8) + ".stats.tmp")
-        Files.write(tmp.toPath,
+        AtomicFile.replace(statsFile(table, version),
           s"""{"rows":$body}""".getBytes(StandardCharsets.UTF_8))
-        if (!tmp.renameTo(statsFile(table, version)))
-          Files.deleteIfExists(tmp.toPath)
       }
     } catch { case _: Exception => () } // advisory; footers stay the truth
 
@@ -287,13 +283,8 @@ object TxnTable {
     require(v >= 1, s"nothing to checkpoint in $table")
     val live = liveFiles(table, Some(v))
     val entry = s"""{"version":$v,"added":${jsonArr(live)},"removed":[]}"""
-    val tmpF = new File(logDir(table),
-      f".c$v%05d-" + java.util.UUID.randomUUID.toString.take(8) + ".json.tmp")
-    Files.write(tmpF.toPath, entry.getBytes(StandardCharsets.UTF_8))
-    val target = new File(logDir(table), f"c$v%05d.json").toPath
-    try Files.createLink(target, tmpF.toPath)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    Files.deleteIfExists(tmpF.toPath)
+    AtomicFile.putIfAbsent(new File(logDir(table), f"c$v%05d.json"),
+      entry.getBytes(StandardCharsets.UTF_8))
     v
   }
 
@@ -565,31 +556,12 @@ object TxnTable {
     val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
     val entry = s"""{"version":$version,"added":${jsonArr(added)},"removed":${jsonArr(removed)}$tagField}"""
     logDir(table).mkdirs()
-    // tmp is unique per ATTEMPT, like the data dir: a shared tmp name
-    // lets a racer overwrite the winner's bytes between write and link
-    // (publishing a log entry that points at the LOSER's data), or delete
-    // it from under the link call
-    val tmpF = new File(logDir(table),
-      f".v$version%05d-" + java.util.UUID.randomUUID.toString.take(8) + ".json.tmp")
-    Files.write(tmpF.toPath, entry.getBytes(StandardCharsets.UTF_8))
-    // publish: ATOMIC put-if-absent is the commit point. Files.move
-    // without ATOMIC_MOVE only *checks* the target before rename() on
-    // POSIX — two writers racing through the check would both rename,
-    // and the second silently replaces the winner. link(2)
-    // (Files.createLink) is the genuinely atomic O_CREAT|O_EXCL-style
-    // primitive: it fails with EEXIST if the target appeared meanwhile,
-    // and linking a fully-written tmp file means readers never see a
-    // torn entry. The loser's data dir stays orphaned for vacuum.
-    val target = new File(logDir(table), f"v$version%05d.json").toPath
-    try {
-      Files.createLink(target, tmpF.toPath)
-      Files.deleteIfExists(tmpF.toPath)
-    } catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmpF.toPath)
-        throw new java.util.ConcurrentModificationException(
-          s"commit conflict: version $version of $table was published by another writer", e)
-    }
+    // publish: the atomic put-if-absent is the commit point. The loser
+    // of a race throws; its data dir stays orphaned for vacuum.
+    if (!AtomicFile.putIfAbsent(new File(logDir(table), f"v$version%05d.json"),
+        entry.getBytes(StandardCharsets.UTF_8)))
+      throw new java.util.ConcurrentModificationException(
+        s"commit conflict: version $version of $table was published by another writer")
     // the commit is durable; record the added files' row counts beside
     // it so later pricing/advice is a log read, not a footer sweep
     writeStats(table, version, added)
@@ -709,7 +681,8 @@ object TxnTable {
     files.foreach { p =>
       val to = new File(dst, p)
       to.getParentFile.mkdirs()
-      Files.createLink(to.toPath, new File(src, p).toPath)
+      if (!AtomicFile.link(new File(src, p).toPath, to.toPath))
+        throw new java.nio.file.FileAlreadyExistsException(to.getPath)
     }
     // declared constraints describe the data being cloned — they travel
     // (COPIED, not linked: each side re-declares independently after)
@@ -753,8 +726,7 @@ object TxnTable {
     added.foreach { p =>
       val to = new File(main, p)
       to.getParentFile.mkdirs()
-      try Files.createLink(to.toPath, new File(branch, p).toPath)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      AtomicFile.link(new File(branch, p).toPath, to.toPath)
     }
     publish(main, mainV + 1, added, removed, tag)
   }
@@ -796,7 +768,7 @@ object TxnTable {
     val srcHead = currentVersion(src)
     require(srcHead >= 1, s"nothing to replicate: $src is empty")
     val srcAbs = new File(src).getAbsolutePath
-    val copied = new java.util.concurrent.atomic.AtomicInteger(0)
+    var copied = 0
     // the liveness set the vacuum-tolerance guard judges against is the
     // snapshot this sync REPLICATES (the srcHead captured at entry), not
     // whatever the source's head is by the time a copy task runs: a
@@ -807,44 +779,11 @@ object TxnTable {
     // that actually hits a missing file pays the log walk; Scala lazy
     // vals are synchronized, so the parallel copy tasks race safely.)
     lazy val srcHeadLive: Set[String] = liveFiles(src, Some(srcHead)).toSet
-    def copyIn(rel: String, allowMissing: Boolean = false): Unit = {
-      val to = new File(dst, rel)
-      val from = new File(src, rel)
-      // a replayed version's file can be legitimately GONE at src: added
-      // then removed between syncs and VACUUMED there. Skipping mirrors
-      // the source's retention (the catalog replicator's contract) —
-      // refusing would wedge the replica on that version forever. Only
-      // the suffix replay opts in, and only for files that are NOT live
-      // at the replicated snapshot (v$srcHead): vacuum never removes
-      // files live at the head it ran under, so a live-at-snapshot-but-
-      // missing file is real corruption — skipping it would publish a
-      // replica head that references a nonexistent file and advance the
-      // watermark past it forever. (A SEED file is live at the seed
-      // snapshot, so its absence always throws.)
-      if (allowMissing && !from.isFile) {
-        require(!srcHeadLive(rel),
-          s"replication source corruption: $src/$rel is live at the " +
-            s"replicated snapshot (v$srcHead) but missing on disk — " +
-            "refusing to mirror a table that cannot be read")
-        return
-      }
-      if (!to.isFile) {
-        to.getParentFile.mkdirs()
-        // tmp + atomic move: the resume path's skip-if-present check
-        // must never mistake a crash-truncated copy for a finished one
-        val tmp = new File(to.getParentFile,
-          s".${to.getName}-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-        Files.copy(from.toPath, tmp.toPath)
-        Files.move(tmp.toPath, to.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        copied.incrementAndGet()
-      }
-    }
     def copyConstraints(): Unit = {
       val c = new File(src, "_graft_constraints.json")
       if (c.isFile)
-        Files.copy(c.toPath, new File(dst, "_graft_constraints.json").toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        AtomicFile.replace(new File(dst, "_graft_constraints.json"),
+          Files.readAllBytes(c.toPath))
     }
     def writeMarker(seed: Int, synced: Int, adopted: Boolean = false): Unit = {
       // PROMOTION RACE: [[promoteReplica]] moves the replica marker
@@ -866,20 +805,10 @@ object TxnTable {
     def seedPublish(seed: Int): Unit = {
       val live = liveFiles(src, Some(seed))
       require(live.nonEmpty, s"nothing to replicate: $src has no live files")
-      // the seed is the sync's bulk-copy phase (the whole live snapshot)
-      // — fan it out; every copy lands before the publish below. A
-      // bulk-sized batch runs as a SPARK JOB over the manifest (bytes
-      // flow through executor NICs, not the driver's — the 100 TB
-      // seed); below the threshold the driver pool hides latency with
-      // zero scheduling overhead. Seed files are live at the seed
-      // snapshot, so a missing one fails verbatim (FailMissing).
-      ParallelCopy.distributedFor(live.size) match {
-        case Some(sess) =>
-          copied.addAndGet(ParallelCopy.copyDistributed(sess, live.map(rel =>
-            ParallelCopy.CopyTask(new File(src, rel).getPath,
-              new File(dst, rel).getPath))).toInt)
-        case None => ParallelCopy.foreachPar(live)(copyIn(_))
-      }
+      // the seed is the sync's bulk-copy phase (the whole live
+      // snapshot); every copy lands before the publish below. Seed files
+      // are live at the seed snapshot, so a missing one fails verbatim.
+      copied += ParallelCopy.copyAll(src, dst, live)(_ => ParallelCopy.FailMissing)
       copyConstraints()
       try publishFileList(dst, live, tag = Some("replica_seed"),
         expectedVersion = Some(1))
@@ -900,7 +829,7 @@ object TxnTable {
       new File(dst).mkdirs()
       writeMarker(srcHead, srcHead)
       seedPublish(srcHead)
-      (1, copied.get)
+      (1, copied)
     } else {
       val m = new String(Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8)
       val recordedSrc = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(m)
@@ -933,26 +862,20 @@ object TxnTable {
         val (added, removed) = parseEntry(entry)
         // within one version the copies are order-free; the version's
         // publish (the commit point) waits for the whole batch. A
-        // bulk-sized Δ distributes like the seed; the missing-source
-        // policy is resolved per file ON THE DRIVER (live at the
-        // replicated snapshot = corruption, else vacuumed = skip) so
-        // tasks ship as pure data — forcing the live-set walk once is
-        // noise against a distributed-scale batch, while the pool path
-        // below keeps the lazy only-on-miss behavior.
-        ParallelCopy.distributedFor(added.size) match {
-          case Some(sess) =>
-            val liveSet = srcHeadLive
-            copied.addAndGet(ParallelCopy.copyDistributed(sess, added.map { rel =>
-              ParallelCopy.CopyTask(new File(src, rel).getPath,
-                new File(dst, rel).getPath,
-                if (liveSet(rel)) ParallelCopy.CorruptMissing(
-                  s"replication source corruption: $src/$rel is live at the " +
-                    s"replicated snapshot (v$srcHead) but missing on disk — " +
-                    "refusing to mirror a table that cannot be read")
-                else ParallelCopy.SkipMissing)
-            }).toInt)
-          case None =>
-            ParallelCopy.foreachPar(added)(copyIn(_, allowMissing = true))
+        // replayed file can be legitimately GONE at src: added then
+        // removed between syncs and VACUUMED there. Skipping mirrors the
+        // source's retention (the catalog replicator's contract) —
+        // refusing would wedge the replica on that version forever. But
+        // vacuum never removes files live at the head it ran under, so a
+        // file live at the replicated snapshot (v$srcHead) yet missing is
+        // real corruption: skipping it would publish a replica head that
+        // references a nonexistent file.
+        copied += ParallelCopy.copyAll(src, dst, added) { rel =>
+          if (srcHeadLive(rel)) ParallelCopy.CorruptMissing(
+            s"replication source corruption: $src/$rel is live at the " +
+              s"replicated snapshot (v$srcHead) but missing on disk — " +
+              "refusing to mirror a table that cannot be read")
+          else ParallelCopy.SkipMissing
         }
         val dstV = 1 + (v - seed)
         try publish(dst, dstV, added, removed, commitTag(src, v))
@@ -970,7 +893,7 @@ object TxnTable {
       // "successful sync" must never leave the replica auditing against
       // a stale constraint set
       copyConstraints()
-      (currentVersion(dst), copied.get)
+      (currentVersion(dst), copied)
     }
   }
 
@@ -984,14 +907,10 @@ object TxnTable {
 
   private def writeReplicaMarker(dst: String, srcAbs: String, seed: Int,
                                  synced: Int, adopted: Boolean): Unit = {
-    val tmp = new File(dst,
-      s"._graft_replica-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     val flag = if (adopted) ""","adopted":true""" else ""
-    Files.write(tmp.toPath,
+    AtomicFile.replace(replicaFile(dst),
       (s"""{"src":"$srcAbs","seedSrcVersion":$seed,""" +
         s""""syncedSrcVersion":$synced$flag}""").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, replicaFile(dst).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** FAILOVER, step 1 — PROMOTE a replica to a writable primary: the
@@ -1007,8 +926,7 @@ object TxnTable {
     require(marker.isFile, s"$dst is not a replica — nothing to promote")
     require(currentVersion(dst) >= 1,
       s"$dst has no published versions — seed before promoting")
-    Files.move(marker.toPath, promotedFile(dst).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.move(marker, promotedFile(dst))
     currentVersion(dst)
   }
 
@@ -1553,11 +1471,6 @@ object TxnTable {
     }
   }
 
-  /** Physically delete data files no snapshot >= `retainFrom` references.
-    * This is the step that gives up time travel before `retainFrom` in
-    * exchange for space — exactly Delta's VACUUM trade. Orphans from
-    * crashed commits (data dir without a log entry) die here too. Returns
-    * the deleted file count. */
   /** DRY-RUN of [[vacuum]]: (the referenced file set a
     * `vacuum(retainFrom)` would keep, the physical orphans it would
     * delete) — the shared computation behind the delete itself and the
@@ -1578,20 +1491,29 @@ object TxnTable {
     (keep, doomed)
   }
 
+  /** Delete the dead tmps of crashed writers (torn log entries and
+    * sidecars, cut-short replica copies): invisible to readers, but they
+    * would otherwise accumulate. Not part of [[reclaimable]], so the
+    * vacuum advice counts only data files. */
+  private[sources] def sweepTmps(table: String): Unit =
+    (logDir(table) +: Seq("data", "dv").flatMap(cls =>
+      Option(new File(table, cls).listFiles()).getOrElse(Array.empty[File])
+        .filter(_.isDirectory))).foreach(AtomicFile.deleteTmps)
+
+  /** Physically delete data files no snapshot >= `retainFrom` references.
+    * This is the step that gives up time travel before `retainFrom` in
+    * exchange for space — exactly Delta's VACUUM trade. Orphans from
+    * crashed commits (data dir without a log entry) and dead tmps
+    * ([[sweepTmps]]) die here too. Returns the deleted data-file count. */
   def vacuum(table: String, retainFrom: Int): Int = Trace.span("sources.vacuum") {
     val (_, doomed) = reclaimable(table, retainFrom)
     // deletes are order-free and idempotent (a missing file deletes to
     // false, never throws) — fan them out like the replication copies:
     // at 100 TB file counts a driver-serial delete loop is the same
     // wall the serial copy was
-    ParallelCopy.foreachPar(doomed.toSeq)(f => { f.delete(); () })
+    ParallelCopy.mapPar(doomed.toSeq)(_.delete())
+    sweepTmps(table)
     val dataRoot = new File(table, "data")
-    // torn tmp log entries from crashed commits are invisible to readers
-    // but would otherwise accumulate — sweep them with the orphans
-    Option(logDir(table).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && (f.getName.endsWith(".json.tmp") ||
-        f.getName.endsWith(".stats.tmp")))
-      .foreach(_.delete())
     // drop now-empty commit dirs so the layout stays readable at a glance
     Option(dataRoot.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && Option(d.listFiles()).getOrElse(Array.empty).isEmpty)

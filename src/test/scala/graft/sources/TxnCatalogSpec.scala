@@ -429,4 +429,42 @@ class TxnCatalogSpec extends SparkSpec {
       assert(rung == "pool" && width > 1)
     } finally keys.foreach(spark.conf.unset)
   }
+
+  test("vacuum reclaims dead tmps: a torn catalog entry and a cut-short replica copy") {
+    val c = freshCatalog("vacuum_tmps")
+    TxnCatalog.commitAll(spark, c, Seq(
+      Write("a", Seq(1L, 2L).toDF("id")), Write("b", Seq(10L).toDF("id"))))
+    TxnCatalog.commitAll(spark, c, Seq(Write("a", Seq(3L).toDF("id"))))
+    def files(): Set[String] = {
+      val root = new File(c).toPath
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(p => java.nio.file.Files.isRegularFile(p)).toArray
+        .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+      finally walk.close()
+    }
+    def reads() = Seq(Some(1), Some(2), None).flatMap(t => Seq(ids(c, "a", t), ids(c, "b", t)))
+    val (filesBefore, readsBefore) = (files(), reads())
+    val versionsBefore = TxnCatalog.tableVersions(c)
+    // a crash inside the catalog publish: its private entry tmp, never linked
+    val torn = new File(c, "_graft_txn/.t00003-deadbeef.json.tmp")
+    FileUtils.writeStringToFile(torn, """{"txn":3,"tables":{"a":9}}""",
+      java.nio.charset.StandardCharsets.UTF_8)
+    // a crash mid replica copy: the copy's private tmp beside its target
+    val a = TxnCatalog.tablePath(c, "a")
+    val part = new File(a, TxnTable.liveFiles(a).head)
+    val copyTmp = new File(part.getParentFile, s".${part.getName}-deadbeef.tmp")
+    java.nio.file.Files.write(copyTmp.toPath, Array[Byte](1, 2, 3))
+    // and a torn per-table log entry
+    val tornLog = new File(a, "_graft_log/.v00003.json.tmp")
+    FileUtils.writeStringToFile(tornLog, "{}", java.nio.charset.StandardCharsets.UTF_8)
+    assert(files() == filesBefore ++ Set(torn, copyTmp, tornLog)
+      .map(f => new File(c).toPath.relativize(f.toPath).toString))
+
+    assert(TxnCatalog.vacuum(c) == 0, "no data file is unreferenced")
+    assert(!torn.exists() && !copyTmp.exists() && !tornLog.exists())
+    assert(files() == filesBefore, "every live file is untouched")
+    assert(reads() == readsBefore)
+    assert(TxnCatalog.currentTxn(c) == 2)
+    assert(TxnCatalog.tableVersions(c) == versionsBefore)
+  }
 }

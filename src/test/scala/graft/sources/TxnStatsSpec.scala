@@ -474,7 +474,11 @@ class TxnStatsSpec extends SparkSpec {
     // a dim with NO joinable key empties the intersection: the inner
     // star is provably empty, no fact bytes move
     val noKeys = spark.range(0).select(col("id").as("kb"))
-    assert(filesScanned(star(noKeys), t) == 1)
+    val (scanned, planning) =
+      graft.Trace.record(spark)(filesScanned(star(noKeys), t))
+    assert(scanned == 1)
+    assert(planning.subtree("plans.dfp").jobs == 0,
+      "a provably empty dim needs no plan-time job")
     assert(star(noKeys).count() == 0L)
   }
 
