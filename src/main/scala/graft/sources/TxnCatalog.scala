@@ -21,8 +21,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   catalog/
   *     tables/<name>/             -- each a TxnTable (data + _graft_log)
   *     _graft_txn/t00001.json     -- {"txn":1,"tables":{"cust":2,"ord":1},
-  *                                --  "versions":{"cust":[2],"ord":[1]}}
+  *                                --  "versions":{"cust":[2],"ord":[1]},
+  *                                --  "colmap":{"cust|nm":"name"},
+  *                                --  "coldrop":{"ord|tmp":1},"tag":"etl"}
   * }}}
+  * `colmap`, `coldrop` and `tag` are absent when empty. [[Entry]] is the
+  * one codec: `Entry.parse` reads an entry, `Entry.json` writes one, and
+  * its field order and separators are the on-disk format (replicas
+  * byte-compare entries).
   *
   * Protocol: stage every table write as a normal TxnTable commit (each
   * atomic per-table, but INVISIBLE to catalog readers), then publish one
@@ -40,7 +46,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rolled-back transaction's versions sit in the per-table log below a
   * later head, and any cross-entry "all versions ever created" scan
   * would resurrect them (a bug this module's spec caught in an earlier
-  * design).
+  * design). Every operation reads ONE entry, so its lineage, column map
+  * and drop set always come from the same snapshot.
   */
 object TxnCatalog {
 
@@ -48,10 +55,100 @@ object TxnCatalog {
     * the table's catalog-visible content; `false` appends. */
   final case class Write(name: String, df: DataFrame, overwrite: Boolean = false)
 
+  /** One catalog entry: the whole multi-table snapshot of transaction
+    * `txn`. `tables` pins each table's head version and `versions` its
+    * lineage. `colmap` is the per-table column MAPPING (rename without
+    * rewrite): physical parquet column name → logical name, serialized
+    * flat as `"tbl|phys":"logical"` (`|` is outside both name grammars,
+    * so the split is exact). `drops` holds the DROPPED physical columns
+    * per table, serialized as `"tbl|phys":1`: they vanish from reads, the
+    * bytes stay, and older snapshots still show them. Each entry carries
+    * the FULL maps for its snapshot, so restore and time travel resolve
+    * everything from the entry alone. An unborn catalog reads as
+    * `Entry(0)`. */
+  private[sources] final case class Entry(
+      txn: Int,
+      tables: Map[String, Int] = Map.empty,
+      versions: Map[String, Seq[Int]] = Map.empty,
+      colmap: Map[String, Map[String, String]] = Map.empty,
+      drops: Map[String, Set[String]] = Map.empty,
+      tag: Option[String] = None) {
+
+    /** `name`'s whole state: version, lineage, column map and drop set. */
+    private def state(name: String) =
+      (tables.get(name), versions.get(name), colmap.get(name), drops.get(name))
+
+    /** Tables whose state differs from `base`'s — restores and
+      * metadata-only schema ops all surface here. */
+    def changedFrom(base: Entry): Set[String] =
+      (tables.keySet ++ base.tables.keySet).filter(n => state(n) != base.state(n))
+
+    /** This snapshot with the state of every table in `names` taken from
+      * `from` (a table `from` lacks is dropped here too). */
+    def overlay(from: Entry, names: Set[String]): Entry = {
+      def pick[V](mine: Map[String, V], theirs: Map[String, V]) =
+        (mine -- names) ++ theirs.filter(kv => names(kv._1))
+      copy(tables = pick(tables, from.tables),
+        versions = pick(versions, from.versions),
+        colmap = pick(colmap, from.colmap), drops = pick(drops, from.drops))
+    }
+
+    /** The entry's bytes on disk: keys sorted, empty maps omitted. */
+    def json: String = {
+      def obj[V](m: Map[String, V])(fields: (String, V) => Seq[String]) =
+        m.toSeq.sortBy(_._1).flatMap(fields.tupled).mkString("{", ",", "}")
+      def opt(key: String, body: String) =
+        if (body == "{}") "" else s""","$key":$body"""
+      val lineages = obj(versions)((t, vs) => Seq(s""""$t":${vs.mkString("[", ",", "]")}"""))
+      s"""{"txn":$txn,"tables":${obj(tables)((t, v) => Seq(s""""$t":$v"""))},""" +
+        s""""versions":$lineages""" +
+        opt("colmap", obj(colmap)((t, cols) =>
+          cols.toSeq.sortBy(_._1).map { case (p, l) => s""""$t|$p":"$l"""" })) +
+        opt("coldrop", obj(drops)((t, cols) =>
+          cols.toSeq.sorted.map(c => s""""$t|$c":1"""))) +
+        tag.fold("")(t => s""","tag":"$t"""") + "}"
+    }
+  }
+
+  private[sources] object Entry {
+    /** Dependency-free quote-scan parse, the same contract as TxnTable's
+      * log parser: each object's body ends at its first `}` (lists use
+      * brackets), and names never contain quotes. */
+    def parse(s: String): Entry = {
+      def body(key: String, required: Boolean = false): String = {
+        val i = s.indexOf("\"" + key + "\":{")
+        require(i >= 0 || !required, s"malformed catalog entry: missing $key")
+        if (i < 0) "" else s.substring(s.indexOf('{', i) + 1, s.indexOf('}', i))
+      }
+      def perTable(key: String, value: String) =
+        s"\"([A-Za-z0-9._-]+)\\|([A-Za-z0-9_]+)\":$value".r
+          .findAllMatchIn(body(key)).toSeq.groupBy(_.group(1))
+      Entry(
+        txn = "\"txn\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
+          .getOrElse(throw new IllegalArgumentException(
+            "malformed catalog entry: missing txn")),
+        tables = "\"([A-Za-z0-9._-]+)\":(\\d+)".r
+          .findAllMatchIn(body("tables", required = true))
+          .map(m => m.group(1) -> m.group(2).toInt).toMap,
+        versions = "\"([A-Za-z0-9._-]+)\":\\[([0-9,]*)\\]".r
+          .findAllMatchIn(body("versions", required = true))
+          .map(m => m.group(1) ->
+            m.group(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq).toMap,
+        colmap = perTable("colmap", "\"([A-Za-z0-9_]+)\"").map { case (t, ms) =>
+          t -> ms.map(m => m.group(2) -> m.group(3)).toMap },
+        drops = perTable("coldrop", "1").map { case (t, ms) =>
+          t -> ms.map(_.group(2)).toSet },
+        tag = "\"tag\":\"([^\"]*)\"".r.findFirstMatchIn(s).map(_.group(1)))
+    }
+  }
+
   def tablePath(catalog: String, name: String): String =
     new File(new File(catalog, "tables"), name).getPath
 
   private def txnDir(catalog: String) = new File(catalog, "_graft_txn")
+
+  private def entryFile(catalog: String, txn: Int) =
+    new File(txnDir(catalog), f"t$txn%05d.json")
 
   private def txnOf(f: File): Int =
     f.getName.stripPrefix("t").stripSuffix(".json").toInt
@@ -60,6 +157,26 @@ object TxnCatalog {
     Option(txnDir(catalog).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.matches("t\\d{5}\\.json"))
       .sortBy(txnOf).toSeq
+
+  private def load(f: File): Entry =
+    Entry.parse(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
+
+  /** The snapshot as of `asOf` (latest when None): one listing of
+    * `_graft_txn` and one read of one entry; `Entry(0)` when no entry is
+    * that old. */
+  private[sources] def entry(catalog: String, asOf: Option[Int]): Entry =
+    txnFiles(catalog).filter(f => asOf.forall(txnOf(f) <= _)).lastOption
+      .fold(Entry(0))(load)
+
+  /** Every entry, in txn order, from one listing. */
+  private def entries(catalog: String): Seq[Entry] = txnFiles(catalog).map(load)
+
+  /** The txn a writer publishes and the entry it builds on: `expectedTxn`
+    * pins the snapshot it read (+ 1); by default the head. */
+  private def nextTxn(catalog: String, expectedTxn: Option[Int]): (Int, Entry) = {
+    val e = entry(catalog, expectedTxn.map(_ - 1))
+    (expectedTxn.getOrElse(e.txn + 1), e)
+  }
 
   /** Latest committed transaction, 0 if the catalog is unborn. */
   def currentTxn(catalog: String): Int =
@@ -71,135 +188,35 @@ object TxnCatalog {
     require(name.matches("[A-Za-z0-9._-]+"),
       s"table name must be [A-Za-z0-9._-]+: '$name'")
 
-  private def jsonMap(m: Map[String, Int]): String =
-    m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  private def asOfText(asOf: Option[Int]): String =
+    asOf.fold("")(t => s" as of t$t")
 
-  /** Parse `{"name":version,...}` after the given key — same
-    * dependency-free quote-scan contract as TxnTable's log parser. */
-  private def parseMap(s: String, key: String): Map[String, Int] = {
-    val i = s.indexOf("\"" + key + "\":{")
-    require(i >= 0, s"malformed catalog entry: missing $key")
-    val body = s.substring(s.indexOf('{', i) + 1, s.indexOf('}', i))
-    "\"([A-Za-z0-9._-]+)\":(\\d+)".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
-  }
+  /** `name`'s lineage in `e`, or the error naming a missing table. */
+  private def lineageOf(catalog: String, e: Entry, name: String,
+                        asOf: Option[Int] = None): Seq[Int] =
+    e.versions.getOrElse(name, throw new IllegalArgumentException(
+      s"table '$name' does not exist in $catalog${asOfText(asOf)}"))
 
-  private def jsonLists(m: Map[String, Seq[Int]]): String =
-    m.toSeq.sortBy(_._1)
-      .map { case (k, vs) => s""""$k":${vs.mkString("[", ",", "]")}""" }
-      .mkString("{", ",", "}")
-
-  /** Parse the `"versions"` object: `{"name":[1,3],...}`. The bracketed-
-    * value regex cannot match inside `tables` (plain ints) or `tag`
-    * (quoted string), so a whole-entry scan is exact. */
-  private def parseLists(s: String): Map[String, Seq[Int]] = {
-    require(s.contains("\"versions\":{"),
-      "malformed catalog entry: missing versions")
-    "\"([A-Za-z0-9._-]+)\":\\[([0-9,]*)\\]".r.findAllMatchIn(s)
-      .map(m => m.group(1) ->
-        m.group(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
-      .toMap
-  }
-
-  /** Column MAPPING (rename without rewrite): per table, physical parquet
-    * column name → logical name. Serialized flat as `"tbl|phys":"logical"`
-    * (`|` is outside both name grammars, so the split is exact); absent
-    * in pre-mapping entries. Entries stay self-contained: each carries
-    * the FULL map for its snapshot, so restore and time travel resolve
-    * names from the entry alone. */
-  private def jsonColmap(m: Map[String, Map[String, String]]): String =
-    m.toSeq.sortBy(_._1).flatMap { case (t, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (p, l) => s""""$t|$p":"$l"""" }
-    }.mkString("{", ",", "}")
-
-  private def parseColmap(s: String): Map[String, Map[String, String]] = {
-    val i = s.indexOf("\"colmap\":{")
-    if (i < 0) Map.empty
-    else {
-      val body = s.substring(s.indexOf('{', i) + 1, s.indexOf('}', i))
-      "\"([A-Za-z0-9._-]+)\\|([A-Za-z0-9_]+)\":\"([A-Za-z0-9_]+)\"".r
-        .findAllMatchIn(body)
-        .map(m => (m.group(1), m.group(2), m.group(3))).toSeq
-        .groupBy(_._1)
-        .map { case (t, rows) => t -> rows.map(r => r._2 -> r._3).toMap }
-    }
-  }
-
-  /** DROPPED columns (physical names) per table — serialized flat as
-    * `"tbl|phys":1` under `"coldrop"`. A dropped column vanishes from
-    * reads; the bytes stay (and older snapshots still show it). */
-  private def jsonDrops(m: Map[String, Set[String]]): String =
-    m.toSeq.sortBy(_._1).flatMap { case (t, cols) =>
-      cols.toSeq.sorted.map(c => s""""$t|$c":1""")
-    }.mkString("{", ",", "}")
-
-  private def parseDrops(s: String): Map[String, Set[String]] = {
-    val i = s.indexOf("\"coldrop\":{")
-    if (i < 0) Map.empty
-    else {
-      val body = s.substring(s.indexOf('{', i) + 1, s.indexOf('}', i))
-      "\"([A-Za-z0-9._-]+)\\|([A-Za-z0-9_]+)\":1".r
-        .findAllMatchIn(body)
-        .map(m => (m.group(1), m.group(2))).toSeq
-        .groupBy(_._1)
-        .map { case (t, rows) => t -> rows.map(_._2).toSet }
-    }
-  }
-
-  /** The per-table dropped-column set of a snapshot. */
-  private[sources] def colDrops(catalog: String,
-                                asOf: Option[Int]): Map[String, Set[String]] =
-    entryAt(catalog, asOf) match {
-      case None => Map.empty
-      case Some(f) => parseDrops(new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8))
-    }
-
-  /** The per-table column map of a snapshot (physical → logical). */
-  private[sources] def colMap(catalog: String,
-                              asOf: Option[Int]): Map[String, Map[String, String]] =
-    entryAt(catalog, asOf) match {
-      case None => Map.empty
-      case Some(f) => parseColmap(new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8))
-    }
-
-  private def entryAt(catalog: String, asOf: Option[Int]): Option[File] =
-    txnFiles(catalog).filter(f => asOf.forall(txnOf(f) <= _)).lastOption
-
-  /** The per-table version lineage as of `asOf` — the exact log entries
-    * a read replays. */
-  private[sources] def versionLists(catalog: String,
-                                    asOf: Option[Int]): Map[String, Seq[Int]] =
-    entryAt(catalog, asOf) match {
-      case None => Map.empty
-      case Some(f) => parseLists(new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8))
+  /** Rename `df`'s columns by `names` (from → to), skipping absent ones. */
+  private def renamed(df: DataFrame, names: Map[String, String]): DataFrame =
+    names.foldLeft(df) { case (d, (from, to)) =>
+      if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d
     }
 
   /** Per-table lineage LENGTH of a snapshot — the number of log entries a
     * read of `name` replays (the metadata cost [[compactLineage]] bounds).
     * 0 if the table is absent. */
   def lineageLength(catalog: String, name: String, asOf: Option[Int] = None): Int =
-    versionLists(catalog, asOf).get(name).map(_.length).getOrElse(0)
+    entry(catalog, asOf).versions.get(name).fold(0)(_.length)
 
   /** The full table→version mapping as of `asOf` (latest when None). */
   def tableVersions(catalog: String, asOf: Option[Int] = None): Map[String, Int] =
-    entryAt(catalog, asOf) match {
-      case None => Map.empty
-      case Some(f) =>
-        parseMap(new String(Files.readAllBytes(f.toPath),
-          StandardCharsets.UTF_8), "tables")
-    }
+    entry(catalog, asOf).tables
 
   /** The writer tag published with transaction `txn`, if any. */
   def commitTag(catalog: String, txn: Int): Option[String] = {
-    val f = new File(txnDir(catalog), f"t$txn%05d.json")
-    if (!f.isFile) None
-    else "\"tag\":\"([^\"]*)\"".r
-      .findFirstMatchIn(new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8)).map(_.group(1))
+    val f = entryFile(catalog, txn)
+    if (f.isFile) load(f).tag else None
   }
 
   /** Commit every write in `writes` as ONE catalog transaction and
@@ -217,9 +234,8 @@ object TxnCatalog {
     require(writes.map(_.name).distinct.size == writes.size,
       s"one version per table per txn: duplicate names in ${writes.map(_.name)}")
     writes.foreach(w => checkName(w.name))
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
+    val (txn, e) = nextTxn(catalog, expectedTxn)
     require(txn >= 1, s"expectedTxn must be >= 1, got $txn")
-    val base = tableVersions(catalog, Some(txn - 1))
     // stage: per-table commits, catalog-invisible until the entry lands.
     // An overwrite must remove exactly the CATALOG-visible files, not the
     // table-local live set (which may include orphans a failed txn added
@@ -230,19 +246,14 @@ object TxnCatalog {
     // TxnTable's removal list is a superset of the catalog-visible files
     // (same files plus orphans), and replay subtracts only what it added,
     // so both ledgers agree on the catalog-visible outcome.
-    val cmap = colMap(catalog, Some(txn - 1))
-    val dmap = colDrops(catalog, Some(txn - 1))
     def stage(w: Write): (String, Int) = {
       // the caller writes LOGICAL column names; physical parquet names
       // never change across a rename, so reverse-map before the write
-      val toPhys = cmap.getOrElse(w.name, Map.empty).map(_.swap)
-      val phys = toPhys.foldLeft(w.df) { case (df, (l, p)) =>
-        if (df.columns.contains(l)) df.withColumnRenamed(l, p) else df
-      }
+      val phys = renamed(w.df, e.colmap.getOrElse(w.name, Map.empty).map(_.swap))
       // a DROPPED physical name cannot be re-added in place — reads would
       // silently hide it again; re-introduce the data under a new name
       val clash = phys.columns.filter(
-        dmap.getOrElse(w.name, Set.empty).contains)
+        e.drops.getOrElse(w.name, Set.empty).contains)
       require(clash.isEmpty,
         s"column(s) ${clash.mkString(", ")} of '${w.name}' were DROPPED — " +
           "re-adding needs a new column name")
@@ -262,15 +273,14 @@ object TxnCatalog {
     val created: Map[String, Int] = Overlap.map(Some(spark), writes,
       Overlap.confInt(spark, "spark.graft.catalog.commitParallelism", 4),
       "catalog commit")(stage).toMap
-    val baseLists = versionLists(catalog, Some(txn - 1))
     val byName = writes.map(w => w.name -> w.overwrite).toMap
-    val lists = baseLists ++ created.map { case (name, v) =>
+    val lists = e.versions ++ created.map { case (name, v) =>
       // an overwrite's removal list covers every catalog-visible file
       // (it removes the table-local live superset), so replaying [v]
       // alone is exact — the lineage TRUNCATES instead of growing,
       // bounding entry size for overwrite-style tables
       name -> (if (byName(name)) Seq(v)
-               else baseLists.getOrElse(name, Seq.empty) :+ v)
+               else e.versions.getOrElse(name, Seq.empty) :+ v)
     }
     // Append-heavy sinks (one version per streaming micro-batch) would
     // otherwise grow every subsequent ENTRY by one version forever —
@@ -281,7 +291,7 @@ object TxnCatalog {
     // entries keep replaying their own lineages).
     val maxLineage =
       Overlap.confInt(spark, "spark.graft.catalog.maxLineage", 64)
-    var tables = base ++ created
+    var tables = e.tables ++ created
     val capped = lists.map { case (name, lin) =>
       if (lin.length <= maxLineage) name -> lin
       else {
@@ -291,7 +301,8 @@ object TxnCatalog {
         name -> Seq(v)
       }
     }
-    publishEntry(catalog, txn, tables, capped, tag, cmap, dmap)
+    publishEntry(catalog,
+      e.copy(txn = txn, tables = tables, versions = capped, tag = tag))
   }
 
   /** Zero-copy CATALOG CLONE — the dev-sandbox-from-prod move: every
@@ -319,20 +330,17 @@ object TxnCatalog {
     * harmless catalog-invisible orphans (the clone's vacuum sweeps
     * them). Returns the cloned head txn (= the pin). */
   def cloneCatalog(src: String, dst: String): Int = {
-    val head = currentTxn(src)
+    val all = entries(src)
+    val head = all.lastOption.fold(0)(_.txn)
     require(head >= 1, s"nothing to clone: $src has no txns")
     require(currentTxn(dst) == 0 && !new File(dst).exists(),
       s"clone target $dst already exists")
     // highest table version ANY entry ≤ head references (not just the
     // head's mapping — a restore's head maps to OLD versions while
     // earlier entries still travel to newer ones)
-    val pinned = scala.collection.mutable.Map.empty[String, Int]
-    (1 to head).foreach { t =>
-      versionLists(src, Some(t)).foreach { case (n, lin) =>
-        val hi = (lin ++ tableVersions(src, Some(t)).get(n)).max
-        pinned(n) = math.max(pinned.getOrElse(n, 0), hi)
-      }
-    }
+    val pinned: Map[String, Int] = all
+      .flatMap(e => e.versions.map { case (n, lin) => n -> (lin ++ e.tables.get(n)).max })
+      .groupMapReduce(_._1)(_._2)(math.max)
     val srcPath = new File(src).toPath
     val dstPath = new File(dst).toPath
     val txnRel = srcPath.relativize(txnDir(src).toPath)
@@ -396,12 +404,15 @@ object TxnCatalog {
       s"$branch (t$branchTxn) / $main (t$mainTxn): nothing to publish")
     val fork = forkTxn(branch, main, branchTxn, mainTxn)
     if (branchTxn == fork) return mainTxn // audit committed nothing
-    val auditTables = touchedSince(branch, fork, branchTxn)
+    // the fork entry is one file both catalogs share
+    val forkE = entry(branch, Some(fork))
+    val (branchE, mainE) = (entry(branch, Some(branchTxn)), entry(main, Some(mainTxn)))
+    val auditTables = branchE.changedFrom(forkE)
     // an audit whose NET state equals the fork (e.g. commits then a
     // restore back) has nothing to publish — don't burn a txn on a
     // byte-identical duplicate entry
     if (auditTables.isEmpty) return mainTxn
-    val conflicts = auditTables.intersect(touchedSince(main, fork, mainTxn))
+    val conflicts = auditTables.intersect(mainE.changedFrom(forkE))
     if (conflicts.nonEmpty) throw new WapConflictException(
       s"table(s) ${conflicts.toSeq.sorted.mkString(", ")} changed on BOTH " +
         s"$main and $branch since the fork (t$fork) — re-clone and replay " +
@@ -429,20 +440,8 @@ object TxnCatalog {
     for (t <- auditTables; if Files.isDirectory(new File(tablePath(branch, t)).toPath))
       AtomicFile.linkTree(new File(tablePath(branch, t)).toPath,
         new File(tablePath(main, t)).toPath)
-    val bv = tableVersions(branch, Some(branchTxn))
-    val blists = versionLists(branch, Some(branchTxn))
-    val bcmap = colMap(branch, Some(branchTxn))
-    val bdrops = colDrops(branch, Some(branchTxn))
-    publishEntry(main, mainTxn + 1,
-      tableVersions(main, Some(mainTxn)) ++
-        auditTables.flatMap(t => bv.get(t).map(t -> _)),
-      versionLists(main, Some(mainTxn)) ++
-        auditTables.flatMap(t => blists.get(t).map(t -> _)),
-      tag,
-      (colMap(main, Some(mainTxn)) -- auditTables) ++
-        bcmap.filter(kv => auditTables(kv._1)),
-      (colDrops(main, Some(mainTxn)) -- auditTables) ++
-        bdrops.filter(kv => auditTables(kv._1)))
+    publishEntry(main,
+      mainE.overlay(branchE, auditTables).copy(txn = mainTxn + 1, tag = tag))
   }
 
   /** [[publishFrom]]'s refusal when an audited table also changed on
@@ -458,7 +457,7 @@ object TxnCatalog {
   private def forkTxn(branch: String, main: String,
                       branchTxn: Int, mainTxn: Int): Int = {
     def entryIno(cat: String, t: Int): Option[AnyRef] = {
-      val f = new File(txnDir(cat), f"t$t%05d.json")
+      val f = entryFile(cat, t)
       if (f.isFile) Some(Files.getAttribute(f.toPath, "unix:ino")) else None
     }
     val fork = (1 to math.min(mainTxn, branchTxn)).takeWhile { t =>
@@ -469,22 +468,6 @@ object TxnCatalog {
       s"$branch is not a clone of $main — no shared txn entry")
     fork
   }
-
-  /** Tables whose snapshot state moved in (`fork`, `head`]: version,
-    * lineage, column mapping, or drop set — restores and metadata-only
-    * schema ops all surface here. */
-  private def touchedSince(cat: String, fork: Int, head: Int): Set[String] =
-    if (head == fork) Set.empty
-    else {
-      val (v0, v1) = (tableVersions(cat, Some(fork)), tableVersions(cat, Some(head)))
-      val (l0, l1) = (versionLists(cat, Some(fork)), versionLists(cat, Some(head)))
-      val (c0, c1) = (colMap(cat, Some(fork)), colMap(cat, Some(head)))
-      val (d0, d1) = (colDrops(cat, Some(fork)), colDrops(cat, Some(head)))
-      (v0.keySet ++ v1.keySet).filter { n =>
-        v0.get(n) != v1.get(n) || l0.get(n) != l1.get(n) ||
-          c0.get(n) != c1.get(n) || d0.get(n) != d1.get(n)
-      }
-    }
 
   /** WAP AUTO-REBASE — [[publishFrom]] with the manual re-clone-and-
     * replay loop automated: when the publish refuses because a table
@@ -522,34 +505,31 @@ object TxnCatalog {
     val mainTxn = currentTxn(main)
     val branchTxn = currentTxn(branch)
     val fork = forkTxn(branch, main, branchTxn, mainTxn)
-    val auditTables = touchedSince(branch, fork, branchTxn)
-    val conflicts = auditTables.intersect(touchedSince(main, fork, mainTxn))
+    val forkE = entry(branch, Some(fork))
+    val (branchE, mainE) = (entry(branch, Some(branchTxn)), entry(main, Some(mainTxn)))
+    val auditTables = branchE.changedFrom(forkE)
+    val conflicts = auditTables.intersect(mainE.changedFrom(forkE))
     // the audit's colmap/drop changes on a conflicted table cannot be
     // re-applied over main's independent changes — genuine conflict
-    val bcmapB = colMap(branch, Some(branchTxn))
-    val bdropB = colDrops(branch, Some(branchTxn))
-    val cmapF = colMap(branch, Some(fork))
-    val dropF = colDrops(branch, Some(fork))
     for (t <- conflicts)
-      require(bcmapB.get(t) == cmapF.get(t) && bdropB.get(t) == dropF.get(t),
+      require(branchE.colmap.get(t) == forkE.colmap.get(t) &&
+          branchE.drops.get(t) == forkE.drops.get(t),
         s"table '$t' changed on both sides AND the audit remapped/dropped " +
           "columns on it — cannot rebase; re-run the audit on a new clone")
     // conflicted tables must be pure appends on the audit side, and the
     // appended files must not collide with anything main now holds
-    val forkV = tableVersions(branch, Some(fork))
-    val branchV = tableVersions(branch, Some(branchTxn))
     val appended: Map[String, Seq[Seq[String]]] = conflicts.toSeq.map { t =>
       val tPath = tablePath(branch, t)
       // a table the FORK never had but both sides now hold was CREATED
       // independently on each — same name, unrelated content; replaying
       // the audit's rows on top of main's would silently union two
       // different tables. Genuine conflict.
-      require(forkV.contains(t),
+      require(forkE.tables.contains(t),
         s"table '$t' was created independently on both $main and the " +
           "audit since the fork — cannot rebase; re-run the audit on a " +
           "new clone")
-      val from = forkV(t)
-      val to = branchV.getOrElse(t,
+      val from = forkE.tables(t)
+      val to = branchE.tables.getOrElse(t,
         throw new IllegalArgumentException(
           s"table '$t' was dropped by the audit but changed on $main — " +
             "cannot rebase"))
@@ -589,8 +569,7 @@ object TxnCatalog {
     var k = 1
     while (new File(s"${branch}_rebase$k").exists()) k += 1
     val reb = s"${branch}_rebase$k"
-    cloneCatalog(main, reb)
-    val rebTxnAtClone = currentTxn(reb)
+    val rebTxnAtClone = cloneCatalog(main, reb)
     // replay: non-conflicted tables link verbatim (log entries included —
     // their base state in the clone equals the fork state); conflicted
     // tables re-publish their appended files as fresh versions
@@ -619,23 +598,12 @@ object TxnCatalog {
         TxnTable.publishFileList(rPath, files, tag = Some("rebase")))
     }
     // one catalog txn on the rebase clone carrying the whole audit
-    val rv = tableVersions(reb, Some(rebTxnAtClone))
-    val rlists = versionLists(reb, Some(rebTxnAtClone))
-    val bv = tableVersions(branch, Some(branchTxn))
-    val blists = versionLists(branch, Some(branchTxn))
-    val tablesOut = rv ++
-      (auditTables -- conflicts).flatMap(t => bv.get(t).map(t -> _)) ++
-      newVersions.map { case (t, vs) => t -> vs.max }
-    val listsOut = rlists ++
-      (auditTables -- conflicts).flatMap(t => blists.get(t).map(t -> _)) ++
-      newVersions.map { case (t, vs) =>
-        t -> (rlists.getOrElse(t, Seq.empty) ++ vs) }
-    val rcmap = colMap(reb, Some(rebTxnAtClone))
-    val rdrops = colDrops(reb, Some(rebTxnAtClone))
-    val nonConf = auditTables -- conflicts
-    publishEntry(reb, rebTxnAtClone + 1, tablesOut, listsOut, tag,
-      (rcmap -- nonConf) ++ bcmapB.filter(kv => nonConf(kv._1)),
-      (rdrops -- nonConf) ++ bdropB.filter(kv => nonConf(kv._1)))
+    val rebE = entry(reb, Some(rebTxnAtClone))
+    val out = rebE.overlay(branchE, auditTables -- conflicts)
+    publishEntry(reb, out.copy(txn = rebTxnAtClone + 1, tag = tag,
+      tables = out.tables ++ newVersions.map { case (t, vs) => t -> vs.max },
+      versions = out.versions ++ newVersions.map { case (t, vs) =>
+        t -> (rebE.versions.getOrElse(t, Seq.empty) ++ vs) }))
     publishFrom(reb, main, tag)
   }
 
@@ -676,9 +644,7 @@ object TxnCatalog {
     require(toTxn >= 1 && toTxn < txn - 1,
       s"cannot restore $catalog to t$toTxn from t${txn - 1} — the target " +
         "must be strictly before the current head")
-    publishEntry(catalog, txn, tableVersions(catalog, Some(toTxn)),
-      versionLists(catalog, Some(toTxn)), tag, colMap(catalog, Some(toTxn)),
-      colDrops(catalog, Some(toTxn)))
+    publishEntry(catalog, entry(catalog, Some(toTxn)).copy(txn = txn, tag = tag))
   }
 
   /** Register every table of ONE catalog snapshot as a temp view
@@ -689,13 +655,13 @@ object TxnCatalog {
   def registerViews(spark: SparkSession, catalog: String,
                     asOf: Option[Int] = None,
                     prefix: String = ""): Int = {
-    val txn = entryAt(catalog, asOf).map(txnOf).getOrElse(
-      throw new IllegalArgumentException(s"no committed transaction in $catalog"))
-    versionLists(catalog, Some(txn)).keys.foreach { n =>
-      read(spark, catalog, n, asOf = Some(txn))
-        .createOrReplaceTempView(prefix + n)
+    val e = entry(catalog, asOf)
+    if (e.txn == 0)
+      throw new IllegalArgumentException(s"no committed transaction in $catalog")
+    e.versions.keys.foreach { n =>
+      readAt(spark, catalog, e, n, Some(e.txn)).createOrReplaceTempView(prefix + n)
     }
-    txn
+    e.txn
   }
 
   /** Zero-copy LINEAGE CHECKPOINT for one table: an append-heavy table
@@ -714,24 +680,18 @@ object TxnCatalog {
                      expectedTxn: Option[Int] = None,
                      tag: Option[String] = None): Int = {
     checkName(name)
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
+    val (txn, e) = nextTxn(catalog, expectedTxn)
     require(txn >= 2,
       s"no committed transaction in $catalog to compact from")
-    val base = tableVersions(catalog, Some(txn - 1))
-    val baseLists = versionLists(catalog, Some(txn - 1))
-    val lineage = baseLists.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"table '$name' does not exist in $catalog"))
     val table = tablePath(catalog, name)
-    val live = liveForLineage(table, lineage)
+    val live = liveForLineage(table, lineageOf(catalog, e, name))
     require(live.nonEmpty, s"no live files for '$name' in $catalog")
     // the squash version must come AFTER every lineage version (readers
     // replay in version order); a racing table writer loses on the
     // put-if-absent publish exactly like any commit
     val v = TxnTable.publishFileList(table, live, tag)
-    publishEntry(catalog, txn, base + (name -> v),
-      baseLists + (name -> Seq(v)), tag, colMap(catalog, Some(txn - 1)),
-      colDrops(catalog, Some(txn - 1)))
+    publishEntry(catalog, e.copy(txn = txn, tables = e.tables + (name -> v),
+      versions = e.versions + (name -> Seq(v)), tag = tag))
   }
 
   /** Catalog-level MERGE-ON-READ DELETE: one metadata-light transaction
@@ -746,35 +706,10 @@ object TxnCatalog {
   def deleteWhereMor(spark: SparkSession, catalog: String, name: String,
                      predicate: org.apache.spark.sql.Column,
                      expectedTxn: Option[Int] = None,
-                     tag: Option[String] = None): (Int, Long) = Trace.span("sources.delete") {
-    checkName(name)
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
-    require(txn >= 2, s"no committed transaction in $catalog to delete from")
-    val base = tableVersions(catalog, Some(txn - 1))
-    val baseLists = versionLists(catalog, Some(txn - 1))
-    val lineage = baseLists.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"table '$name' does not exist in $catalog"))
-    val table = tablePath(catalog, name)
-    import org.apache.spark.sql.functions.col
-    val cmap = colMap(catalog, Some(txn - 1))
-    val dmap = colDrops(catalog, Some(txn - 1))
-    val addressed = TxnTable
-      .fileListWithAddress(spark, table, liveForLineage(table, lineage))
-      .drop(dmap.getOrElse(name, Set.empty).toSeq: _*)
-    // the predicate speaks LOGICAL names; addresses are name-agnostic
-    val logical = cmap.getOrElse(name, Map.empty).foldLeft(addressed) {
-      case (df, (p, l)) =>
-        if (df.columns.contains(p)) df.withColumnRenamed(p, l) else df
-    }
-    val doomed = logical
-      .filter(predicate)
-      .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
-    val (v, n) = TxnTable.commitDv(spark, table, doomed,
-      TxnTable.currentVersion(table) + 1, tag)
-    if (n == 0L) return (currentTxn(catalog), 0L)
-    (publishEntry(catalog, txn, base + (name -> v),
-      baseLists + (name -> (lineage :+ v)), tag, cmap, dmap), n)
+                     tag: Option[String] = None): (Int, Long) = {
+    val (txn, counts) =
+      forgetWhere(spark, catalog, Map(name -> predicate), expectedTxn, tag)
+    (txn, counts(name))
   }
 
   /** RENAME COLUMN without rewriting a byte — Delta column-mapping in
@@ -794,15 +729,10 @@ object TxnCatalog {
     checkName(name)
     require(to.matches("[A-Za-z0-9_]+"),
       s"logical column name must be [A-Za-z0-9_]+: '$to'")
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
+    val (txn, e) = nextTxn(catalog, expectedTxn)
     require(txn >= 2, s"no committed transaction in $catalog to rename in")
-    val base = tableVersions(catalog, Some(txn - 1))
-    val baseLists = versionLists(catalog, Some(txn - 1))
-    require(baseLists.contains(name),
-      s"table '$name' does not exist in $catalog")
-    val cmap = colMap(catalog, Some(txn - 1))
-    val tmap = cmap.getOrElse(name, Map.empty)
-    val snapshot = read(spark, catalog, name, asOf = Some(txn - 1))
+    val tmap = e.colmap.getOrElse(name, Map.empty)
+    val snapshot = readAt(spark, catalog, e, name, Some(txn - 1))
     require(snapshot.columns.contains(from),
       s"column '$from' does not exist in '$name' " +
         s"(has: ${snapshot.columns.mkString(", ")})")
@@ -815,12 +745,11 @@ object TxnCatalog {
     val newTmap =
       if (phys == to) tmap - phys // renamed back to the physical name
       else tmap + (phys -> to)
-    val dmap = colDrops(catalog, Some(txn - 1))
-    require(!dmap.getOrElse(name, Set.empty).contains(to),
+    require(!e.drops.getOrElse(name, Set.empty).contains(to),
       s"'$to' is a DROPPED physical column of '$name' — reads would hide " +
         "the renamed column; pick another name")
-    publishEntry(catalog, txn, base, baseLists, tag,
-      cmap + (name -> newTmap), dmap)
+    publishEntry(catalog,
+      e.copy(txn = txn, colmap = e.colmap + (name -> newTmap), tag = tag))
   }
 
   /** DROP COLUMN without rewriting a byte — the third leg of zero-
@@ -835,27 +764,21 @@ object TxnCatalog {
                  expectedTxn: Option[Int] = None,
                  tag: Option[String] = None): Int = {
     checkName(name)
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
+    val (txn, e) = nextTxn(catalog, expectedTxn)
     require(txn >= 2, s"no committed transaction in $catalog to drop from")
-    val base = tableVersions(catalog, Some(txn - 1))
-    val baseLists = versionLists(catalog, Some(txn - 1))
-    require(baseLists.contains(name),
-      s"table '$name' does not exist in $catalog")
-    val snapshot = read(spark, catalog, name, asOf = Some(txn - 1))
+    val snapshot = readAt(spark, catalog, e, name, Some(txn - 1))
     require(snapshot.columns.contains(colName),
       s"column '$colName' does not exist in '$name' " +
         s"(has: ${snapshot.columns.mkString(", ")})")
     require(snapshot.columns.length > 1,
       s"cannot drop the last visible column of '$name'")
-    val cmap = colMap(catalog, Some(txn - 1))
-    val tmap = cmap.getOrElse(name, Map.empty)
-    val dmap = colDrops(catalog, Some(txn - 1))
+    val tmap = e.colmap.getOrElse(name, Map.empty)
     // resolve logical -> physical; a renamed column drops by its carrier
     val phys = tmap.collectFirst { case (p, l) if l == colName => p }
       .getOrElse(colName)
-    publishEntry(catalog, txn, base, baseLists, tag,
-      cmap + (name -> (tmap - phys)),
-      dmap + (name -> (dmap.getOrElse(name, Set.empty) + phys)))
+    publishEntry(catalog, e.copy(txn = txn, colmap = e.colmap + (name -> (tmap - phys)),
+      drops = e.drops + (name -> (e.drops.getOrElse(name, Set.empty) + phys)),
+      tag = tag))
   }
 
   private def catReplicaFile(dst: String) = new File(dst, "_graft_replica.json")
@@ -898,16 +821,10 @@ object TxnCatalog {
     val marker = catReplicaFile(dst)
     val synced =
       if (marker.isFile) {
-        val m = new String(Files.readAllBytes(marker.toPath),
-          StandardCharsets.UTF_8)
-        val rec = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse("")
-        require(rec == srcAbs,
-          s"$dst replicates $rec, refusing to sync from $srcAbs")
-        val sy = "\"syncedTxn\":(\\d+)".r.findFirstMatchIn(m)
-          .map(_.group(1).toInt)
-          .getOrElse(throw new IllegalStateException(
-            s"malformed catalog replica marker in $dst"))
+        val m = new TxnTable.Marker(marker, "catalog replica", dst)
+        require(m.src == srcAbs,
+          s"$dst replicates ${m.src}, refusing to sync from $srcAbs")
+        val sy = m.int("syncedTxn")
         // a replica forked AHEAD of the source (local txns past the
         // source's head) would otherwise report a clean no-op sync; a
         // legitimate crash-resume is at most one entry past the marker
@@ -938,11 +855,13 @@ object TxnCatalog {
     // not O(history) (a restore's re-listed old versions are in the
     // prior lineage and skip here)
     var prevLin: Map[String, Seq[Int]] =
-      if (synced == 0) Map.empty else versionLists(src, Some(synced))
+      if (synced == 0) Map.empty else entry(src, Some(synced)).versions
     ((synced + 1) to head).foreach { t =>
-      val entry = new File(txnDir(src), f"t$t%05d.json")
-      require(entry.isFile, s"replication gap: $src has no txn entry t$t")
-      val lin = versionLists(src, Some(t))
+      val file = entryFile(src, t)
+      require(file.isFile, s"replication gap: $src has no txn entry t$t")
+      // the lineage comes from the very bytes the replica receives
+      val bytes = Files.readAllBytes(file.toPath)
+      val lin = Entry.parse(new String(bytes, StandardCharsets.UTF_8)).versions
       // the txn's DATA files are the bulk and are order-free among
       // themselves — gather them across every table/version in the
       // lineage delta and fan the copies out; the tiny fork-checked log
@@ -973,8 +892,7 @@ object TxnCatalog {
       // the catalog entry LAST — the cross-table commit point: a reader
       // of the replica never sees half a transaction
       txnDir(dst).mkdirs()
-      val bytes = Files.readAllBytes(entry.toPath)
-      val target = new File(txnDir(dst), f"t$t%05d.json")
+      val target = entryFile(dst, t)
       if (!AtomicFile.putIfAbsent(target, bytes))
         require(java.util.Arrays.equals(bytes, Files.readAllBytes(target.toPath)),
           s"replica fork: $dst txn t$t was published by a local writer")
@@ -984,8 +902,9 @@ object TxnCatalog {
     // constraints travel UNCONDITIONALLY and ATOMICALLY, once per table
     // per sync (not per txn — a backlog sync would re-copy them per
     // entry), data-less syncs included: a declaration moved between
-    // transactions must never leave the replica auditing a stale set
-    versionLists(src, Some(head)).keys.toSeq.sorted.foreach { name =>
+    // transactions must never leave the replica auditing a stale set.
+    // `prevLin` holds the head's lineage now.
+    prevLin.keys.toSeq.sorted.foreach { name =>
       val cons = new File(tablePath(src, name), "_graft_constraints.json")
       if (cons.isFile) {
         val to = new File(tablePath(dst, name), "_graft_constraints.json")
@@ -1033,17 +952,13 @@ object TxnCatalog {
     val pm = catPromotedFile(newPrimary)
     require(pm.isFile,
       s"$newPrimary was never promoted from a catalog replica — cannot demote $oldSrc under it")
-    val m = new String(Files.readAllBytes(pm.toPath), StandardCharsets.UTF_8)
-    val rec = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(m)
-      .map(_.group(1)).getOrElse("")
+    val m = new TxnTable.Marker(pm, "promoted", newPrimary)
     val oldAbs = new File(oldSrc).getAbsolutePath
-    require(rec == oldAbs,
-      s"$newPrimary was promoted from a replica of $rec, not of $oldAbs")
+    require(m.src == oldAbs,
+      s"$newPrimary was promoted from a replica of ${m.src}, not of $oldAbs")
     require(!catReplicaFile(oldSrc).isFile,
       s"$oldSrc is already a catalog replica — demoting it again is a state error")
-    val synced = "\"syncedTxn\":(\\d+)".r.findFirstMatchIn(m)
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"malformed promoted marker in $newPrimary: missing syncedTxn"))
+    val synced = m.int("syncedTxn")
     val head = currentTxn(oldSrc)
     require(head >= synced,
       s"$oldSrc is at t$head but the promoted replica synced t$synced — " +
@@ -1053,8 +968,8 @@ object TxnCatalog {
     // byte-identical entry; anything else is a commit the new primary
     // never saw and refuses loudly
     ((synced + 1) to head).foreach { t =>
-      val se = new File(txnDir(oldSrc), f"t$t%05d.json")
-      val de = new File(txnDir(newPrimary), f"t$t%05d.json")
+      val se = entryFile(oldSrc, t)
+      val de = entryFile(newPrimary, t)
       require(se.isFile && de.isFile && java.util.Arrays.equals(
         Files.readAllBytes(se.toPath), Files.readAllBytes(de.toPath)),
         s"$oldSrc holds transaction t$t the new primary never saw; " +
@@ -1077,82 +992,60 @@ object TxnCatalog {
   def forgetWhere(spark: SparkSession, catalog: String,
                   predicates: Map[String, org.apache.spark.sql.Column],
                   expectedTxn: Option[Int] = None,
-                  tag: Option[String] = None): (Int, Map[String, Long]) = {
-    require(predicates.nonEmpty, "forgetWhere needs at least one table")
-    predicates.keys.foreach(checkName)
-    val txn = expectedTxn.getOrElse(currentTxn(catalog) + 1)
-    require(txn >= 2, s"no committed transaction in $catalog to forget from")
-    val base = tableVersions(catalog, Some(txn - 1))
-    val baseLists = versionLists(catalog, Some(txn - 1))
-    import org.apache.spark.sql.functions.col
-    val cmap = colMap(catalog, Some(txn - 1))
-    val dmap = colDrops(catalog, Some(txn - 1))
-    val staged = predicates.toSeq.sortBy(_._1).map { case (name, pred) =>
-      val lineage = baseLists.getOrElse(name,
-        throw new IllegalArgumentException(
-          s"table '$name' does not exist in $catalog"))
-      val table = tablePath(catalog, name)
-      val addressed = TxnTable
-        .fileListWithAddress(spark, table, liveForLineage(table, lineage))
-        .drop(dmap.getOrElse(name, Set.empty).toSeq: _*)
-      val logical = cmap.getOrElse(name, Map.empty).foldLeft(addressed) {
-        case (df, (p, l)) =>
-          if (df.columns.contains(p)) df.withColumnRenamed(p, l) else df
+                  tag: Option[String] = None): (Int, Map[String, Long]) =
+    Trace.span("sources.delete") {
+      require(predicates.nonEmpty, "forgetWhere needs at least one table")
+      predicates.keys.foreach(checkName)
+      val (txn, e) = nextTxn(catalog, expectedTxn)
+      require(txn >= 2, s"no committed transaction in $catalog to delete from")
+      import org.apache.spark.sql.functions.col
+      val staged = predicates.toSeq.sortBy(_._1).map { case (name, pred) =>
+        val table = tablePath(catalog, name)
+        val addressed = TxnTable
+          .fileListWithAddress(spark, table,
+            liveForLineage(table, lineageOf(catalog, e, name)))
+          .drop(e.drops.getOrElse(name, Set.empty).toSeq: _*)
+        // the predicate speaks LOGICAL names; addresses are name-agnostic
+        val doomed = renamed(addressed, e.colmap.getOrElse(name, Map.empty))
+          .filter(pred)
+          .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
+        val (v, n) = TxnTable.commitDv(spark, table, doomed,
+          TxnTable.currentVersion(table) + 1, tag)
+        (name, v, n)
       }
-      val doomed = logical
-        .filter(pred)
-        .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
-      val (v, n) = TxnTable.commitDv(spark, table, doomed,
-        TxnTable.currentVersion(table) + 1, tag)
-      (name, v, n)
+      val counts = staged.map { case (name, _, n) => name -> n }.toMap
+      val touched = staged.collect { case (name, v, n) if n > 0L => name -> v }
+      if (touched.isEmpty) (currentTxn(catalog), counts)
+      else {
+        publishEntry(catalog, e.copy(txn = txn, tables = e.tables ++ touched,
+          versions = e.versions ++ touched.map { case (name, v) =>
+            name -> (e.versions(name) :+ v) },
+          tag = tag))
+        (txn, counts)
+      }
     }
-    val counts = staged.map { case (name, _, n) => name -> n }.toMap
-    if (staged.forall(_._3 == 0L)) return (currentTxn(catalog), counts)
-    val touched = staged.filter(_._3 > 0L)
-    publishEntry(catalog, txn,
-      base ++ touched.map { case (name, v, _) => name -> v },
-      baseLists ++ touched.map { case (name, v, _) =>
-        name -> (baseLists(name) :+ v)
-      }, tag, cmap, dmap)
-    (txn, counts)
-  }
 
   /** Replay exactly `lineage`'s log entries, in order — the snapshot
     * those versions compose. */
   private def liveForLineage(table: String, lineage: Seq[Int]): Seq[String] = {
     val wanted = lineage.toSet
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    TxnTable.logFiles(table)
-      .filter(f => wanted.contains(TxnTable.versionOf(f)))
-      .foreach { f =>
-        val (added, removed) = TxnTable.parseEntry(f)
-        live --= removed
-        live ++= added
-      }
-    live.toSeq
+    TxnTable.replayLog(
+      TxnTable.logFiles(table).filter(f => wanted.contains(TxnTable.versionOf(f))))
   }
 
-  /** Catalog-wide VACUUM: physically delete every table data file that
-    * NO catalog entry's lineage references — the bytes crashed and
-    * losing transactions stranded (their versions appear in a per-table
-    * log but in no published entry). Unlike `TxnTable.vacuum` this
+  /** Catalog-wide VACUUM: physically delete every table data and
+    * deletion-vector file that NO catalog entry's lineage references —
+    * the bytes crashed and losing transactions stranded (their versions
+    * appear in a per-table log but in no published entry). Unlike `TxnTable.vacuum` this
     * keeps EVERY catalog-travelable snapshot intact: any version listed
     * in any entry's lineage keeps all the files its log entry added
     * (even files a later overwrite removed — an older entry still
     * replays them). Dead tmps of crashed writers in `_graft_txn` and in
     * each table ([[TxnTable.sweepTmps]]) go too. Returns the deleted
-    * data-file count. */
+    * data and vector file count. */
   def vacuum(catalog: String): Int = Trace.span("sources.vacuum") {
-    val entries = txnFiles(catalog)
-    val keepByTable = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.Set[Int]]
-    entries.foreach { f =>
-      parseLists(new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8)).foreach { case (n, vs) =>
-        keepByTable.getOrElseUpdate(n,
-          scala.collection.mutable.Set.empty) ++= vs
-      }
-    }
+    val keepByTable: Map[String, Set[Int]] = entries(catalog)
+      .flatMap(_.versions).groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
     AtomicFile.deleteTmps(txnDir(catalog))
     val tablesDir = new File(catalog, "tables")
     Option(tablesDir.listFiles()).getOrElse(Array.empty)
@@ -1162,13 +1055,7 @@ object TxnCatalog {
         val keepFiles: Set[String] = TxnTable.logFiles(td.getPath)
           .filter(f => keepVersions.contains(TxnTable.versionOf(f)))
           .flatMap(f => TxnTable.parseEntry(f)._1).toSet
-        val dataRoot = new File(td, "data")
-        val doomed = Option(dataRoot.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory)
-          .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-          .filter(f => f.isFile && f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet") &&
-            !keepFiles.contains(s"data/${f.getParentFile.getName}/${f.getName}"))
+        val doomed = TxnTable.unreferenced(td.getPath, keepFiles)
         // fan the deletes out like the replication copies: order-free,
         // idempotent, and driver-serial would be the 100 TB wall
         ParallelCopy.mapPar(doomed.toSeq)(_.delete())
@@ -1177,32 +1064,16 @@ object TxnCatalog {
       }.sum
   }
 
-  private def publishEntry(catalog: String, txn: Int,
-                           tables: Map[String, Int],
-                           versions: Map[String, Seq[Int]],
-                           tag: Option[String],
-                           colmap: Map[String, Map[String, String]] = Map.empty,
-                           drops: Map[String, Set[String]] = Map.empty): Int = {
-    val tagField = tag.map { t =>
-      require(t.matches("[A-Za-z0-9._-]+"),
-        s"tag must be [A-Za-z0-9._-]+: '$t'")
-      s""","tag":"$t""""
-    }.getOrElse("")
-    val colmapField =
-      if (colmap.forall(_._2.isEmpty)) ""
-      else s""","colmap":${jsonColmap(colmap.filter(_._2.nonEmpty))}"""
-    val dropsField =
-      if (drops.forall(_._2.isEmpty)) ""
-      else s""","coldrop":${jsonDrops(drops.filter(_._2.nonEmpty))}"""
-    val entry = s"""{"txn":$txn,"tables":${jsonMap(tables)},""" +
-      s""""versions":${jsonLists(versions)}$colmapField$dropsField$tagField}"""
+  private def publishEntry(catalog: String, e: Entry): Int = {
+    e.tag.foreach(t => require(t.matches("[A-Za-z0-9._-]+"),
+      s"tag must be [A-Za-z0-9._-]+: '$t'"))
     txnDir(catalog).mkdirs()
-    if (!AtomicFile.putIfAbsent(new File(txnDir(catalog), f"t$txn%05d.json"),
-        entry.getBytes(StandardCharsets.UTF_8)))
+    if (!AtomicFile.putIfAbsent(entryFile(catalog, e.txn),
+        e.json.getBytes(StandardCharsets.UTF_8)))
       throw new java.util.ConcurrentModificationException(
-        s"catalog txn $txn of $catalog was published by another writer " +
+        s"catalog txn ${e.txn} of $catalog was published by another writer " +
           "(this writer's staged table versions stay orphaned)")
-    txn
+    e.txn
   }
 
   /** Read `name` as of catalog transaction `asOf` (latest when None).
@@ -1214,31 +1085,30 @@ object TxnCatalog {
     * Replay here walks EXACTLY the entry's own version lineage, in
     * order: the entry IS the snapshot. */
   def read(spark: SparkSession, catalog: String, name: String,
-           asOf: Option[Int] = None): DataFrame = Trace.span("sources.open") {
+           asOf: Option[Int] = None): DataFrame = {
     checkName(name)
-    require(entryAt(catalog, asOf).nonEmpty,
-      s"no committed transaction in $catalog${asOf.fold("")(t => s" as of t$t")}")
-    val lineage = versionLists(catalog, asOf).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"table '$name' does not exist in $catalog" +
-          asOf.fold("")(t => s" as of t$t")))
-    val table = tablePath(catalog, name)
-    val live = liveForLineage(table, lineage)
-    require(live.nonEmpty,
-      s"no live files for '$name' in $catalog${asOf.fold("")(t => s" as of t$t")}")
-    // deletion vectors in the lineage apply exactly as in TxnTable.read;
-    // dropped physical columns vanish (mergeSchema reconciles pre/post-
-    // drop files deterministically), then the column map renames
-    val dropped = colDrops(catalog, asOf).getOrElse(name, Set.empty)
-    val base = TxnTable
-      .readFileList(spark, table, live, mergeSchema = dropped.nonEmpty)
-      .drop(dropped.toSeq: _*)
-    colMap(catalog, asOf).getOrElse(name, Map.empty)
-      .foldLeft(base) {
-        case (df, (p, l)) =>
-          if (df.columns.contains(p)) df.withColumnRenamed(p, l) else df
-      }
+    val e = entry(catalog, asOf)
+    require(e.txn > 0, s"no committed transaction in $catalog${asOfText(asOf)}")
+    readAt(spark, catalog, e, name, asOf)
   }
+
+  /** [[read]] of `name` from the one entry `e`; `asOf` only labels errors. */
+  private def readAt(spark: SparkSession, catalog: String, e: Entry,
+                     name: String, asOf: Option[Int]): DataFrame =
+    Trace.span("sources.open") {
+      val table = tablePath(catalog, name)
+      val live = liveForLineage(table, lineageOf(catalog, e, name, asOf))
+      require(live.nonEmpty,
+        s"no live files for '$name' in $catalog${asOfText(asOf)}")
+      // deletion vectors in the lineage apply exactly as in TxnTable.read;
+      // dropped physical columns vanish (mergeSchema reconciles pre/post-
+      // drop files deterministically), then the column map renames
+      val dropped = e.drops.getOrElse(name, Set.empty)
+      val base = TxnTable
+        .readFileList(spark, table, live, mergeSchema = dropped.nonEmpty)
+        .drop(dropped.toSeq: _*)
+      renamed(base, e.colmap.getOrElse(name, Map.empty))
+    }
 
   /** Snapshot row count of a catalog table, METADATA-ONLY: the same
     * per-file counts and deletion-vector subtraction as
@@ -1250,12 +1120,8 @@ object TxnCatalog {
   def rowCount(catalog: String, name: String,
                asOf: Option[Int] = None): Long = {
     checkName(name)
-    val lineage = versionLists(catalog, asOf).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"table '$name' does not exist in $catalog" +
-          asOf.fold("")(t => s" as of t$t")))
     val table = tablePath(catalog, name)
     TxnTable.netRows(TxnTable.fileRowCounts(table,
-      liveForLineage(table, lineage)))
+      liveForLineage(table, lineageOf(catalog, entry(catalog, asOf), name, asOf))))
   }
 }

@@ -328,15 +328,20 @@ object TxnTable {
     val base = checkpointFiles(table)
       .filter(checkpointVersion(_) <= version).lastOption
     val baseVersion = base.map(checkpointVersion).getOrElse(0)
+    // a checkpoint removes nothing, so it folds as the first entry
+    replayLog(base.toSeq ++ logFiles(table)
+      .filter(f => versionOf(f) > baseVersion && versionOf(f) <= version))
+  }
+
+  /** The live set `entries` compose, folded in order: each entry's
+    * removals leave, then its additions join, keeping log order. */
+  private[sources] def replayLog(entries: Seq[File]): Seq[String] = {
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    base.foreach(f => live ++= parseEntry(f)._1)
-    logFiles(table)
-      .filter(f => versionOf(f) > baseVersion && versionOf(f) <= version)
-      .foreach { f =>
-        val (added, removed) = parseEntry(f)
-        live --= removed
-        live ++= added
-      }
+    entries.foreach { f =>
+      val (added, removed) = parseEntry(f)
+      live --= removed
+      live ++= added
+    }
     live.toSeq
   }
 
@@ -733,6 +738,18 @@ object TxnTable {
 
   private def replicaFile(dst: String) = new File(dst, "_graft_replica.json")
 
+  /** A replica or promoted marker (table or catalog) as read back: its
+    * `src` path ("" when absent) and its integer fields. A missing field
+    * fails as "malformed <kind> marker in <dir>: missing <k>". */
+  private[sources] final class Marker(f: File, kind: String, dir: String) {
+    val text = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
+    val src: String = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(text)
+      .map(_.group(1)).getOrElse("")
+    def int(k: String): Int = s""""$k":(-?\\d+)""".r.findFirstMatchIn(text)
+      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
+        s"malformed $kind marker in $dir: missing $k"))
+  }
+
   /** CROSS-SITE REPLICATION — mirror `src` into `dst` with O(Δ) work per
     * sync, the lakehouse DR/locality story (Delta deep clone + AS OF
     * incremental re-sync, done honestly on the log):
@@ -831,21 +848,16 @@ object TxnTable {
       seedPublish(srcHead)
       (1, copied)
     } else {
-      val m = new String(Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8)
-      val recordedSrc = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(m)
-        .map(_.group(1)).getOrElse("")
-      require(recordedSrc == srcAbs,
-        s"$dst replicates $recordedSrc, refusing to sync from $srcAbs")
-      def field(k: String): Int = s""""$k":(-?\\d+)""".r.findFirstMatchIn(m)
-        .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-          s"malformed replica marker in $dst: missing $k"))
-      val seed = field("seedSrcVersion")
-      val synced = field("syncedSrcVersion")
+      val m = new Marker(marker, "replica", dst)
+      require(m.src == srcAbs,
+        s"$dst replicates ${m.src}, refusing to sync from $srcAbs")
+      val seed = m.int("seedSrcVersion")
+      val synced = m.int("syncedSrcVersion")
       // an ADOPTED replica (a demoted old primary, [[demoteToReplica]])
       // carries its own full history: v1 is its original genesis, not a
       // seed entry, and version 0 is impossible — the seed-recovery and
       // v1-tag checks below only apply to seeded replicas
-      val adopted = m.contains("\"adopted\":true")
+      val adopted = m.text.contains("\"adopted\":true")
       if (currentVersion(dst) == 0) {
         require(!adopted, s"adopted replica $dst has an empty log — corrupt")
         seedPublish(seed) // seed-crash recovery
@@ -949,19 +961,14 @@ object TxnTable {
     val pm = promotedFile(newPrimary)
     require(pm.isFile,
       s"$newPrimary was never promoted from a replica — cannot demote $oldSrc under it")
-    val m = new String(Files.readAllBytes(pm.toPath), StandardCharsets.UTF_8)
-    val rec = "\"src\":\"([^\"]+)\"".r.findFirstMatchIn(m)
-      .map(_.group(1)).getOrElse("")
+    val m = new Marker(pm, "promoted", newPrimary)
     val oldAbs = new File(oldSrc).getAbsolutePath
-    require(rec == oldAbs,
-      s"$newPrimary was promoted from a replica of $rec, not of $oldAbs")
+    require(m.src == oldAbs,
+      s"$newPrimary was promoted from a replica of ${m.src}, not of $oldAbs")
     require(!replicaFile(oldSrc).isFile,
       s"$oldSrc is already a replica — demoting it again is a state error")
-    def field(k: String): Int = s""""$k":(-?\\d+)""".r.findFirstMatchIn(m)
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"malformed promoted marker in $newPrimary: missing $k"))
-    val seed = field("seedSrcVersion")
-    val synced = field("syncedSrcVersion")
+    val seed = m.int("seedSrcVersion")
+    val synced = m.int("syncedSrcVersion")
     val head = currentVersion(oldSrc)
     require(head >= synced,
       s"$oldSrc is at v$head but the promoted replica synced v$synced — " +
@@ -1481,15 +1488,20 @@ object TxnTable {
     val keep = logFiles(table).map(versionOf).filter(_ >= retainFrom)
       .flatMap(v => liveFiles(table, Some(v))).toSet ++
       liveFiles(table, None).toSet
-    val doomed = Seq("data", "dv").flatMap { cls =>
+    (keep, unreferenced(table, keep))
+  }
+
+  /** Every `part-` parquet file under `table`'s `data` and `dv` commit
+    * dirs whose table-relative path `keep` does not name — what both
+    * vacuums delete. */
+  private[sources] def unreferenced(table: String, keep: Set[String]): Seq[File] =
+    Seq("data", "dv").flatMap { cls =>
       Option(new File(table, cls).listFiles()).getOrElse(Array.empty)
         .filter(_.isDirectory)
         .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
         .filter(f => f.isFile && f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         .filter(f => !keep.contains(s"$cls/${f.getParentFile.getName}/${f.getName}"))
     }
-    (keep, doomed)
-  }
 
   /** Delete the dead tmps of crashed writers (torn log entries and
     * sidecars, cut-short replica copies): invisible to readers, but they

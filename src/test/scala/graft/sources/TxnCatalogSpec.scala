@@ -43,8 +43,8 @@ class TxnCatalogSpec extends SparkSpec {
     assert(ids(c, "ord") == Set(20L))
     // append lineage grows; an overwrite TRUNCATES it to one version
     // (its removal list covers everything visible), bounding entry size
-    assert(TxnCatalog.versionLists(c, None)("cust").size == 3)
-    assert(TxnCatalog.versionLists(c, None)("ord").size == 1)
+    assert(TxnCatalog.entry(c, None).versions("cust").size == 3)
+    assert(TxnCatalog.entry(c, None).versions("ord").size == 1)
     assert(ids(c, "cust", Some(1)) == Set(1L, 2L))
     assert(ids(c, "ord", Some(1)) == Set(10L))
     assert(ids(c, "cust", Some(2)) == Set(1L, 2L, 3L))
@@ -307,7 +307,7 @@ class TxnCatalogSpec extends SparkSpec {
     TxnCatalog.renameColumn(spark, c, "t", "amount", "pennies")
     assert(TxnCatalog.read(spark, c, "t").columns.contains("pennies"))
     TxnCatalog.renameColumn(spark, c, "t", "pennies", "val")
-    assert(TxnCatalog.colMap(c, None).getOrElse("t", Map.empty).isEmpty)
+    assert(TxnCatalog.entry(c, None).colmap.getOrElse("t", Map.empty).isEmpty)
     // invalid renames fail loudly
     intercept[IllegalArgumentException] {
       TxnCatalog.renameColumn(spark, c, "t", "nope", "x")
@@ -466,5 +466,111 @@ class TxnCatalogSpec extends SparkSpec {
     assert(reads() == readsBefore)
     assert(TxnCatalog.currentTxn(c) == 2)
     assert(TxnCatalog.tableVersions(c) == versionsBefore)
+  }
+
+  /** Every regular file under `c`, as paths relative to it. */
+  private def treeFiles(c: String): Set[String] = {
+    val root = new File(c).toPath
+    val walk = java.nio.file.Files.walk(root)
+    try walk.filter(p => java.nio.file.Files.isRegularFile(p)).toArray
+      .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).toSet
+    finally walk.close()
+  }
+
+  test("vacuum deletes the deletion vector of a delete that lost its catalog publish") {
+    val c = freshCatalog("vacuum_dv")
+    TxnCatalog.commitAll(spark, c, Seq(Write("t", (1L to 10L).toDF("id"))))
+    TxnCatalog.commitAll(spark, c, Seq(Write("t", Seq(11L, 12L).toDF("id"))))
+    def reads() = Seq(Some(1), Some(2), None).map(t => ids(c, "t", t))
+    val readsBefore = reads()
+    // built on t1's snapshot, the delete stages its vector as a table
+    // version, then loses the catalog publish to the existing t2
+    intercept[java.util.ConcurrentModificationException] {
+      TxnCatalog.deleteWhereMor(spark, c, "t", $"id" % 2 === 0L,
+        expectedTxn = Some(2))
+    }
+    val staged = treeFiles(c)
+    val orphanDv = staged.filter(f =>
+      f.startsWith("tables/t/dv/") && f.matches(".*/part-[^/]*\\.parquet"))
+    assert(orphanDv.size == 1, s"one orphan vector file: $staged")
+    assert(reads() == readsBefore, "the lost delete is invisible")
+
+    assert(TxnCatalog.vacuum(c) == 1)
+    assert(treeFiles(c) == staged -- orphanDv, "only the orphan vector goes")
+    assert(reads() == readsBefore)
+    assert(TxnCatalog.currentTxn(c) == 2)
+  }
+
+  // Captured from the parent format's writer: replicas byte-compare
+  // entries, so the codec must reproduce these bytes exactly.
+  private val goldenPlain =
+    """{"txn":1,"tables":{"a":1,"b":1},"versions":{"a":[1],"b":[1]}}"""
+  private val goldenFull =
+    """{"txn":5,"tables":{"a":2,"b":1},"versions":{"a":[1,2],"b":[1]},""" +
+      """"colmap":{"a|val":"amount","b|w":"weight"},"coldrop":{"a|extra":1},""" +
+      """"tag":"golden"}"""
+
+  test("Entry: golden entries parse and serialize back to the same bytes") {
+    import TxnCatalog.Entry
+    for (g <- Seq(goldenPlain, goldenFull)) assert(Entry.parse(g).json == g)
+    assert(Entry.parse(goldenPlain) ==
+      Entry(1, Map("a" -> 1, "b" -> 1), Map("a" -> Seq(1), "b" -> Seq(1))))
+    assert(Entry.parse(goldenFull) == Entry(5, Map("a" -> 2, "b" -> 1),
+      Map("a" -> Seq(1, 2), "b" -> Seq(1)),
+      Map("a" -> Map("val" -> "amount"), "b" -> Map("w" -> "weight")),
+      Map("a" -> Set("extra")), Some("golden")))
+    // empty per-table maps serialize like absent ones
+    assert(Entry.parse(goldenPlain).copy(colmap = Map("a" -> Map.empty),
+      drops = Map("b" -> Set.empty)).json == goldenPlain)
+    intercept[IllegalArgumentException](Entry.parse("""{"txn":1,"tables":{}}"""))
+
+    // the operations that wrote the golden entries still write them
+    val c = freshCatalog("golden")
+    TxnCatalog.commitAll(spark, c, Seq(
+      Write("a", Seq((1L, 10L, 7L)).toDF("id", "val", "extra")),
+      Write("b", Seq((1L, 2L)).toDF("id", "w"))))
+    TxnCatalog.commitAll(spark, c, Seq(
+      Write("a", Seq((2L, 20L, 8L)).toDF("id", "val", "extra"))))
+    TxnCatalog.renameColumn(spark, c, "a", "val", "amount")
+    TxnCatalog.renameColumn(spark, c, "b", "w", "weight")
+    TxnCatalog.dropColumn(spark, c, "a", "extra", tag = Some("golden"))
+    def bytes(t: Int) = FileUtils.readFileToString(
+      new File(c, f"_graft_txn/t$t%05d.json"), java.nio.charset.StandardCharsets.UTF_8)
+    assert(bytes(1) == goldenPlain)
+    assert(bytes(5) == goldenFull)
+  }
+
+  test("Entry.overlay takes a table's whole state from the other entry") {
+    import TxnCatalog.Entry
+    val main = Entry(4, Map("a" -> 2, "b" -> 1), Map("a" -> Seq(1, 2), "b" -> Seq(1)),
+      Map("a" -> Map("v" -> "w")), Map("b" -> Set("z")), Some("m"))
+    val branch = Entry(6, Map("a" -> 3, "c" -> 1), Map("a" -> Seq(3), "c" -> Seq(1)))
+    assert(branch.changedFrom(main) == Set("a", "b", "c"))
+    assert(main.changedFrom(main).isEmpty)
+    assert(main.overlay(branch, Set("a", "c")) == Entry(4,
+      Map("a" -> 3, "b" -> 1, "c" -> 1), Map("a" -> Seq(3), "b" -> Seq(1), "c" -> Seq(1)),
+      Map.empty, Map("b" -> Set("z")), Some("m")))
+  }
+
+  test("a read racing restores sees one entry's lineage and column map together") {
+    val c = freshCatalog("torn_read")
+    TxnCatalog.commitAll(spark, c, Seq(Write("t", Seq(1L).toDF("a"))))   // t1: a {1}
+    TxnCatalog.commitAll(spark, c, Seq(Write("t", Seq(2L).toDF("a"))))   // t2: a {1, 2}
+    TxnCatalog.renameColumn(spark, c, "t", "a", "x")                     // t3: x {1, 2}
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() => {
+      var i = 0
+      while (!done.get && i < 4000) {
+        TxnCatalog.restore(c, if (i % 2 == 0) 1 else 3)
+        i += 1
+      }
+    })
+    writer.start()
+    val seen = try (1 to 60).map { _ =>
+      val df = TxnCatalog.read(spark, c, "t")
+      (df.columns.toSeq, df.as[Long].collect().toSet)
+    } finally { done.set(true); writer.join() }
+    val valid = Set((Seq("a"), Set(1L)), (Seq("x"), Set(1L, 2L)))
+    assert(seen.filterNot(valid).isEmpty, s"torn reads: ${seen.filterNot(valid).distinct}")
   }
 }
