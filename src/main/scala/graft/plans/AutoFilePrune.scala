@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import org.apache.spark.sql.types._
 
 import graft.Trace
-import graft.sources.{MetaStore, TxnStats, TxnTable}
+import graft.sources.{MetaStore, SchemaCache, TxnStats, TxnTable}
 
 /** AUTO-INJECTED dynamic file pruning, the engine's one join-driven
   * file prune: a user writing the PLAIN star shape
@@ -326,9 +326,11 @@ object AutoFilePrune extends Rule[LogicalPlan] with PredicateHelper {
     // all-skippable still reads one (skipped ⇒ provably unjoinable ⇒
     // the join drops its rows): the scan keeps its schema and the
     // plan shape stays a plain parquet read
-    val pick = if (keep.nonEmpty) keep else scanFiles.take(1)
-    val paths = pick.map(f => new org.apache.hadoop.fs.Path(f))
-    val newIndex = new InMemoryFileIndex(fsRel.sparkSession, paths,
+    val pick = (if (keep.nonEmpty) keep else scanFiles.take(1)).toSet
+    // the scan's own statuses: the narrowed index stats nothing again
+    val newIndex = SchemaCache.fileIndex(fsRel.sparkSession,
+      fsRel.location.asInstanceOf[InMemoryFileIndex].allFiles()
+        .filter(f => pick.contains(f.getPath.toUri.toString)),
       fsRel.options, Some(fsRel.dataSchema))
     val newRel = fsRel.copy(location = newIndex)(fsRel.sparkSession)
     val newScan = scan.copy(relation = newRel)

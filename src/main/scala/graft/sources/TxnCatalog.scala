@@ -1041,8 +1041,9 @@ object TxnCatalog {
     * in any entry's lineage keeps all the files its log entry added
     * (even files a later overwrite removed — an older entry still
     * replays them). Dead tmps of crashed writers in `_graft_txn` and in
-    * each table ([[TxnTable.sweepTmps]]) go too. Returns the deleted
-    * data and vector file count. */
+    * each table, and the commit dirs left empty, go too
+    * ([[TxnTable.purge]]). Returns the deleted data and vector file
+    * count. */
   def vacuum(catalog: String): Int = Trace.span("sources.vacuum") {
     val keepByTable: Map[String, Set[Int]] = entries(catalog)
       .flatMap(_.versions).groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
@@ -1056,10 +1057,7 @@ object TxnCatalog {
           .filter(f => keepVersions.contains(TxnTable.versionOf(f)))
           .flatMap(f => TxnTable.parseEntry(f)._1).toSet
         val doomed = TxnTable.unreferenced(td.getPath, keepFiles)
-        // fan the deletes out like the replication copies: order-free,
-        // idempotent, and driver-serial would be the 100 TB wall
-        ParallelCopy.mapPar(doomed.toSeq)(_.delete())
-        TxnTable.sweepTmps(td.getPath)
+        TxnTable.purge(td.getPath, doomed)
         doomed.length
       }.sum
   }

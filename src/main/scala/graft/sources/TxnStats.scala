@@ -51,8 +51,7 @@ object TxnStats {
   /** The parquet parts of a column's stats dir, sorted. Empty for a
     * dir carrying only its watermark (every file so far DECLINED footer
     * indexing, e.g. an INT96-timestamp table): that reads as "nothing
-    * indexed", not a crash of `spark.read.parquet` on a parquet-less
-    * dir. */
+    * indexed", not a read of an empty file list. */
   private def statsParts(sd: File): Seq[String] =
     Option(sd.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -114,8 +113,8 @@ object TxnStats {
 
   /** The column's stats sidecar as a DRIVER-LOCAL frame, memoized in
     * [[MetaStore]] on (table, column, the sidecar's part-file names).
-    * Two costs disappear versus `spark.read.parquet(sidecarDir)`: the
-    * footer/schema-inference JOB and the collect JOB — a
+    * Two costs disappear versus re-reading the sidecar's parts on every
+    * call: the path resolution and the collect JOB — a
     * LocalRelation's select/filter/collect run entirely on the driver
     * (ConvertToLocalRelation), zero scheduling. The sidecar holds
     * |files| rows of driver metadata, read by every pruned scan, every
@@ -132,7 +131,7 @@ object TxnStats {
     if (parts.isEmpty) return None
     val (schema, rows) = MetaStore.memo[(StructType, Seq[Row])]("meta.stats",
         (sd.getAbsolutePath, parts))(_._2.size.toLong) {
-      val df = spark.read.parquet(parts.map(new File(sd, _).getPath): _*)
+      val df = SchemaCache.read(spark, parts.map(new File(sd, _).getPath))
       (df.schema, df.collect().toSeq)
     }
     Some(spark.createDataFrame(new java.util.ArrayList[Row](
@@ -169,7 +168,7 @@ object TxnStats {
     val newRel = addedInRange(table, wm, current)
     if (newRel.nonEmpty) {
       val abs = newRel.map(p => new File(table, p).getPath)
-      val src = spark.read.parquet(abs: _*)
+      val src = SchemaCache.read(spark, abs)
       val dt = src.schema(column).dataType
       require(supported(dt),
         s"stats column '$column' must be an exactly-ordered type " +
@@ -259,6 +258,17 @@ object TxnStats {
     Overlap.map(Some(spark), columns.distinct, 4, "sidecar refresh")(one)
   }
 
+  /** The one Hadoop `Configuration` of the driver's footer reads and
+    * file stats. A new one per call parsed Hadoop's default XML again
+    * on its first read — milliseconds per footer, paid for every file a
+    * commit adds. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The local file system as Spark resolves `file:` paths: its
+    * qualification and block size are what Spark's listing reports. */
+  private[sources] lazy val localFs =
+    org.apache.hadoop.fs.FileSystem.getLocal(hadoopConf)
+
   /** Parsed parquet FOOTERS, memoized in [[MetaStore]] per absolute
     * path: a clustered optimize refreshes one sidecar per clustering
     * column, and each single-column refresh re-opened and re-parsed the
@@ -273,8 +283,7 @@ object TxnStats {
         "meta.footer", f.getAbsolutePath)(md =>
       md.getBlocks.stream.mapToLong(_.getColumns.size.toLong).sum) {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toURI),
-        new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(f.toURI), hadoopConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getFooter finally r.close()
     }
@@ -493,7 +502,7 @@ object TxnStats {
       // refute a truly-unique composite key (advisor
       // not_unique_in_data on null-bearing keys).
       val hashIn = cols.sorted.flatMap(c => Seq(col(c), col(c).isNull))
-      val rows = spark.read.parquet(abs: _*)
+      val rows = SchemaCache.read(spark, abs)
         .groupBy(input_file_name().as("file"))
         .agg(hll_sketch_agg(xxhash64(hashIn: _*)).as("sketch"),
           count(lit(1)).as("n_rows"))
@@ -515,7 +524,7 @@ object TxnStats {
     val (ndv, complete) =
       if (!hasSketches) (0L, live.isEmpty)
       else {
-        val sketches = spark.read.parquet(dir.getPath)
+        val sketches = SchemaCache.readDir(spark, dir.getPath)
           .filter(col("file").isin(live.toSeq: _*))
         val indexedLive = sketches.select("file").distinct()
           .collect().map(_.getString(0)).toSet

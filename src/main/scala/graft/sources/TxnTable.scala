@@ -1295,8 +1295,8 @@ object TxnTable {
         // vector addresses (prior vectors already applied, so a stacked
         // delete feeds only the NEWLY deleted rows)
         if (added.nonEmpty && added.forall(_.startsWith("dv/")) && removed.isEmpty) {
-          val dv = spark.read
-            .parquet(added.map(p => new File(table, p).getPath): _*)
+          val dv = SchemaCache
+            .read(spark, added.map(p => new File(table, p).getPath))
             .select(col("file_path").as("__fp"), col("row_index").as("__ri"))
           val pre = fileListWithAddress(spark, table,
               liveBefore.toSeq.sorted)
@@ -1462,17 +1462,15 @@ object TxnTable {
     val (dataFiles, dvFiles) = files.partition(!_.startsWith("dv/"))
     require(dataFiles.nonEmpty, s"no live data files for $table")
     val prefixLen = fileUriPrefix(table).length
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-    val base = reader
-      .parquet(dataFiles.map(f => new File(table, f).getPath): _*)
+    val base = SchemaCache
+      .read(spark, dataFiles.map(f => new File(table, f).getPath), mergeSchema)
       .select(col("*"),
         expr(s"substring(_metadata.file_path, ${prefixLen + 1})").as("__fp"),
         col("_metadata.row_index").as("__ri"))
     if (dvFiles.isEmpty) base
     else {
-      val dv = spark.read
-        .parquet(dvFiles.map(f => new File(table, f).getPath): _*)
+      val dv = SchemaCache
+        .read(spark, dvFiles.map(f => new File(table, f).getPath))
         .select(col("file_path").as("__fp"), col("row_index").as("__ri"))
       base.join(dv, Seq("__fp", "__ri"), "left_anti")
     }
@@ -1495,41 +1493,58 @@ object TxnTable {
     * dirs whose table-relative path `keep` does not name — what both
     * vacuums delete. */
   private[sources] def unreferenced(table: String, keep: Set[String]): Seq[File] =
-    Seq("data", "dv").flatMap { cls =>
-      Option(new File(table, cls).listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory)
-        .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-        .filter(f => f.isFile && f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .filter(f => !keep.contains(s"$cls/${f.getParentFile.getName}/${f.getName}"))
-    }
+    commitDirs(table)
+      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+      .filter(f => f.isFile && f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .filter(f => !keep.contains(
+        s"${f.getParentFile.getParentFile.getName}/${f.getParentFile.getName}/${f.getName}"))
+
+  /** Every commit dir under `table`'s `data` and `dv` dirs. */
+  private def commitDirs(table: String): Seq[File] =
+    Seq("data", "dv").flatMap(cls =>
+      Option(new File(table, cls).listFiles()).getOrElse(Array.empty[File])
+        .filter(_.isDirectory))
 
   /** Delete the dead tmps of crashed writers (torn log entries and
     * sidecars, cut-short replica copies): invisible to readers, but they
     * would otherwise accumulate. Not part of [[reclaimable]], so the
     * vacuum advice counts only data files. */
-  private[sources] def sweepTmps(table: String): Unit =
-    (logDir(table) +: Seq("data", "dv").flatMap(cls =>
-      Option(new File(table, cls).listFiles()).getOrElse(Array.empty[File])
-        .filter(_.isDirectory))).foreach(AtomicFile.deleteTmps)
+  private def sweepTmps(table: String): Unit =
+    (logDir(table) +: commitDirs(table)).foreach(AtomicFile.deleteTmps)
 
-  /** Physically delete data files no snapshot >= `retainFrom` references.
-    * This is the step that gives up time travel before `retainFrom` in
-    * exchange for space — exactly Delta's VACUUM trade. Orphans from
-    * crashed commits (data dir without a log entry) and dead tmps
-    * ([[sweepTmps]]) die here too. Returns the deleted data-file count. */
-  def vacuum(table: String, retainFrom: Int): Int = Trace.span("sources.vacuum") {
-    val (_, doomed) = reclaimable(table, retainFrom)
+  /** The delete step of both vacuums: each `doomed` part file with its
+    * `.crc`, the dead tmps ([[sweepTmps]]), then every commit dir left
+    * holding nothing but its `_SUCCESS` marker (a dir with `_temporary`,
+    * a write in flight, holds more and stays). */
+  private[sources] def purge(table: String, doomed: Seq[File]): Unit = {
     // deletes are order-free and idempotent (a missing file deletes to
     // false, never throws) — fan them out like the replication copies:
     // at 100 TB file counts a driver-serial delete loop is the same
     // wall the serial copy was
-    ParallelCopy.mapPar(doomed.toSeq)(_.delete())
+    ParallelCopy.mapPar(doomed) { f =>
+      f.delete()
+      new File(f.getParentFile, s".${f.getName}.crc").delete()
+    }
     sweepTmps(table)
-    val dataRoot = new File(table, "data")
-    // drop now-empty commit dirs so the layout stays readable at a glance
-    Option(dataRoot.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && Option(d.listFiles()).getOrElse(Array.empty).isEmpty)
-      .foreach(_.delete())
+    val markers = Set("_SUCCESS", "._SUCCESS.crc")
+    commitDirs(table).foreach { d =>
+      val names = Option(d.list()).getOrElse(Array.empty[String])
+      if (names.forall(markers)) {
+        names.foreach(n => new File(d, n).delete())
+        d.delete()
+      }
+    }
+  }
+
+  /** Physically delete data files no snapshot >= `retainFrom` references.
+    * This is the step that gives up time travel before `retainFrom` in
+    * exchange for space — exactly Delta's VACUUM trade. Orphans from
+    * crashed commits (data dir without a log entry), dead tmps and
+    * emptied commit dirs ([[purge]]) die here too. Returns the deleted
+    * data-file count. */
+  def vacuum(table: String, retainFrom: Int): Int = Trace.span("sources.vacuum") {
+    val (_, doomed) = reclaimable(table, retainFrom)
+    purge(table, doomed)
     doomed.length
   }
 }

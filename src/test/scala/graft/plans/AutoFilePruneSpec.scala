@@ -408,6 +408,25 @@ class AutoFilePruneSpec extends SparkSpec {
         "AutoFilePrune.onStreamThread's property check")
   }
 
+  test("a star keeping 32+ of 40 files plans with no job but the dim's") {
+    val wideT = s"$root/wide"
+    // 40 files of 100 contiguous keys each
+    TxnTable.commit(spark, spark.range(0, 4000, 1, 40).select(col("id").as("k")),
+      wideT, overwrite = false)
+    TxnStats.refresh(spark, wideT, "k")
+    assert(TxnTable.liveFiles(wideT).size == 40)
+    // one key in each of the 35 lowest files: the top 5 provably skip
+    val keys = (0 until 35).map(i => i * 100L + 5L).toDF("dk")
+    val q = TxnTable.read(spark, wideT).join(keys, col("k") === col("dk"))
+    val (_, r) = Trace.record(spark)(q.queryExecution.optimizedPlan)
+    assert(r.count("dfp.pruned") == 1, r.tree)
+    // the narrowed index reuses the scan's statuses: no listing job
+    assert(r.rows.filter(_.jobs > 0)
+      .forall(_.path.split('/').contains("plans.dfp")), r.tree)
+    assert(filesScanned(q, wideT) == 35)
+    assert(q.count() == 35)
+  }
+
   test("range regime: key count past maxExactKeys still range-prunes") {
     spark.conf.set("spark.graft.autoDfp.maxExactKeys", "2")
     try {

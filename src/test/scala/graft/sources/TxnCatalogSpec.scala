@@ -495,8 +495,14 @@ class TxnCatalogSpec extends SparkSpec {
     assert(orphanDv.size == 1, s"one orphan vector file: $staged")
     assert(reads() == readsBefore, "the lost delete is invisible")
 
+    // the vector's commit dir (its .crc and _SUCCESS markers with it)
+    val orphanDir = orphanDv.head.split('/').take(4).mkString("/")
+    assert(orphanDir.matches("tables/t/dv/v00003-[^/]*"), orphanDir)
+
     assert(TxnCatalog.vacuum(c) == 1)
-    assert(treeFiles(c) == staged -- orphanDv, "only the orphan vector goes")
+    assert(!new File(c, orphanDir).exists, s"$orphanDir must go whole")
+    assert(treeFiles(c) == staged.filterNot(_.startsWith(orphanDir + "/")),
+      "only the orphan vector's commit dir goes")
     assert(reads() == readsBefore)
     assert(TxnCatalog.currentTxn(c) == 2)
   }
